@@ -21,6 +21,8 @@ from decimal import Decimal
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from decisions_kinesis_spark.functions.parallel import materialize
+
 
 def range_prefix(
     df: DataFrame,
@@ -40,10 +42,9 @@ def range_prefix(
     outgrow bigint long before per-row values do).  ``total_sum`` is
     0 when no ``sum_col`` is requested.
     """
-    part = (
+    part = materialize(
         df.repartitionByRange(n_parts, *order_cols)
         .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
     )
     aggs = [F.count("*").alias("c")]
     if sum_col is not None:

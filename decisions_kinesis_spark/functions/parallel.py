@@ -1,4 +1,12 @@
-"""Parallelism guard for compute-heavy per-row operators.
+"""Driver-side parallelism: the materialization seam, the driver pool,
+and partition-count guards for compute-heavy operators.
+
+``materialize`` / ``materialize_many`` (and, where a join needs the
+stored frame's partitioning, ``cached``) are the only way package code
+stores an intermediate read by several consumers, and
+``_run_concurrently`` is the only driver thread pool (shared with
+``stage_cache.build_many``); tests/test_stage_cache.py fails on any
+direct ``localCheckpoint`` / ``cache`` / pool elsewhere.
 
 A small parquet file arrives as one input partition; an operator doing
 real per-row work (md5 per char position, per-pair popcounts) would
@@ -9,7 +17,12 @@ inputs it trades one tiny shuffle for full-cluster compute.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from collections.abc import Callable, Iterator, Sequence
+from concurrent.futures import ThreadPoolExecutor
+from contextlib import contextmanager
+
+from pyspark import inheritable_thread_target
+from pyspark.sql import DataFrame, SparkSession
 
 
 def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
@@ -20,30 +33,68 @@ def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> Data
     return df
 
 
-def checkpoint_parallel(*dfs: DataFrame) -> list[DataFrame]:
-    """Eagerly localCheckpoint several INDEPENDENT frames with their
-    jobs overlapped (guide §2.6): one frame's straggler tail back-fills
-    with the next frame's tasks instead of serializing whole jobs.
-    Values are identical to sequential checkpoints — only job overlap
-    changes.  Callers must pass frames with no data dependency on each
-    other."""
-    from concurrent.futures import ThreadPoolExecutor
+#: width of the one driver pool that overlaps independent Spark jobs.
+#: 6 (r14): at 4, the 5-gate funnel and the 8-tail recall composition
+#: serialized their overflow specs behind the pool — measured
+#: interleaved ×4, corpus_funnel_report best 3.30 → 3.03 s.  A handful
+#: of in-flight jobs is plenty; more just fight for executor slots.
+_POOL_WIDTH = 6
 
-    from pyspark import inheritable_thread_target
 
-    if not dfs:
-        return []
-    if len(dfs) == 1:
-        return [dfs[0].localCheckpoint(eager=True)]
-    wrap = inheritable_thread_target(dfs[0].sparkSession)
+def materialize(df: DataFrame) -> DataFrame:
+    """Eagerly materialize ``df`` once so every later read scans the
+    stored rows instead of replaying its plan — the one place that
+    decides HOW (local checkpoint: executor block storage, lineage
+    truncated).  Runs one Spark job now; blocks are freed by the
+    ContextCleaner once the frame's refs drop."""
+    return df.localCheckpoint(eager=True)
+
+
+@contextmanager
+def cached(df: DataFrame) -> Iterator[DataFrame]:
+    """Yield ``df`` cached (filled by its first action) and unpersist it
+    when the block exits, error or not.  Use it instead of
+    ``materialize`` only where a consumer relies on the frame's output
+    partitioning: a checkpoint taken under AQE plans as
+    UnknownPartitioning (the adaptive root exposes none), so a keyed
+    join on it re-shuffles the frame every time, while AQE reads a
+    cached stage's actual partitioning and plans no exchange."""
+    df = df.cache()
+    try:
+        yield df
+    finally:
+        df.unpersist()
+
+
+def _run_concurrently(
+    spark: SparkSession, thunks: Sequence[Callable[[], object]]
+) -> list:
+    """Run independent thunks on one small driver pool (guide §2.6 —
+    overlap independent jobs: one job's straggler tail back-fills with
+    the next job's tasks instead of serializing whole jobs).  Results
+    come back in input order; the first thunk error (in input order)
+    is raised verbatim.  Threads inherit the caller's job tags/local
+    properties."""
+    if len(thunks) <= 1:
+        return [t() for t in thunks]
+    wrap = inheritable_thread_target(spark)
     if not callable(wrap):  # classic mode (PYSPARK_PIN_THREAD=false):
         wrap = lambda f: f  # the session form returns the session itself
-    with ThreadPoolExecutor(max_workers=min(len(dfs), 4)) as pool:
-        futures = [
-            pool.submit(wrap(lambda d=d: d.localCheckpoint(eager=True)))
-            for d in dfs
-        ]
+    with ThreadPoolExecutor(max_workers=min(len(thunks), _POOL_WIDTH)) as pool:
+        futures = [pool.submit(wrap(t)) for t in thunks]
         return [f.result() for f in futures]
+
+
+def materialize_many(*dfs: DataFrame) -> list[DataFrame]:
+    """``materialize`` several INDEPENDENT frames with their jobs
+    overlapped.  Values are identical to sequential materialization —
+    only job overlap changes.  Callers must pass frames with no data
+    dependency on each other."""
+    if not dfs:
+        return []
+    return _run_concurrently(
+        dfs[0].sparkSession, [lambda d=d: materialize(d) for d in dfs]
+    )
 
 
 def repartition_for_python(df: DataFrame, *cols: str) -> DataFrame:

@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from decisions_kinesis_spark.functions.ordering import range_prefix
+from decisions_kinesis_spark.functions.parallel import materialize
 from decisions_kinesis_spark.operators.corpus import _NOVELTY_BUCKET
 from decisions_kinesis_spark.operators.textops import _BIGHASH, _DUCK_BIGHASH
 from decisions_kinesis_spark.functions.rounding import fl4
@@ -1848,7 +1849,7 @@ def events_theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     # an hour whose every value is NULL (sdec NULL → mean NULL) is
     # SKIPPED before ranking, the events_holt_linear contract — ranks
     # re-close over the surviving buckets on both engine sides
-    pts = (
+    pts = materialize(
         hourly.select(
             "event_type",
             "b",
@@ -1868,7 +1869,6 @@ def events_theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         # only data-proportional stage (the raw-scan hourly reduce).
         # Materialize the calendar-bounded series once (guide §2.4);
         # one scan instead of four.
-        .localCheckpoint(eager=True)
     )
     p1, p2 = pts.alias("p1"), pts.alias("p2")
     pairs = p1.join(
@@ -2098,10 +2098,9 @@ def _hourly_centered(
     # downstream is calendar × taxonomy sized).  The rollup is pinned
     # (|taxonomy × calendar|-bounded — the LSH-shingle materialization
     # class, SCALE.md) because three consumers read it.
-    counts = (
+    counts = materialize(
         ev.groupBy("event_type", "b")
         .agg(F.count("*").alias("c"))
-        .localCheckpoint(eager=True)
     )
     span = counts.agg(F.min("b").alias("b0"), F.max("b").alias("b1"))
     type_axis = (

@@ -28,11 +28,13 @@ extension set (SURVEY.md §7), not to reference coverage.
 
 from __future__ import annotations
 
-from functools import reduce
+from collections.abc import Callable
+from functools import cache, partial, reduce
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from decisions_kinesis_spark.functions.parallel import materialize
 from decisions_kinesis_spark.sources.tables import load_table
 
 _KQ = 10_000  # scan-side quantization scale
@@ -80,13 +82,15 @@ _KM_LOOP_CACHE: dict = {}
 
 def _kmeans_loop(
     spark: SparkSession, sf_dir: str
-) -> tuple[list[DataFrame], DataFrame, DataFrame, DataFrame]:
+) -> tuple[list[DataFrame], DataFrame, Callable[[], DataFrame], DataFrame]:
     """Run the fixed-budget Lloyd loop once per (session, sf_dir) —
     memoized, see _KM_LOOP_CACHE; return the per-iteration
     stats frames, the FINAL assignment (the iteration-``_KM_ITERS``
-    argmin, i.e. membership under the last pre-update centroids), the
-    FINAL (post-update) centroid frame, and the checkpointed quantized
-    vectors.
+    argmin, i.e. membership under the last pre-update centroids), a
+    memoized thunk returning the MATERIALIZED final (post-update)
+    centroid frame (materialized on first call, so a consumer that
+    reads it more than once pays the update aggregation once per slot,
+    not per call), and the checkpointed quantized vectors.
 
     Per iteration: (1) ASSIGN — broadcast the ≤K centroid arrays
     against the corpus, distance = exact Σ(q−c)² via zip_with +
@@ -119,7 +123,7 @@ def _kmeans_loop(
     hit = _KM_LOOP_CACHE.get(key)
     if hit is not None:
         return hit
-    vecs = _quantized_vectors(spark, sf_dir).localCheckpoint(eager=True)
+    vecs = materialize(_quantized_vectors(spark, sf_dir))
     # seed centroids stay lazy too: a K-row filter off the checkpointed
     # vectors, consumed once by round 1's broadcast
     cents = vecs.filter(F.col("vec_id") < _K).select(
@@ -138,7 +142,7 @@ def _kmeans_loop(
             "cent_id",
             F.expr(_DIST_SQL).alias("dist"),
         )
-        assign = (
+        assign = materialize(
             pairs.groupBy("vec_id")
             .agg(F.min(F.struct("dist", "cent_id")).alias("w"))
             .select(
@@ -146,7 +150,6 @@ def _kmeans_loop(
                 F.col("w.cent_id").alias("cent_id"),
                 F.col("w.dist").alias("dist"),
             )
-            .localCheckpoint(eager=True)
         )
         upd = (
             assign.join(vecs, "vec_id")
@@ -160,8 +163,8 @@ def _kmeans_loop(
         # fusion shape — one driver action per round instead of two).
         # Lineage stays bounded because it hangs off the round's
         # CHECKPOINTED assignment + vectors, never off a prior lazy
-        # round; consumers that read it more than once (ch_index)
-        # materialize their own copy.
+        # round; the FINAL frame is materialized on demand, once per
+        # loop slot, for the consumer that reads it twice (ch_index).
         cents = upd.groupBy("cent_id").agg(
             F.expr(
                 "transform(array_sort(collect_list(struct(pos0,"
@@ -188,7 +191,7 @@ def _kmeans_loop(
                 "centroid_l1",
             )
         )
-    result = (stats, assign, cents, vecs)
+    result = (stats, assign, cache(partial(materialize, cents)), vecs)
     _KM_LOOP_CACHE.clear()  # single slot: evict any other (app, sf_dir)
     _KM_LOOP_CACHE[key] = result
     return result
@@ -276,11 +279,11 @@ def embedding_kmeans_ch_index(
     Scale: W is one broadcast-K join over the checkpointed corpus
     reduced map-side; g is a d-group reduce; B is K·d-sized arithmetic.
     """
-    _stats, assign, cents, vecs = _kmeans_loop(spark, sf_dir)
+    _stats, assign, final_cents, vecs = _kmeans_loop(spark, sf_dir)
     # the final centroid frame is consumed twice below (W's broadcast
-    # join and B) — materialize THIS query's copy once (≤K rows) so the
-    # update aggregation behind it doesn't replay per consumer
-    cents = cents.localCheckpoint(eager=True)
+    # join and B) — read the loop slot's materialized copy (≤K rows) so
+    # the update aggregation behind it doesn't replay per consumer
+    cents = final_cents()
     sz = assign.groupBy("cent_id").agg(F.count("*").alias("n"))
     w = (
         assign.drop("dist")

@@ -35,8 +35,9 @@ from decisions_kinesis_spark.operators.textops import (
 )
 from decisions_kinesis_spark.functions.ordering import range_prefix
 from decisions_kinesis_spark.functions.parallel import (
-    checkpoint_parallel,
     ensure_parallelism,
+    materialize,
+    materialize_many,
 )
 from decisions_kinesis_spark.sources.tables import load_table
 
@@ -71,12 +72,11 @@ def quality_gopher_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _doc_toks(docs: DataFrame) -> DataFrame:
-    """(doc_id, toks) tokenized frame — the shared head of every gate
-    pipeline.  The funnel compositions materialize ONE instance of this
-    frame and feed it to all gates (guide §2.4: a lazy subtree replays
-    once per consumer — here the scan + regex split would otherwise run
-    once per gate); standalone gate queries build their own lazily, so
-    their plans and bench numbers are unchanged."""
+    """(doc_id, toks) tokenized frame — the common head of every gate
+    pipeline, built lazily by each gate.  No funnel shares one
+    materialized instance across gates: that was measured and rejected
+    in r14 (the shared toks build serializes ahead of the overlapped
+    gates — see quality_filter_agreement and OPTIMIZATION_r14.md)."""
     return docs.select("doc_id", F.expr(_TOKS).alias("toks"))
 
 
@@ -273,10 +273,9 @@ def lm_bigram_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     # discipline) instead of replaying scan+tokenize+explode+hash for
     # each consumer (alternating same-process A/B at sf0.1: 1.83 →
     # 1.49 s min-of-3; no ReusedExchange appears in the plain plan)
-    doc_tf = (
+    doc_tf = materialize(
         bi.groupBy("doc_id", "gb", "gu")
         .agg(F.count("*").alias("tf"))
-        .localCheckpoint(eager=True)
     )
     cnt_bi = doc_tf.groupBy("gb").agg(F.sum("tf").alias("c_bi"))
     cnt_uni = doc_tf.groupBy("gu").agg(F.sum("tf").alias("c_uni"))
@@ -354,7 +353,7 @@ def lm_interpolated_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     # same three-consumer shape as lm_bigram_score — materialize once;
     # the unigram-count and per-doc-bigram pipelines are independent,
     # so their jobs overlap (guide §2.6)
-    cnt_tok, doc_tf = checkpoint_parallel(
+    cnt_tok, doc_tf = materialize_many(
         cnt_tok_lazy,
         bi.groupBy("doc_id", "gb", "gu", "gv").agg(F.count("*").alias("tf")),
     )
@@ -440,18 +439,16 @@ def lm_kneser_ney_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(_BIGHASH.format(e="b.gu")).alias("gu"),
         F.expr(_BIGHASH.format(e="b.gv")).alias("gv"),
     )
-    doc_tf = (
+    doc_tf = materialize(
         bi.groupBy("doc_id", "gb", "gu", "gv")
         .agg(F.count("*").alias("tf"))
-        .localCheckpoint(eager=True)
     )
     # the DISTINCT-bigram type table: gb determines (gu, gv), so this
     # one vocabulary-scale frame feeds c_bi, c_uni, BOTH continuation
     # counts, and the type total
-    types = (
+    types = materialize(
         doc_tf.groupBy("gb", "gu", "gv")
         .agg(F.sum("tf").alias("c_bi"))
-        .localCheckpoint(eager=True)
     )
     pre = types.groupBy("gu").agg(
         F.sum("c_bi").alias("c_uni"),
@@ -610,7 +607,7 @@ def lm_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the full explode+join score pipeline twice (measured 2.8 → 2.1 s
     # at sf0.1, compounding with the doc_tf/cnt_tok materializations
     # inside the score pipeline itself)
-    sc = lm_interpolated_score(spark, sf_dir).localCheckpoint(eager=True)
+    sc = materialize(lm_interpolated_score(spark, sf_dir))
     bounds = sc.agg(
         F.round(
             F.expr("percentile(lm_interp_scaled, cast(1 as double)/3)"), 4
@@ -972,9 +969,9 @@ def _bpe_iter_state(spark: SparkSession, sf_dir: str):
             .groupBy("w")
             .agg(F.count("*").alias("tf"))
         )
-        syms = wt.withColumn(
-            "s", F.expr("filter(split(w, ''), x -> x != '')")
-        ).localCheckpoint(eager=True)
+        syms = materialize(
+            wt.withColumn("s", F.expr("filter(split(w, ''), x -> x != '')"))
+        )
         # Size the ROUND frames by the type count, not by the corpus
         # shuffle width: the type table is the Zipf-collapsed word
         # vocabulary (31 rows at sf0.1), and each of the 20 round jobs
@@ -1033,7 +1030,7 @@ def _bpe_iter_state(spark: SparkSession, sf_dir: str):
                 # an identity if a round ever finds no pair (left join);
                 # that round then contributes no merge row, exactly as the
                 # empty-argmax frame did before.
-                nxt = (
+                nxt = materialize(
                     syms.join(F.broadcast(top), F.lit(True), "left")
                     .withColumn("_ml", F.expr("coalesce(ml, char(30))"))
                     .withColumn("_mr", F.expr("coalesce(mr, char(30))"))
@@ -1041,7 +1038,6 @@ def _bpe_iter_state(spark: SparkSession, sf_dir: str):
                         "w", "tf", F.expr(_BPE_APPLY).alias("s"), "ml", "mr", "n"
                     )
                     .coalesce(rp)
-                    .localCheckpoint(eager=True)
                 )
                 merges.append(
                     nxt.filter(F.col("ml").isNotNull())
@@ -1231,7 +1227,7 @@ def _decontam_overlap_from_grams(
     train = grams.filter(~is_eval).distinct()
 
     def _build() -> tuple[DataFrame, bool]:
-        eval_grams = (
+        eval_grams = materialize(
             grams.filter(is_eval)
             .groupBy("g")
             .agg(F.count_distinct("doc_id").alias("n_eval_docs"))
@@ -1239,7 +1235,6 @@ def _decontam_overlap_from_grams(
             # explode/aggregate pipeline when the join consumes it;
             # the checkpoint+count runs at DataFrame-CONSTRUCTION time
             # on a cache miss (see stage_cache module doc)
-            .localCheckpoint(eager=True)
         )
         return eval_grams, eval_grams.count() <= _EVAL_BCAST_LIMIT
 
@@ -1283,11 +1278,10 @@ def decontam_leakage_by_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = grams.filter(is_eval).distinct()
 
     def _build() -> tuple[DataFrame, bool]:
-        eval_grams = (
+        eval_grams = materialize(
             grams.filter(is_eval)
             .groupBy("g")
             .agg(F.count_distinct("doc_id").alias("n_eval_docs"))
-            .localCheckpoint(eager=True)
         )
         return eval_grams, eval_grams.count() <= _EVAL_BCAST_LIMIT
 
@@ -1384,7 +1378,7 @@ def decontam_minhash_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     corpus = docs.unionByName(para)
     is_eval = F.col("doc_id") % _EVAL_MOD == 0
-    sh = _doc_shingles(corpus).localCheckpoint(eager=True)
+    sh = materialize(_doc_shingles(corpus))
     bands = _band_table(sh)
     be = bands.filter(is_eval).select(
         F.col("doc_id").alias("eval_doc"),
@@ -1701,10 +1695,9 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # doc_tf feeds both distribution frames AND the scoring join —
     # materialize once (the lm_bigram_score three-consumer discipline)
-    doc_tf = (
+    doc_tf = materialize(
         feats.groupBy("doc_id", "lang", "b")
         .agg(F.count("*").alias("tf"))
-        .localCheckpoint(eager=True)
     )
     cnt_raw = doc_tf.groupBy("b").agg(F.sum("tf").alias("c_raw"))
     cnt_tgt = (
@@ -1871,9 +1864,9 @@ def quality_filter_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
             (
                 f"funnel:{stage}",
                 sf_dir,
-                lambda fn=fn: fn(spark, sf_dir)
-                .select("doc_id", "keep")
-                .localCheckpoint(eager=True),
+                lambda fn=fn: materialize(
+                    fn(spark, sf_dir).select("doc_id", "keep")
+                ),
             )
             for stage, fn in (
                 ("gopher", quality_gopher_flags),
@@ -1955,9 +1948,9 @@ def corpus_funnel_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             (
                 f"funnel:{stage}",
                 sf_dir,
-                lambda fn=fn, cols=cols: fn(spark, sf_dir)
-                .select(*cols)
-                .localCheckpoint(eager=True),
+                lambda fn=fn, cols=cols: materialize(
+                    fn(spark, sf_dir).select(*cols)
+                ),
             )
             for stage, fn, cols in (
                 ("gopher", quality_gopher_flags, ("doc_id", "keep")),

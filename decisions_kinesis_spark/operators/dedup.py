@@ -29,7 +29,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from decisions_kinesis_spark.functions.parallel import checkpoint_parallel
+from decisions_kinesis_spark.functions.parallel import (
+    cached,
+    materialize,
+    materialize_many,
+)
 from decisions_kinesis_spark.operators.textops import _DUCK_QUALITY, _STOP_SQL
 from decisions_kinesis_spark.sources.tables import load_table
 
@@ -186,7 +190,7 @@ def dedup_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # recomputes of it.  Trade (standard for checkpoints): blocks live
     # until the frame is GC'd, and lineage is non-replayable — an
     # executor loss fails the query instead of recomputing.
-    sh = _doc_shingles(corpus).localCheckpoint(eager=True)
+    sh = materialize(_doc_shingles(corpus))
     bands = _band_table(sh)
     a, b = bands.alias("a"), bands.alias("b")
     cand = (
@@ -249,8 +253,8 @@ def dedup_minhash_estimate_calibration(
     one bounded-fanout join.
     """
     corpus = _with_injected_dups(load_table(spark, "documents", sf_dir))
-    sh = _doc_shingles(corpus).localCheckpoint(eager=True)
-    sig = _signatures(sh).localCheckpoint(eager=True)
+    sh = materialize(_doc_shingles(corpus))
+    sig = materialize(_signatures(sh))
     bands = sig.groupBy(
         "doc_id", (F.col("seed") / 2).cast("int").alias("band")
     ).agg(
@@ -352,7 +356,7 @@ def dedup_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("text"),
     )
     corpus = docs.unionByName(halves)
-    sh = _doc_shingles(corpus).localCheckpoint(eager=True)
+    sh = materialize(_doc_shingles(corpus))
     bands = _band_table(sh)
     a, b = bands.alias("a"), bands.alias("b")
     cand = (
@@ -440,7 +444,7 @@ def dedup_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # independent shingle pipelines (corpus vs batch) — overlap their
     # materialization jobs (guide §2.6)
-    sh_c, sh_n = checkpoint_parallel(
+    sh_c, sh_n = materialize_many(
         _doc_shingles(corpus), _doc_shingles(batch)
     )
     cand = (
@@ -563,7 +567,7 @@ def dedup_simhash_hamming_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialize the (doc_id, simhash) frame once (tiny: one row per
     # doc) so the self-join does not recompute the token-hash pipeline
     # on both sides
-    sim = dedup_simhash(spark, sf_dir).localCheckpoint(eager=True)
+    sim = materialize(dedup_simhash(spark, sf_dir))
     return simhash_hamming_pairs_from_keys(sim)
 
 
@@ -746,7 +750,7 @@ def dedup_ngram_jaccard_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     # equi-joins — same band (doc_id< orders the pair) and adjacent band
     # (band order orients the pair) — so no distinct pass is needed.
     # m is materialized once; both joins reuse it.
-    m = m.localCheckpoint(eager=True)
+    m = materialize(m)
     same = _same_band_pairs(m)
     a, b = m.alias("a"), m.alias("b")
     adjacent = a.join(
@@ -835,7 +839,7 @@ def dedup_ngram_jaccard_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     m = _ngram_sig_frame(spark, sf_dir).where(
         F.expr(f"{_bighash('cast(doc_id as string)')} % {q} = 0")
     )
-    m = m.localCheckpoint(eager=True)
+    m = materialize(m)
     pairs = _same_band_pairs(m)
     docs = m.groupBy("lang").agg(F.count("*").alias("n_docs_sampled"))
     stats = pairs.groupBy("lang").agg(
@@ -880,7 +884,7 @@ def connected_components(
     doubles per round and the fixpoint lands in O(log diameter) rounds
     — chain-shaped near-dup graphs with eccentricity far beyond the
     round cap still converge (2^20 hops at 20 rounds).  Each round is
-    two shuffle joins over the cached label frame — the standard
+    two shuffle joins over the materialized label frame — the standard
     large-scale pattern at 100 TB.  If the cap is ever hit without a
     fixpoint the function RAISES instead of returning partial labels.
     Oracle: DuckDB recursive CTE computing min-label reachability —
@@ -920,8 +924,20 @@ def connected_components(
         rows = sorted((n, find(n)) for n in parent)
         return spark.createDataFrame(rows, "doc_id long, cluster long")
     del head
-    pairs = pairs.cache()
-    edge_rows = pairs.count()
+    # the distributed branch CACHES its three shared inputs (pairs,
+    # edges, initial labels) rather than checkpointing them, so the
+    # per-round edges ⋈ labels join keeps edges' repartition(n_part,
+    # "doc_a") without an exchange (functions.parallel.cached); each
+    # cache entry is released when its block exits
+    with cached(pairs) as pairs:
+        return _propagate_labels(spark, pairs, pairs.count())
+
+
+def _propagate_labels(
+    spark: SparkSession, pairs: DataFrame, edge_rows: int
+) -> DataFrame:
+    """Distributed branch of ``connected_components`` over the cached
+    pair frame of ``edge_rows`` undirected edges."""
     # Size-derived partitioning: ~250k undirected edges (500k directed
     # rows) per partition, capped by the session's shuffle parallelism —
     # correct at 10k edges and at 10B edges alike (never a hardcoded
@@ -933,71 +949,63 @@ def connected_components(
             (2 * edge_rows) // 500_000 + 1,
         ),
     )
-    edges = (
+    with cached(
         pairs.union(
             pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
-        )
-        .repartition(n_part, "doc_a")  # co-locates the per-round join key
-        .cache()
-    )
-    labels = (
+        ).repartition(n_part, "doc_a")  # co-locates the per-round join key
+    ) as edges, cached(
         edges.select(F.col("doc_a").alias("node"))
         .distinct()
         .withColumn("label", F.col("node"))
-        .cache()
-    )
-    # labels only ever DECREASE, so sum(label) strictly decreases iff any
-    # label changed — convergence needs one cheap agg per round, not a
-    # join+count.
-    prev_sum = labels.agg(F.sum("label")).collect()[0][0]
-    converged = False
-    for _ in range(20):  # 2^20-hop reach via doubling; tiny graphs: 2-3
-        neighbor_min = (
-            edges.join(labels, edges.doc_a == labels.node)
-            .groupBy(F.col("doc_b").alias("node2"))
-            .agg(F.min("label").alias("nlabel"))
-        )
-        # localCheckpoint (eager) TRUNCATES LINEAGE each round: the
-        # doubling self-join below puts hop's subtree in the plan twice,
-        # so without truncation the analyzed plan doubles per round and
-        # Catalyst analysis goes exponential (observed: single-core JVM
-        # spin).  Old checkpoint RDDs are freed by the ContextCleaner
-        # once the Python refs drop at the next loop iteration.
-        hop = (
-            labels.join(neighbor_min, labels.node == F.col("node2"), "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("label"), F.coalesce(F.col("nlabel"), F.col("label"))
-                ).alias("label"),
+    ) as labels:
+        # labels only ever DECREASE, so sum(label) strictly decreases iff any
+        # label changed — convergence needs one cheap agg per round, not a
+        # join+count.
+        prev_sum = labels.agg(F.sum("label")).collect()[0][0]
+        converged = False
+        for _ in range(20):  # 2^20-hop reach via doubling; tiny graphs: 2-3
+            neighbor_min = (
+                edges.join(labels, edges.doc_a == labels.node)
+                .groupBy(F.col("doc_b").alias("node2"))
+                .agg(F.min("label").alias("nlabel"))
             )
-            .localCheckpoint()
-        )
-        # Pointer doubling: follow one more level through the label
-        # table itself (label := min(label, label[label])).  Every label
-        # value IS a node id (init = self id; updates = mins of node
-        # ids), so the self-join is total; coalesce guards regardless.
-        via = hop.select(
-            F.col("node").alias("vnode"), F.col("label").alias("vlabel")
-        )
-        new_labels = (
-            hop.join(via, hop.label == F.col("vnode"), "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("label"), F.coalesce(F.col("vlabel"), F.col("label"))
-                ).alias("label"),
+            # localCheckpoint (eager) TRUNCATES LINEAGE each round: the
+            # doubling self-join below puts hop's subtree in the plan twice,
+            # so without truncation the analyzed plan doubles per round and
+            # Catalyst analysis goes exponential (observed: single-core JVM
+            # spin).  Old checkpoint RDDs are freed by the ContextCleaner
+            # once the Python refs drop at the next loop iteration.
+            hop = materialize(
+                labels.join(neighbor_min, labels.node == F.col("node2"), "left")
+                .select(
+                    "node",
+                    F.least(
+                        F.col("label"), F.coalesce(F.col("nlabel"), F.col("label"))
+                    ).alias("label"),
+                )
             )
-            .localCheckpoint()
-        )
-        new_sum = new_labels.agg(F.sum("label")).collect()[0][0]
-        labels = new_labels
-        if new_sum == prev_sum:
-            converged = True
-            break
-        prev_sum = new_sum
-    edges.unpersist()  # labels are materialized; edge cache no longer needed
-    pairs.unpersist()
+            # Pointer doubling: follow one more level through the label
+            # table itself (label := min(label, label[label])).  Every label
+            # value IS a node id (init = self id; updates = mins of node
+            # ids), so the self-join is total; coalesce guards regardless.
+            via = hop.select(
+                F.col("node").alias("vnode"), F.col("label").alias("vlabel")
+            )
+            new_labels = materialize(
+                hop.join(via, hop.label == F.col("vnode"), "left")
+                .select(
+                    "node",
+                    F.least(
+                        F.col("label"), F.coalesce(F.col("vlabel"), F.col("label"))
+                    ).alias("label"),
+                )
+            )
+            new_sum = new_labels.agg(F.sum("label")).collect()[0][0]
+            labels = new_labels
+            if new_sum == prev_sum:
+                converged = True
+                break
+            prev_sum = new_sum
     if not converged:
         raise RuntimeError(
             "connected_components: no fixpoint after 20 doubling rounds "
@@ -1041,8 +1049,7 @@ def dedup_cluster_stats(
         spark,
         "cluster_stats:components",
         f"{sf_dir}|{driver_max_edges}",
-        lambda: dedup_components(spark, sf_dir, driver_max_edges)
-        .localCheckpoint(eager=True),
+        lambda: materialize(dedup_components(spark, sf_dir, driver_max_edges)),
     )
     return (
         comps.groupBy("cluster")
@@ -1085,8 +1092,7 @@ def dedup_quality_keeper(
         spark,
         "cluster_stats:components",
         f"{sf_dir}|{driver_max_edges}",
-        lambda: dedup_components(spark, sf_dir, driver_max_edges)
-        .localCheckpoint(eager=True),
+        lambda: materialize(dedup_components(spark, sf_dir, driver_max_edges)),
     )
     corpus = _with_injected_dups(load_table(spark, "documents", sf_dir))
     quality = with_quality_signals(corpus).select("doc_id", "quality")

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from decisions_kinesis_spark.functions.parallel import materialize
 from decisions_kinesis_spark.sources.tables import load_table
 
 #: Fixed-point scale for rank mass.  Total mass ≤ _PR_SCALE and every
@@ -126,8 +127,8 @@ def pagerank(pairs: DataFrame, iters: int = _PR_ITERS) -> DataFrame:
     # row carries one precomputed summand instead of a division
     # (measured: construction 2.1 s → 1.2 s at sf0.1; values identical
     # — deg is per-src, so per-edge ``r div deg`` == broadcast c).
-    edges = pairs.localCheckpoint(eager=True)
-    degs = (
+    edges = materialize(pairs)
+    degs = materialize(
         edges.groupBy(F.col("src").alias("node"))
         .agg(F.count("*").alias("deg"))
         # |parts|-row frame: pin to ONE partition before checkpointing —
@@ -135,7 +136,6 @@ def pagerank(pairs: DataFrame, iters: int = _PR_ITERS) -> DataFrame:
         # partitions| and the per-iteration broadcast build reads one
         # block (measured ~0.6 s off the 5-iteration loop at sf0.1)
         .coalesce(1)
-        .localCheckpoint(eager=True)
     )
     nn = degs.count()
     if nn == 0:
@@ -151,7 +151,7 @@ def pagerank(pairs: DataFrame, iters: int = _PR_ITERS) -> DataFrame:
         contrib = ranks.join(degs, "node").select(
             F.col("node").alias("src"), F.expr("r div deg").alias("c")
         )
-        ranks = (
+        ranks = materialize(
             edges.join(F.broadcast(contrib), "src")
             .groupBy(F.col("dst").alias("node"))
             .agg(F.sum("c").alias("s"))
@@ -162,7 +162,6 @@ def pagerank(pairs: DataFrame, iters: int = _PR_ITERS) -> DataFrame:
             # keep the simpler constant-plan form.  coalesce(1): the
             # frame is |parts| rows, so one task per barrier beats 32.
             .coalesce(1)
-            .localCheckpoint(eager=True)
         )
     return ranks.join(degs, "node")
 
@@ -240,7 +239,7 @@ def orders_market_basket_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts ≥ min-support, part counts) join with the part frame
     broadcast; top-k is TakeOrderedAndProject, never a global sort.
     """
-    li = (
+    li = materialize(
         load_table(spark, "lineitem", sf_dir)
         .select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p"))
         .distinct()
@@ -248,7 +247,6 @@ def orders_market_basket_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
         # per-part counts) would each replay the scan+dedup — the
         # n_orders pre-count already materializes this frame once and
         # threw it away; keep it instead (guide §2.4)
-        .localCheckpoint(eager=True)
     )
     n_orders = li.select("o").distinct().count()
     pairs = (
@@ -402,12 +400,11 @@ def graph_triangle_knn_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame
     # |V|·K-bounded by construction — pin once; deg and the orientation
     # join both read it (same bounded-materialization class as the LSH
     # shingle frame, SCALE.md)
-    und = (
+    und = materialize(
         knn.select(
             F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
         )
         .distinct()
-        .localCheckpoint(eager=True)
     )
     return (
         triangle_counts(und)
@@ -448,11 +445,13 @@ def triangle_counts(und: DataFrame) -> DataFrame:
     )
     # referenced three times below (both wedge legs + the closing
     # probe) — pin so the construction isn't replayed per reference
-    oriented = with_degs.select(
-        F.when(u_first, F.col("u")).otherwise(F.col("v")).alias("a"),
-        F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("b"),
-        F.when(u_first, F.col("dv")).otherwise(F.col("du")).alias("db"),
-    ).localCheckpoint(eager=True)
+    oriented = materialize(
+        with_degs.select(
+            F.when(u_first, F.col("u")).otherwise(F.col("v")).alias("a"),
+            F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("b"),
+            F.when(u_first, F.col("dv")).otherwise(F.col("du")).alias("db"),
+        )
+    )
     e1, e2 = oriented.alias("e1"), oriented.alias("e2")
     wedges = e1.join(
         e2,
@@ -589,7 +588,7 @@ def graph_hits_order_part(spark: SparkSession, sf_dir: str) -> DataFrame:
     co-partitioned with the edge frame; both reductions combine
     map-side.  The per-iteration max-abs is a 1-row broadcast.
     """
-    edges = (
+    edges = materialize(
         load_table(spark, "lineitem", sf_dir)
         .select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p"))
         .distinct()
@@ -599,13 +598,11 @@ def graph_hits_order_part(spark: SparkSession, sf_dir: str) -> DataFrame:
         # per-iteration exchange left is the unavoidable part-keyed
         # message reduce
         .repartition("o")
-        .localCheckpoint(eager=True)
     )
-    pdeg = (
+    pdeg = materialize(
         edges.groupBy("p")
         .agg(F.count("*").alias("n_orders"))
         .coalesce(1)
-        .localCheckpoint(eager=True)
     )
     a = pdeg.select("p", F.lit(_HITS_SCALE).alias("a"))
 
@@ -640,12 +637,11 @@ def graph_hits_order_part(spark: SparkSession, sf_dir: str) -> DataFrame:
         # select over the checkpointed |parts|-row frame, so its
         # double evaluation (max agg + projection) costs two trivial
         # single-partition reads, not two edge passes
-        araw = (
+        araw = materialize(
             edges.join(h, "o")
             .groupBy("p")
             .agg(F.sum("h").alias("a"))
             .coalesce(1)
-            .localCheckpoint(eager=True)
         )
         a = _renorm(araw, "a")
     return (

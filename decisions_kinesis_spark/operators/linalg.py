@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from decisions_kinesis_spark.functions.parallel import materialize
 from decisions_kinesis_spark.sources.tables import load_table
 
 _Q = 10_000  # input quantization scale
@@ -55,7 +56,7 @@ def embedding_power_iteration_pc1(
     # 1.09 s vs ON 1.90 s best-of-4 — the iteration joins dominate,
     # not the scan-side explode, and the loop re-pays the exchange)
     emb = load_table(spark, "embeddings", sf_dir)
-    e = (
+    e = materialize(
         emb.select(
             F.col("vec_id").alias("row"),
             F.posexplode("embedding").alias("pos0", "x"),
@@ -67,13 +68,11 @@ def embedding_power_iteration_pc1(
                 f"cast(floor(cast(x as double) * {_Q} + 0.5) as bigint)"
             ).alias("q"),
         )
-        .localCheckpoint(eager=True)
     )
-    v = (
+    v = materialize(
         e.select("pos")
         .distinct()
         .select("pos", F.lit(_S).cast("bigint").alias("val"))
-        .localCheckpoint(eager=True)
     )
     for _ in range(_PI_ITERS):
         s = (
@@ -87,7 +86,7 @@ def embedding_power_iteration_pc1(
             .agg(F.sum(F.expr(f"(s div {_D}) * q")).alias("w"))
         )
         m = w.agg(F.max(F.abs(F.col("w"))).alias("m"))
-        v = (
+        v = materialize(
             w.crossJoin(F.broadcast(m))
             # m = 0 guard: a degenerate (all-zero / perfectly
             # cancelling) embedding table renormalizes to the zero
@@ -100,7 +99,6 @@ def embedding_power_iteration_pc1(
                     f" else (w * {_S}) div m end"
                 ).alias("val"),
             )
-            .localCheckpoint(eager=True)
         )
     return v.select("pos", F.col("val").alias("component"))
 

@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from decisions_kinesis_spark.functions.parallel import materialize
 from decisions_kinesis_spark.sources.tables import load_table
 
 
@@ -1538,12 +1539,11 @@ def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     supp = load_table(spark, "supplier", sf_dir)
     nation = load_table(spark, "nation", sf_dir).filter(F.col("n_name") == "NATION_7")
     rev = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast("decimal(18,4)")
-    per_part = (
+    per_part = materialize(
         li.join(F.broadcast(supp), li.l_suppkey == supp.s_suppkey)
         .join(F.broadcast(nation), supp.s_nationkey == nation.n_nationkey)
         .groupBy(F.col("l_partkey").alias("p_partkey"))
         .agg(F.sum(rev).alias("value_dec"))
-        .localCheckpoint(eager=True)
     )
     total = per_part.select(F.sum("value_dec").cast("double").alias("tot"))
     return (
@@ -1876,8 +1876,8 @@ def agg_hll_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     # anyway.  Materialize it once: one scan+dedup feeds both sides,
     # and the md5 work runs over |distinct| rows, not |rows| (guide
     # §2.3 — aggregate before you hash/shuffle).
-    d = li.distinct().localCheckpoint(eager=True)
-    regs = (
+    d = materialize(li.distinct())
+    regs = materialize(
         d.select(
             "l_returnflag",
             F.expr(_HLL_REG_SPARK.format(k="l_partkey")).alias("reg"),
@@ -1888,7 +1888,6 @@ def agg_hll_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("l_returnflag", "reg")
         .agg(F.max("rho").alias("mreg"))
-        .localCheckpoint(eager=True)
     )
     singles = _hll_est_frame(regs, ["l_returnflag"], "e")
     union_regs = (
@@ -2059,18 +2058,17 @@ def agg_kmv_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pair-expanded aggregation shrinks by the same factor — its
     # inner countDistinct(flag) also collapses to count(*) because
     # (flag, part) rows are already unique.
-    d = li.distinct().localCheckpoint(eager=True)
+    d = materialize(li.distinct())
     # h feeds the candidate expansion AND both membership probes (3
     # consumers), members feeds kmin and the probe join (2) — a lazy
     # subtree replays per consumer, so the md5+distinct pass and the
     # per-pair bottom-k window each ran multiple times (guide §2.4)
-    h = (
+    h = materialize(
         d.select(
             "l_returnflag",
             F.expr(_KMV_HASH_SPARK).alias("hv"),
         )
         .distinct()
-        .localCheckpoint(eager=True)
     )
     cand = (
         h.join(
@@ -2082,10 +2080,9 @@ def agg_kmv_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     w = Window.partitionBy("fa", "fb").orderBy(F.asc("hv"))
-    members = (
+    members = materialize(  # ≤ pairs·k rows
         cand.withColumn("rk", F.row_number().over(w))
         .filter(F.col("rk") <= _KMV_K)
-        .localCheckpoint(eager=True)  # ≤ pairs·k rows
     )
     kmin = members.groupBy("fa", "fb").agg(
         F.max("hv").alias("vk"), F.count("*").alias("k_actual")

@@ -19,8 +19,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from decisions_kinesis_spark.functions.parallel import (
-    checkpoint_parallel,
     ensure_parallelism,
+    materialize,
+    materialize_many,
 )
 from decisions_kinesis_spark.sources.tables import load_table, table_count
 
@@ -394,7 +395,7 @@ def ann_mutual_knn_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     w = Window.partitionBy("a_id").orderBy(F.desc("cos"), F.asc("b_id"))
-    ranked = (
+    ranked = materialize(
         directed.withColumn("rk", F.row_number().over(w))
         .filter(F.col("rk") <= _MUTUAL_K)
         .select("a_id", "b_id", "cos", "rk")
@@ -402,7 +403,6 @@ def ann_mutual_knn_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         # lazy subtree replays per consumer — materialize the
         # k·N-bounded top-k once (guide §2.4) so the bucket join +
         # cosine scoring + window run once, not twice
-        .localCheckpoint(eager=True)
     )
     e1, e2 = ranked.alias("e1"), ranked.alias("e2")
     return (
@@ -611,9 +611,9 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # N·√N assignment pass ran twice — materialize it once (measured on
     # the PQ sibling: 3.47 → 2.97 best-of-3, rows identical).  At scale
     # the materialized assignment IS the IVF index artifact.
-    assigned = _assign_cents(
-        emb, _seed_centroids(spark, sf_dir, emb)
-    ).localCheckpoint(eager=True)
+    assigned = materialize(
+        _assign_cents(emb, _seed_centroids(spark, sf_dir, emb))
+    )
     return _ivf_probe_topk(assigned)
 
 
@@ -680,9 +680,7 @@ def _capped_topk(
     )
     # materialized once for the probe tail's two reads (ann_ivf_topk
     # comment; same multi-consumer shape)
-    return _ivf_probe_topk(
-        _assign_cents(emb, cents).localCheckpoint(eager=True)
-    )
+    return _ivf_probe_topk(materialize(_assign_cents(emb, cents)))
 
 
 def ann_ivf_nprobe2(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -695,9 +693,9 @@ def ann_ivf_nprobe2(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _emb_v(spark, sf_dir)
     # two tail reads (query re-score + cell members) — materialize the
     # assignment once (ann_ivf_topk comment)
-    assigned = _assign_cents(
-        emb, _seed_centroids(spark, sf_dir, emb)
-    ).localCheckpoint(eager=True)
+    assigned = materialize(
+        _assign_cents(emb, _seed_centroids(spark, sf_dir, emb))
+    )
     return _nprobe2_topk(spark, sf_dir, assigned)
 
 
@@ -867,7 +865,7 @@ def _refined_topk(
     refined = _ivf_refined_centroids(spark, sf_dir, assigned0)
     # the refined re-assignment feeds the probe tail's two reads —
     # materialize once (ann_ivf_topk comment)
-    assigned = _assign_cents(emb, refined).localCheckpoint(eager=True)
+    assigned = materialize(_assign_cents(emb, refined))
     return _ivf_probe_topk(assigned)
 
 
@@ -1041,9 +1039,9 @@ def ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     # three tail reads (query slice, candidate cells, re-rank fetch) —
     # materialize the assignment once (measured: 3.47 → 2.97 best-of-3,
     # rows identical)
-    assigned = _assign_cents(
-        emb, _seed_centroids(spark, sf_dir, emb)
-    ).localCheckpoint(eager=True)
+    assigned = materialize(
+        _assign_cents(emb, _seed_centroids(spark, sf_dir, emb))
+    )
     return _pq_topk(spark, sf_dir, emb, assigned)
 
 
@@ -1290,7 +1288,7 @@ def ann_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
         return (
             f"annrecall:{name}",
             sf_dir,
-            lambda: builder().localCheckpoint(eager=True),
+            lambda: materialize(builder()),
         )
 
     def _cached(name: str, builder) -> DataFrame:
@@ -1432,11 +1430,10 @@ def ann_recall_mean_shifted(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the shifted/normalized corpus feeds 4+ consumers (truth both
     # sides, both indexes) and a lazy subtree replays per consumer —
     # materialize once (guide §2.4)
-    emb = (
+    emb = materialize(
         ensure_parallelism(load_table(spark, "embeddings", sf_dir))
         .select("vec_id", shifted.alias("v"))
         .withColumn("nv", F.expr(_NORM.format(v="v")))
-        .localCheckpoint(eager=True)
     )
     nbits = _adaptive_nbits(table_count(spark, "embeddings", sf_dir))
 
@@ -1482,7 +1479,7 @@ def ann_recall_mean_shifted(spark: SparkSession, sf_dir: str) -> DataFrame:
     # hit joins) and the two index frames (read 3× each: both _cands
     # sides + buckets_used) are independent given emb — materialize
     # them with overlapped jobs (guide §2.4/§2.6)
-    truth, cen, raw = checkpoint_parallel(
+    truth, cen, raw = materialize_many(
         emb.join(F.broadcast(q), F.col("vec_id") != F.col("query_id"))
         .withColumn("cos", cos)
         .withColumn("rk", F.row_number().over(w_rank))
@@ -1493,7 +1490,7 @@ def ann_recall_mean_shifted(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # the candidate frames are read 2-3× (budget, top-k, unbudgeted
     # count) — materialize both, overlapped
-    cen_cand, raw_cand = checkpoint_parallel(_cands(cen), _cands(raw))
+    cen_cand, raw_cand = materialize_many(_cands(cen), _cands(raw))
     # per-query scoring budget = the centered index's candidate count
     budget = cen_cand.groupBy("query_id").agg(F.count("*").alias("b"))
     raw_budgeted = (

@@ -55,6 +55,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from decisions_kinesis_spark.functions.parallel import materialize
 from decisions_kinesis_spark.operators.relational import (
     _HLL_E0,
     _HLL_EST_DUCK,
@@ -354,7 +355,7 @@ def agg_hll_linear_counting(spark: SparkSession, sf_dir: str) -> DataFrame:
     # count_distinct paid this dedup anyway.  The production shape
     # WITHOUT an exact side stays agg_hll_distinct's: registers
     # straight off the scan, no distinct pre-pass.
-    d = li.distinct().localCheckpoint(eager=True)
+    d = materialize(li.distinct())
     regs = (
         d.select(
             "l_partkey",

@@ -11,7 +11,7 @@ one session reuse the materialized stage.
 
 Contract and bounds:
 
-- Builders materialize their own result (``localCheckpoint(eager=True)``
+- Builders materialize their own result (``functions.parallel.materialize``
   on the frame they return), so cache hits are scan-only; this means a
   cache MISS runs Spark jobs at DataFrame-CONSTRUCTION time (the same
   documented side effect the decontam eval-gram probe has had since
@@ -39,15 +39,22 @@ from collections.abc import Callable, Sequence
 
 from pyspark.sql import SparkSession
 
+from decisions_kinesis_spark.functions.parallel import _run_concurrently
+
 _CACHE: OrderedDict[tuple[str, str, str], object] = OrderedDict()
 _MAX_ENTRIES = 24
 
 #: bookkeeping lock (cache dict + key-lock table); never held while a
 #: builder runs, so concurrent builds of DIFFERENT keys proceed freely
 _LOCK = threading.Lock()
-#: per-key build locks: two threads asking for the SAME missing key run
-#: the builder once (the second blocks, then reads the memo)
-_KEY_LOCKS: dict[tuple[str, str, str], threading.Lock] = {}
+#: per-key build locks as ``[lock, users]``: two threads asking for the
+#: SAME missing key run the builder once (the second blocks, then reads
+#: the memo).  ``users`` counts the threads holding or waiting on the
+#: lock; the last one out drops the entry, so the table holds only
+#: in-flight keys.  An entry is never dropped while a thread still
+#: waits on it — that would let a later requester create a second lock
+#: and build the same key concurrently (ADVICE r13).
+_KEY_LOCKS: dict[tuple[str, str, str], list] = {}
 
 
 def _lookup(key: tuple[str, str, str]) -> tuple[bool, object]:
@@ -55,7 +62,6 @@ def _lookup(key: tuple[str, str, str]) -> tuple[bool, object]:
         app = key[0]
         for k in [k for k in _CACHE if k[0] != app]:
             del _CACHE[k]
-            _KEY_LOCKS.pop(k, None)
         if key in _CACHE:
             _CACHE.move_to_end(key)
             return True, _CACHE[key]
@@ -72,67 +78,47 @@ def get_or_build(
     if hit:
         return val
     with _LOCK:
-        key_lock = _KEY_LOCKS.setdefault(key, threading.Lock())
-    with key_lock:
-        hit, val = _lookup(key)  # built while we waited for the lock
-        if hit:
-            return val
-        val = builder()
+        entry = _KEY_LOCKS.setdefault(key, [threading.Lock(), 0])
+        entry[1] += 1
+    try:
+        with entry[0]:
+            hit, val = _lookup(key)  # built while we waited for the lock
+            if hit:
+                return val
+            val = builder()
+            with _LOCK:
+                _CACHE[key] = val
+                while len(_CACHE) > _MAX_ENTRIES:
+                    _CACHE.popitem(last=False)
+    finally:
         with _LOCK:
-            _CACHE[key] = val
-            # key locks OUTLIVE LRU eviction (ADVICE r13): popping a
-            # lock another thread still waits on would let two builders
-            # run concurrently for one key after re-request.  Locks are
-            # dropped only by clear() and cross-session eviction (the
-            # old app's builders are gone with its JVM).
-            while len(_CACHE) > _MAX_ENTRIES:
-                _CACHE.popitem(last=False)
+            entry[1] -= 1
+            if entry[1] == 0:
+                del _KEY_LOCKS[key]
     return val
 
 
 def build_many(
     spark: SparkSession,
     specs: Sequence[tuple[str, str, Callable[[], object]]],
-    max_workers: int = 6,
 ) -> list[object]:
     """get_or_build every (name, dataset_key, builder) spec, running the
-    cache MISSES concurrently from a small driver thread pool (guide
-    §2.6 — overlap independent jobs): each builder eager-materializes
-    its own frame, and Spark back-fills one stage's straggler tail with
-    the next stage's tasks instead of serializing whole jobs.  Results
-    come back in spec order; values are identical to sequential builds
-    (each stage is an independent pipeline — only the job overlap
-    changes).  A handful of in-flight jobs is plenty; more just fight
-    for executor slots.  Width 6 (r14): at 4, the 5-gate funnel and the
-    8-tail recall composition serialized their overflow specs behind
-    the pool — measured interleaved ×4, corpus_funnel_report best
-    3.30 → 3.03 s and spread 3.3-4.6 → 3.0-3.2 at width 6."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import inheritable_thread_target
-
-    missing = [
-        i
-        for i, (name, dkey, _) in enumerate(specs)
-        if not _lookup((spark.sparkContext.applicationId, name, dkey))[0]
-    ]
-    if len(missing) > 1:
-        wrap = inheritable_thread_target(spark)  # session form inherits tags
-        if not callable(wrap):  # classic mode returns the session itself
-            wrap = lambda f: f
-        with ThreadPoolExecutor(
-            max_workers=min(len(missing), max_workers)
-        ) as pool:
-            futures = [
-                pool.submit(
-                    wrap(
-                        lambda s=specs[i]: get_or_build(spark, s[0], s[1], s[2])
-                    )
-                )
-                for i in missing
-            ]
-            for f in futures:  # surface the first builder error verbatim
-                f.result()
+    cache MISSES concurrently on the driver pool
+    (``functions.parallel._run_concurrently``): each builder
+    eager-materializes its own frame, and Spark back-fills one stage's
+    straggler tail with the next stage's tasks instead of serializing
+    whole jobs.  Results come back in spec order; values are identical
+    to sequential builds (each stage is an independent pipeline — only
+    the job overlap changes)."""
+    app = spark.sparkContext.applicationId
+    _run_concurrently(
+        spark,
+        [
+            lambda s=s: get_or_build(spark, *s)
+            for s in specs
+            if not _lookup((app, s[0], s[1]))[0]
+        ],
+    )
     return [get_or_build(spark, n, d, b) for n, d, b in specs]
 
 
@@ -141,4 +127,3 @@ def clear() -> None:
     the ContextCleaner once the refs drop)."""
     with _LOCK:
         _CACHE.clear()
-        _KEY_LOCKS.clear()

@@ -12,8 +12,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from decisions_kinesis_spark.functions.parallel import (
-    checkpoint_parallel,
     ensure_parallelism,
+    materialize,
+    materialize_many,
 )
 from decisions_kinesis_spark.sources.tables import load_table
 
@@ -454,10 +455,10 @@ def retrieval_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scoring tail — materialize the token frame once and the three
     # (mutually independent) lexical inputs with overlapped jobs, the
     # retrieval_hybrid_rrf discipline (guide §2.4/§2.6)
-    tok = docs.select(
-        "doc_id", F.explode(F.expr(_TOKS)).alias("term")
-    ).localCheckpoint(eager=True)
-    return _bm25_topk(*checkpoint_parallel(*_lex_inputs(tok)))
+    tok = materialize(
+        docs.select("doc_id", F.explode(F.expr(_TOKS)).alias("term"))
+    )
+    return _bm25_topk(*materialize_many(*_lex_inputs(tok)))
 
 
 def _lex_inputs(tok: DataFrame):
@@ -554,16 +555,16 @@ def retrieval_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, "documents", sf_dir).select("doc_id", "text")
     # materialized once: tf / df / dl each consume the explode, and
     # both rankers consume those — the dedup shingle-frame discipline
-    tok = docs.select(
-        "doc_id", F.explode(F.expr(_TOKS)).alias("term")
-    ).localCheckpoint(eager=True)
+    tok = materialize(
+        docs.select("doc_id", F.explode(F.expr(_TOKS)).alias("term"))
+    )
     # The fusion plan consumes tf/df_t 2x and dl 3x (both rankers +
     # the n_docs agg), and Spark replays a lazy subtree once PER
     # consumer — materialize the three (mutually independent) lexical
     # inputs once, with their jobs overlapped (guide §2.4/§2.6).  All
     # three are bounded: tf/df_t by the query-term broadcast, dl one
     # row per doc.
-    tf, df_t, dl = checkpoint_parallel(*_lex_inputs(tok))
+    tf, df_t, dl = materialize_many(*_lex_inputs(tok))
     # n_docs for the tf-idf idf = docs with ≥1 token = dl's row count
     nd = dl.agg(F.count("*").alias("n_docs"))
     agg_b = (

@@ -219,3 +219,18 @@ def test_kmeans_structure_on_fixture(spark):
         r["cluster_id"] for r in rows if r["iter"] == _KM_ITERS
     }
     assert set(by_cluster) == final_clusters
+
+
+def test_kmeans_ch_index_reuses_final_centroids(spark):
+    """The final centroid frame is materialized once per Lloyd-loop
+    slot: a second ch_index construction in one session runs no Spark
+    job (the first one, or the loop itself, already paid for it)."""
+    sf = "/root/testdata/sf0.001"
+    sc = spark.sparkContext
+    embedding_kmeans_ch_index(spark, sf)
+    sc.setJobGroup("km-ch-second-build", "second ch_index construction")
+    try:
+        embedding_kmeans_ch_index(spark, sf)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("km-ch-second-build") == []

@@ -109,18 +109,22 @@ def test_connected_components_long_chain_converges(spark):
     """A 120-node chain has eccentricity 119 — far beyond the 20-round
     cap at one hop per round.  Pointer doubling must still reach the
     fixpoint (every node labeled 0) within the cap, and never silently
-    return partial labels."""
+    return partial labels.  The distributed path pins nothing in the
+    session cache: every call leaving a cache entry behind would grow
+    the session's memory for its whole life."""
     from decisions_kinesis_spark.operators.dedup import connected_components
 
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(119)], "doc_a long, doc_b long"
     )
+    spark.catalog.clearCache()
     out = {
         r.doc_id: r.cluster
         for r in connected_components(spark, chain, driver_max_edges=0).collect()
     }
     assert len(out) == 120
     assert set(out.values()) == {0}
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_ann_topk_self_similarity_excluded(spark, sf_dir):

@@ -1,6 +1,7 @@
 """Session stage-cache contract (operators/stage_cache.py): memoization,
 LRU bound, dead-session eviction, explicit clear — the ADVICE r4
-leak-scenario guarantees, asserted."""
+leak-scenario guarantees, asserted — plus the materialization seam
+(functions/parallel.py) it builds on."""
 
 from __future__ import annotations
 
@@ -103,19 +104,102 @@ def test_build_many_propagates_builder_error(spark):
     stage_cache.clear()
 
 
-def test_checkpoint_parallel_matches_sequential(spark):
-    """checkpoint_parallel returns frames with the same rows as
-    sequential localCheckpoints (only job overlap changes)."""
-    from decisions_kinesis_spark.functions.parallel import (
-        checkpoint_parallel,
-    )
+def test_materialize_many_matches_sequential(spark):
+    """materialize_many returns frames with the same rows as
+    sequential materialization (only job overlap changes)."""
+    from decisions_kinesis_spark.functions.parallel import materialize_many
 
     a = spark.range(10).selectExpr("id", "id * 2 as two")
     b = spark.range(5).selectExpr("id", "id * 3 as three")
-    ca, cb = checkpoint_parallel(a, b)
+    ca, cb = materialize_many(a, b)
     assert sorted(map(tuple, ca.collect())) == sorted(
         map(tuple, a.collect())
     )
     assert sorted(map(tuple, cb.collect())) == sorted(
         map(tuple, b.collect())
     )
+
+
+def test_key_locks_bounded_after_eviction(spark):
+    """Per-key build locks do not outlive their keys: after more
+    distinct keys than the LRU holds, the lock table is bounded too."""
+    stage_cache.clear()
+    for i in range(stage_cache._MAX_ENTRIES + 10):
+        stage_cache.get_or_build(spark, "locks", f"k{i}", lambda: object())
+    assert len(stage_cache._KEY_LOCKS) <= stage_cache._MAX_ENTRIES
+    stage_cache.clear()
+
+
+def test_concurrent_get_or_build_stress(spark):
+    """More threads than cores race on a few missing keys with a tiny
+    switch interval: each key's builder runs exactly once and never
+    twice at a time, every caller gets the built value, and the lock
+    table drains to empty."""
+    import sys
+    import threading
+    import time
+
+    stage_cache.clear()
+    keys = ["k0", "k1", "k2"]
+    calls = dict.fromkeys(keys, 0)
+    active = dict.fromkeys(keys, 0)
+    overlaps = []
+    guard = threading.Lock()
+
+    def builder(k):
+        def build():
+            with guard:
+                calls[k] += 1
+                active[k] += 1
+                if active[k] > 1:
+                    overlaps.append(k)
+            time.sleep(0.01)
+            with guard:
+                active[k] -= 1
+            return k
+
+        return build
+
+    out = []
+
+    def worker():
+        for k in keys:
+            out.append(stage_cache.get_or_build(spark, "stress", k, builder(k)))
+
+    threads = [threading.Thread(target=worker) for _ in range(16)]
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert calls == dict.fromkeys(keys, 1) and not overlaps
+    assert sorted(out) == sorted(keys * 16)
+    assert not stage_cache._KEY_LOCKS
+    stage_cache.clear()
+
+
+def test_materialization_goes_through_the_seam():
+    """Every eager materialization and driver thread pool in the package
+    lives in functions/parallel.py, so the one place that decides how
+    (and how wide) cannot be bypassed by a direct call elsewhere."""
+    import pathlib
+    import re
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "decisions_kinesis_spark"
+    seam = pkg / "functions" / "parallel.py"
+    direct = re.compile(
+        r"\.localCheckpoint\(|\.cache\(\)|\.persist\(|\.checkpoint\(|ThreadPoolExecutor"
+    )
+    hits = [
+        f"{path.relative_to(pkg)}:{n}: {line.strip()}"
+        for path in sorted(pkg.rglob("*.py"))
+        if path != seam
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if direct.search(line)
+    ]
+    assert not hits, "route these through functions.parallel:\n" + "\n".join(hits)

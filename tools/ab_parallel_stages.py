@@ -34,7 +34,7 @@ def main() -> None:
 
     real_build_many = stage_cache.build_many
 
-    def seq_build_many(spark_, specs, max_workers=4):
+    def seq_build_many(spark_, specs):
         return [
             stage_cache.get_or_build(spark_, nm, dk, b) for nm, dk, b in specs
         ]

@@ -71,24 +71,11 @@ def quality_gopher_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _doc_toks(docs: DataFrame) -> DataFrame:
-    """(doc_id, toks) tokenized frame — the common head of every gate
-    pipeline, built lazily by each gate.  No funnel shares one
-    materialized instance across gates: that was measured and rejected
-    in r14 (the shared toks build serializes ahead of the overlapped
-    gates — see quality_filter_agreement and OPTIMIZATION_r14.md)."""
-    return docs.select("doc_id", F.expr(_TOKS).alias("toks"))
-
-
 def gopher_flags(docs: DataFrame) -> DataFrame:
     """Frame-level Gopher gate over (doc_id, text) — shared by the
     batch query and streaming micro-batch application (one gate
     definition, the ``doc_token_grams`` discipline)."""
-    return _gopher_from_toks(_doc_toks(docs))
-
-
-def _gopher_from_toks(tok: DataFrame) -> DataFrame:
-    """Gopher gate over a pre-tokenized (doc_id, toks) frame."""
+    tok = docs.select("doc_id", F.expr(_TOKS).alias("toks"))
     words = tok.select("doc_id", F.explode("toks").alias("w"))
     wc = words.groupBy("doc_id", "w").agg(F.count("*").alias("cnt"))
     per = wc.groupBy("doc_id").agg(
@@ -194,12 +181,9 @@ def _rep_runstats(n: int) -> str:
 def repetition_flags(docs: DataFrame) -> DataFrame:
     """Frame-level Gopher repetition gate over (doc_id, text) — shared
     by the batch query and streaming micro-batch application."""
-    return _repetition_from_toks(_doc_toks(docs))
-
-
-def _repetition_from_toks(tok: DataFrame) -> DataFrame:
-    """Repetition gate over a pre-tokenized (doc_id, toks) frame."""
-    toks = tok.filter(F.size("toks") >= 1)
+    toks = docs.select("doc_id", F.expr(_TOKS).alias("toks")).filter(
+        F.size("toks") >= 1
+    )
     widths = (*_REP_TOP, *_REP_DUP)
     out = toks.select(
         "doc_id",
@@ -656,12 +640,9 @@ def dedup_exact_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     array.
     """
     docs = ensure_parallelism(load_table(spark, "documents", sf_dir).select("doc_id", "text"))
-    return _substring_from_toks(_doc_toks(docs))
-
-
-def _substring_from_toks(tok: DataFrame) -> DataFrame:
-    """Exact-substring dedup over a pre-tokenized (doc_id, toks) frame."""
-    toks = tok.filter(F.size("toks") >= _SUBSTR_N)
+    toks = docs.select("doc_id", F.expr(_TOKS).alias("toks")).filter(
+        F.size("toks") >= _SUBSTR_N
+    )
     grams = toks.select(
         "doc_id",
         F.posexplode(
@@ -990,7 +971,13 @@ def _bpe_iter_state(spark: SparkSession, sf_dir: str):
         # is charged ~3 stages × 20 rounds (measured warm in-process
         # A/B ×2: loop 5.0-6.3 s with AQE, 3.8-4.7 s without).  Scoped
         # to the loop and restored — the corpus-scale init above keeps
-        # AQE.
+        # AQE.  Re-measured with tools/ab.py at sf0.1 (2 × 5 interleaved
+        # pairs): with AQE on, the query runs 20 more jobs in each of
+        # build and exec and was slower in all 10 pairs.
+        # The write is SESSION-WIDE: no other query may be built or run
+        # concurrently on this session while the loop runs — it would
+        # plan with AQE off, and its own restore could re-enable AQE
+        # mid-loop.
         prev_aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
         spark.conf.set("spark.sql.adaptive.enabled", "false")
         try:
@@ -1164,12 +1151,11 @@ def doc_token_grams(docs: DataFrame) -> DataFrame:
     The tokenize→window→hash chain is scan-side per-row compute; the
     parallelism guard spreads a single-split small input across the
     cluster (no-op at scale — see functions/parallel.py)."""
-    return _grams_from_toks(_doc_toks(ensure_parallelism(docs)))
-
-
-def _grams_from_toks(tok: DataFrame) -> DataFrame:
-    """Hashed fixed-width token grams over a pre-tokenized frame."""
-    toks = tok.filter(F.size("toks") >= _SUBSTR_N)
+    toks = (
+        ensure_parallelism(docs)
+        .select("doc_id", F.expr(_TOKS).alias("toks"))
+        .filter(F.size("toks") >= _SUBSTR_N)
+    )
     return toks.select(
         "doc_id",
         F.explode(
@@ -1481,11 +1467,7 @@ def quality_classifier_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 def classifier_score(docs: DataFrame) -> DataFrame:
     """Frame-level classifier apply over (doc_id, text) — shared by the
     batch query and streaming micro-batch application."""
-    return _classifier_from_toks(_doc_toks(docs))
-
-
-def _classifier_from_toks(tok: DataFrame) -> DataFrame:
-    """Classifier apply over a pre-tokenized (doc_id, toks) frame."""
+    tok = docs.select("doc_id", F.expr(_TOKS).alias("toks"))
     spark = tok.sparkSession
     words = tok.select("doc_id", F.explode("toks").alias("w"))
     feats = words.select(

@@ -34,16 +34,18 @@ from decisions_kinesis_spark.functions.parallel import (
     materialize,
     materialize_many,
 )
-from decisions_kinesis_spark.operators.textops import _DUCK_QUALITY, _STOP_SQL
+from decisions_kinesis_spark.operators.textops import (
+    _DUCK_QUALITY,
+    _DUCK_TOKS,
+    _STOP_SQL,
+    _TOKS,
+)
 from decisions_kinesis_spark.sources.tables import load_table
 
 #: Spark-side 60-bit md5 hash of a string expression (see module doc).
 def _bighash(expr: str) -> str:
     return f"cast(conv(substring(md5({expr}), 1, 15), 16, 10) as bigint)"
 
-
-#: Tokenize: lowercase, split on whitespace, drop empties (both engines).
-_TOKS = r"filter(split(lower(text), '\\s+'), x -> x != '')"
 
 #: Word 3-gram shingles from the token array (1-based element_at).
 _SHINGLES = (
@@ -1259,7 +1261,6 @@ QUERIES = {
     "dedup_source_overlap_matrix": dedup_source_overlap_matrix,
 }
 
-_DUCK_TOKS = r"list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '')"
 _DUCK_BIGHASH = "('0x' || substr(md5({e}), 1, 15))::BIGINT"
 
 _DUCK_SHINGLE_CTE = f"""

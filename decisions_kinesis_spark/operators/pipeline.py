@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from decisions_kinesis_spark.operators.textops import (
     _DUCK_QUALITY,
+    _DUCK_TOKS,
     _STOP_SQL,
     with_quality_signals,
 )
@@ -61,8 +62,6 @@ def pipeline_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 QUERIES = {
     "pipeline_clean_corpus": pipeline_clean_corpus,
 }
-
-_DUCK_TOKS = r"list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '')"
 
 ORACLES = {
     "pipeline_clean_corpus": f"""

@@ -25,10 +25,6 @@ _NUM_SHARDS = 8
 
 def _envelope_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     register(spark)
-    # runtime conf; the driver's session doesn't set it at build time.
-    # Without it, Spark refuses to plan a reader that implements
-    # pushFilters (DATA_SOURCE_PUSHDOWN_DISABLED).
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     return (
         spark.read.format("dks_kinesis")
         .option("path", f"{sf_dir}/events.parquet")

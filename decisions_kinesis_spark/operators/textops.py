@@ -18,6 +18,8 @@ from decisions_kinesis_spark.functions.parallel import (
 )
 from decisions_kinesis_spark.sources.tables import load_table
 
+#: Tokenize: lowercase, split on whitespace, drop empties — the one
+#: definition for every module (``_DUCK_TOKS`` is the DuckDB twin).
 _TOKS = r"filter(split(lower(text), '\\s+'), x -> x != '')"
 
 #: ASCII-only word/punct tokenizer — identical regex semantics in both

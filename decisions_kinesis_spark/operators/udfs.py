@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from decisions_kinesis_spark.operators.textops import _DUCK_TOKS
 from decisions_kinesis_spark.sources.tables import load_table
 
 
@@ -514,8 +515,6 @@ ORACLES = {
     """,
 }
 
-
-from decisions_kinesis_spark.operators.dedup import _DUCK_TOKS  # noqa: E402
 
 ORACLES["udtf_chunk_documents"] = f"""
     WITH d AS (

@@ -701,5 +701,9 @@ def register(spark) -> None:
     post-WindowExec-fix bench log tail (VERDICT r11 hygiene nit)."""
     if getattr(spark, "_dks_kinesis_registered", False):
         return
+    # runtime conf: a session not built by session.get_session lacks it,
+    # and Spark refuses to plan a reader that implements pushFilters
+    # without it (DATA_SOURCE_PUSHDOWN_DISABLED).
+    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     spark.dataSource.register(KinesisEnvelopeDataSource)
     spark._dks_kinesis_registered = True  # noqa: SLF001

@@ -18,6 +18,15 @@ Layout:
 
 __version__ = "0.1.0"
 
+import sys
+
+if sys.version_info < (3, 12):
+    # Every Python worker running package code imports this module, so
+    # reused workers skip the per-task re-read of pyspark.zip's directory.
+    from decisions_kinesis_spark import _zipcache
+
+    _zipcache.install()
+
 from decisions_kinesis_spark.config import (  # noqa: F401
     FilterVerb,
     KinesisQueueConfig,

@@ -60,6 +60,7 @@ re-read.
 from __future__ import annotations
 
 import hashlib
+import itertools
 import json
 import os
 import uuid
@@ -141,12 +142,8 @@ def _shardlog_rows(
 ) -> Iterator[tuple]:
     """Envelope tuples for one shard-log slice [start, end)."""
     shard_id = os.path.basename(path)[: -len(".jsonl")]
-    with open(path, encoding="utf-8") as f:
-        for idx, line in enumerate(f):
-            if idx < start:
-                continue
-            if end is not None and idx >= end:
-                break
+    with open(path, "rb") as f:
+        for idx, line in enumerate(itertools.islice(f, start, end), start):
             rec = json.loads(line)
             ts = rec.get("ts")
             yield (

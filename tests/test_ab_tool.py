@@ -69,17 +69,19 @@ def test_phase_counts_reads_each_session_apart(tmp_path):
 
 
 def test_head_vs_lazy_smoke():
+    # the dks_kinesis scan runs package code in Spark's Python workers
     proc = subprocess.run(
         [sys.executable, os.path.join(TOOLS, "ab.py"), "--arm", "head", "--arm", "lazy",
-         "--n", "1", "q11_important_parts"],
+         "--n", "1", "q11_important_parts", "pyds_kinesis_shard_scan"],
         capture_output=True, text=True, timeout=600,
         env={**os.environ, "SPARK_GRAFT_SF_DIR": SF_SMOKE},
     )
     assert proc.returncode == 0, proc.stdout + proc.stderr[-3000:]
     lines = proc.stdout.splitlines()
     assert lines[0].startswith("q11_important_parts: values equal"), proc.stdout
+    assert lines[8].startswith("pyds_kinesis_shard_scan: values equal"), proc.stdout
     # "  <arm> <phase> <best> <jobs> <stages> <tasks>  [<seconds>]", one run each
-    rows = {tuple(ln.split()[:2]): ln.split() for ln in lines[2:]}
+    rows = {tuple(ln.split()[:2]): ln.split() for ln in lines[2:8]}
     assert set(rows) == {(a, p) for a in ("head", "lazy") for p in ("build", "exec", "total")}
     assert int(rows["head", "build"][3]) >= 1
     assert int(rows["lazy", "build"][3]) == 0

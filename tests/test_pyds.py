@@ -16,6 +16,7 @@ import json
 import os
 import shutil
 import tempfile
+from datetime import datetime
 
 import pytest
 from pyspark.sql import functions as F
@@ -24,6 +25,7 @@ from pyspark.sql.datasource import EqualTo, IsNotNull
 from decisions_kinesis_spark.sources.pyds import (
     KinesisEnvelopeReader,
     KinesisShardLogStreamWriter,
+    _shardlog_rows,
     register,
     route_md5,
     shard_file,
@@ -124,6 +126,34 @@ def log_dir():
     tmp = tempfile.mkdtemp(prefix="dks-pyds-")
     yield tmp
     shutil.rmtree(tmp, ignore_errors=True)
+
+
+def test_shardlog_slice_rows(log_dir):
+    """``_shardlog_rows(path, start, end)`` yields exactly lines
+    [start, end) of the log, sequence number = zero-based line index."""
+    recs = [
+        {"data": json.dumps({"i": i, "s": f"é{i}"}, ensure_ascii=False),
+         "pk": str(i % 3), "ts": f"2024-01-01T00:00:{i:02d}"}
+        for i in range(12)
+    ]
+    path = os.path.join(log_dir, "shardId-000000000001.jsonl")
+    with open(path, "w", encoding="utf-8") as f:
+        for rec in recs:
+            f.write(json.dumps(rec, ensure_ascii=False) + "\n")
+    want = [
+        (
+            rec["data"].encode("utf-8"),
+            rec["pk"],
+            "%020d" % i,
+            datetime.fromisoformat(rec["ts"]),
+            "s",
+            "shardId-000000000001",
+            None,
+        )
+        for i, rec in enumerate(recs)
+    ]
+    for start, end in [(0, None), (0, 5), (5, 9), (9, None), (11, 12), (12, None), (3, 3)]:
+        assert list(_shardlog_rows(path, start, end, "s")) == want[start:end]
 
 
 def test_writer_roundtrip(spark, sf_dir, log_dir):

@@ -184,6 +184,10 @@ class Worker:
         self.arm, self.out = arm, out
         self.argv = [sys.executable, os.path.abspath(__file__), "--worker",
                      json.dumps({"arm": arm.spec, "code": code, "sf": sf_dir, "out": out})]
+        # Spark's Python workers unpickle package code (dks_kinesis
+        # readers, UDFs) by reference: bind them to the arm's checkout too
+        self.env = {**os.environ, "PYTHONPATH": os.pathsep.join(
+            p for p in (code, os.environ.get("PYTHONPATH")) if p)}
         self.app_ids: list[str] = []
         os.makedirs(out)
         self._start()
@@ -191,7 +195,8 @@ class Worker:
     def _start(self) -> None:
         # own session: a kill takes the worker's JVM with it
         self.proc = subprocess.Popen(self.argv, stdin=subprocess.PIPE, stdout=subprocess.PIPE,
-                                     text=True, cwd=self.out, start_new_session=True)
+                                     text=True, cwd=self.out, env=self.env,
+                                     start_new_session=True)
         self.lines: queue.Queue = queue.Queue()
         threading.Thread(target=_pump, args=(self.proc.stdout, self.lines), daemon=True).start()
 

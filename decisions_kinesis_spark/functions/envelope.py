@@ -46,25 +46,3 @@ def record_data(df: DataFrame) -> DataFrame:
         F.coalesce(F.col("encryptionType"), F.lit("None")).alias("encryptionType")
     )
 
-
-def events_to_envelope(
-    events: DataFrame, stream_name: str = "events", num_shards: int = 8
-) -> DataFrame:
-    """Adapt the driver's ``events`` table to the canonical envelope.
-
-    Mapping (FIXTURES.md): props→data, ts→approximateArrivalTimestamp,
-    event_id→sequenceNumber, user_id→partitionKey.  ``shardId`` is
-    derived the way Kinesis routes: hash of the partition key modulo
-    shard count — giving a faithful shard-parallel batch stand-in.
-    """
-    return events.select(
-        F.encode(F.col("props"), "UTF-8").alias("data"),
-        F.col("user_id").cast("string").alias("partitionKey"),
-        F.col("event_id").cast("string").alias("sequenceNumber"),
-        F.col("ts").alias("approximateArrivalTimestamp"),
-        F.lit(stream_name).alias("streamName"),
-        F.format_string(
-            "shardId-%012d", F.pmod(F.xxhash64(F.col("user_id")), F.lit(num_shards))
-        ).alias("shardId"),
-        F.lit(None).cast("string").alias("encryptionType"),
-    )

@@ -27,7 +27,10 @@ except ImportError:
 
 
 def connector_options(config: KinesisQueueConfig, region: str | None = None) -> dict[str, str]:
-    """KinesisQueueConfig → connector option map.
+    """KinesisQueueConfig → connector option map, for the AWS connector
+    and the native ``dks_kinesis`` source alike (the latter reads
+    ``streamName``, ``startingposition`` and ``maxFetchRecordsPerShard``
+    and ignores the rest).
 
     Starting-position resolution mirrors C6 (KinesisThreadJobs.cs:
     533-556): a checkpoint dir always wins (Structured Streaming reads

@@ -2,10 +2,10 @@
 (Spark 4 Python DataSource API — ``pyspark.sql.datasource``).
 
 The reference IS a source/producer connector; this module re-expresses
-that surface as a *native Spark source* instead of the file-staging
-harness in ``streaming/runtime.py``.  One registration
-(``register(spark)``) provides ``format("dks_kinesis")`` with four
-faces:
+that surface as a *native Spark source*: ``streaming/runtime.consume``
+reads it with the options of ``sources/kinesis.connector_options``.
+One registration (``register(spark)``) provides ``format("dks_kinesis")``
+with four faces:
 
 - **batch reader** — two modes, auto-detected from ``path``:
   *events-adapter* (a driver ``events`` parquet → envelope, one

@@ -9,7 +9,7 @@ Streaming (SURVEY.md §3 lifecycle mapping):
   shard lease acquire/renew/release      task scheduler (exclusive tasks)
   kinesis_checkpoint table (C4-C6)       checkpointLocation offsets/commits WAL
   ShardPollInterval / BatchWaitTime      trigger(processingTime=...)
-  MaxRecordsPerRequest                   maxFilesPerTrigger / rate caps
+  MaxRecordsPerRequest                   maxFetchRecordsPerShard (per poll)
   ProcessRecordAsync decode+filter       DataFrame decode + compiled predicate
   ProcessMessage dispatch (P1)           foreachBatch handler
   at-least-once via checkpoint-after-    at-least-once via foreachBatch retry +
@@ -29,8 +29,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from decisions_kinesis_spark.config import KinesisQueueConfig
-from decisions_kinesis_spark.functions.envelope import ENVELOPE_SCHEMA
+from decisions_kinesis_spark.functions.envelope import decode_utf8
 from decisions_kinesis_spark.functions.filters import compile_payload_filters
+from decisions_kinesis_spark.sources.kinesis import connector_options
+from decisions_kinesis_spark.sources.pyds import register
 
 
 class ThrottleError(Exception):
@@ -106,26 +108,11 @@ def reset_checkpoint(checkpoint_dir: str) -> bool:
     return existed
 
 
-def read_envelope_stream(
-    spark: SparkSession,
-    path: str,
-    max_files_per_trigger: int | None = 1,
-) -> DataFrame:
-    """File-based envelope stream: the harness stand-in for the Kinesis
-    source (S1/S2).  One staged parquet file ≈ one GetRecords batch;
-    ``maxFilesPerTrigger`` plays the role of MaxRecordsPerRequest.
-    """
-    reader = spark.readStream.schema(ENVELOPE_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.parquet(path)
-
-
 def filtered_stream(stream: DataFrame, config: KinesisQueueConfig) -> DataFrame:
     """Decode + compiled payload predicate over the envelope stream —
     the D1/F1/F2 pipeline of ProcessRecordAsync (KinesisThreadJobs.cs:
     690-709) as one codegen'd projection+filter."""
-    decoded = stream.withColumn("messageText", F.decode(F.col("data"), "UTF-8"))
+    decoded = stream.withColumn("messageText", decode_utf8(F.col("data")))
     pred = compile_payload_filters(
         F.col("messageText"), config.payload_filters, config.use_or
     )
@@ -232,30 +219,29 @@ def consume(
     handler: Callable[[DataFrame, int], None],
     checkpoint_dir: str,
     trigger_interval: str | None = None,
-    max_files_per_trigger: int | None = None,
 ) -> StreamingQuery:
     """Full consumer pipeline: source → decode/filter → dispatch.
 
     The one-call equivalent of the reference's queue-enabled lifecycle
-    (SURVEY.md §3 entry point 1).  Per-trigger intake is paced by
-    ``config.max_records_per_request`` (the MaxRecordsPerRequest analog
-    — one staged file ≈ one GetRecords batch) unless overridden, so a
-    large backlog drains in bounded micro-batches instead of one
-    unbounded first batch.  Pass ``max_files_per_trigger=0`` to request
-    UNBOUNDED intake explicitly (everything available in one batch);
-    only ``None`` falls back to the config pacing.
+    (SURVEY.md §3 entry point 1).  The source is ``dks_kinesis`` over
+    the shard-log directory ``source_path``, configured by
+    ``connector_options``: ``initial_stream_position`` picks
+    TRIM_HORIZON or LATEST (C6; a checkpoint always wins),
+    ``stream_name`` fills ``streamName``, and
+    ``max_records_per_request`` caps each poll per shard
+    (``maxFetchRecordsPerShard``, the GetRecords ``Limit``).
+
+    Departure from the reference: the cap holds only for steady-state
+    polls.  The first poll after a (re)start returns the true latest
+    offset, so a backlog present at start arrives in one batch (see
+    ``pyds.KinesisShardLogStreamReader.__init__`` for why a capped
+    first poll could regress the offset WAL).
     """
-    config.require_valid()
-    if max_files_per_trigger is None:
-        pacing: int | None = config.max_records_per_request
-    elif max_files_per_trigger == 0:
-        pacing = None  # explicit unbounded intake
-    else:
-        pacing = max_files_per_trigger
-    stream = read_envelope_stream(
-        spark,
-        source_path,
-        max_files_per_trigger=pacing,
+    register(spark)
+    stream = (
+        spark.readStream.format("dks_kinesis")
+        .options(**connector_options(config))
+        .load(source_path)
     )
     return start_dispatch(
         filtered_stream(stream, config),

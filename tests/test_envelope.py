@@ -1,23 +1,29 @@
-"""Envelope operator tests (D1, D4, D5, events adapter) on sf0.001."""
+"""Envelope operator tests (D1, D4, D5) on the ``dks_kinesis`` batch read
+of sf0.001 ``events``."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from decisions_kinesis_spark.functions.envelope import (
     ENVELOPE_SCHEMA,
     decode_utf8,
-    events_to_envelope,
     record_data,
     record_metadata,
 )
+from decisions_kinesis_spark.sources.pyds import register
 from decisions_kinesis_spark.sources.tables import load_table
 
 
-def test_events_to_envelope_schema_and_roundtrip(spark, sf_dir):
+@pytest.fixture()
+def env(spark, sf_dir):
+    register(spark)
+    return spark.read.format("dks_kinesis").load(f"{sf_dir}/events.parquet")
+
+
+def test_envelope_schema_and_decode_roundtrip(spark, sf_dir, env):
     events = load_table(spark, "events", sf_dir)
-    env = events_to_envelope(events)
-    # compare names + types (literal columns come out non-nullable)
     assert [(f.name, f.dataType) for f in env.schema.fields] == [
         (f.name, f.dataType) for f in ENVELOPE_SCHEMA.fields
     ]
@@ -31,23 +37,7 @@ def test_events_to_envelope_schema_and_roundtrip(spark, sf_dir):
     assert bad == 0
 
 
-def test_shard_assignment_stable_and_bounded(spark, sf_dir):
-    env = events_to_envelope(load_table(spark, "events", sf_dir), num_shards=4)
-    shards = [r.shardId for r in env.select("shardId").distinct().collect()]
-    assert 1 <= len(shards) <= 4
-    assert all(s.startswith("shardId-") for s in shards)
-    # same partitionKey always lands on the same shard (Kinesis routing)
-    multi = (
-        env.groupBy("partitionKey")
-        .agg(F.countDistinct("shardId").alias("n"))
-        .filter(F.col("n") > 1)
-        .count()
-    )
-    assert multi == 0
-
-
-def test_record_metadata_projection(spark, sf_dir):
-    env = events_to_envelope(load_table(spark, "events", sf_dir))
+def test_record_metadata_projection(env):
     meta = record_metadata(env)
     assert meta.columns == [
         "partitionKey",
@@ -56,7 +46,6 @@ def test_record_metadata_projection(spark, sf_dir):
     ]
 
 
-def test_record_data_encryption_default(spark, sf_dir):
-    env = events_to_envelope(load_table(spark, "events", sf_dir))
+def test_record_data_encryption_default(env):
     vals = {r.encryptionType for r in record_data(env).distinct().collect()}
     assert vals == {"None"}  # KinesisUtils.cs:173 default

@@ -185,24 +185,31 @@ def test_config_json_roundtrip():
 
 def test_checkpoint_reset_restarts_from_initial(spark, sf_dir):
     from decisions_kinesis_spark.config import KinesisQueueConfig
-    from decisions_kinesis_spark.functions.envelope import events_to_envelope
+    from decisions_kinesis_spark.sources.pyds import register
     from decisions_kinesis_spark.streaming.runtime import consume, reset_checkpoint
 
     tmp = tempfile.mkdtemp(prefix="dks-reset-")
     try:
-        env = events_to_envelope(load_table(spark, "events", sf_dir))
-        env.repartition(2).write.parquet(f"{tmp}/src")
+        register(spark)
+        env = spark.read.format("dks_kinesis").load(f"{sf_dir}/events.parquet")
+        env.write.format("dks_kinesis").option("numShards", "2").mode("append").save(
+            f"{tmp}/src"
+        )
         cfg = KinesisQueueConfig(stream_name="events")
-        seen: list[int] = []
+        seen: list[tuple[str, str]] = []
 
         def handler(df, _):
-            seen.append(df.count())
+            # shard-log sequence numbers are per-shard line indexes
+            seen.extend(
+                (r.shardId, r.sequenceNumber)
+                for r in df.select("shardId", "sequenceNumber").collect()
+            )
 
         q = consume(spark, f"{tmp}/src", cfg, handler, f"{tmp}/ckpt")
         q.processAllAvailable()
         q.stop()
-        first = sum(seen)
-        assert first == env.count()
+        first = sorted(seen)
+        assert len(set(first)) == len(first) == env.count()
 
         # C5: invalidate → full redelivery from the initial position
         assert reset_checkpoint(f"{tmp}/ckpt") is True
@@ -210,7 +217,7 @@ def test_checkpoint_reset_restarts_from_initial(spark, sf_dir):
         q = consume(spark, f"{tmp}/src", cfg, handler, f"{tmp}/ckpt")
         q.processAllAvailable()
         q.stop()
-        assert sum(seen) == first
+        assert sorted(seen) == first
         assert reset_checkpoint(f"{tmp}/nonexistent") is False
     finally:
         shutil.rmtree(tmp, ignore_errors=True)

@@ -1,8 +1,10 @@
 """Streaming runtime tests (SURVEY.md §5 plan #3).
 
-File-source micro-batches over staged ``events`` slices; asserts on
-filtering, checkpoint recovery (C4-C6 analog), at-least-once
-redelivery, and the retry/backoff dispatch wrapper (P1 + R1).
+``consume()`` runs over ``dks_kinesis`` shard logs: filtering against
+the batch oracle, checkpoint recovery (C4-C6 analog), the configured
+start position and per-shard poll cap.  The dispatch wrapper (P1 + R1:
+at-least-once redelivery, retry/backoff, ordering, idempotent sink) is
+tested on a paced parquet file stream of the same envelope rows.
 """
 
 from __future__ import annotations
@@ -14,12 +16,13 @@ import pytest
 from pyspark.sql import functions as F
 
 from decisions_kinesis_spark.config import (
+    START_FROM_LATEST,
     FilterVerb,
     KinesisQueueConfig,
     PayloadFilter,
 )
-from decisions_kinesis_spark.functions.envelope import events_to_envelope
-from decisions_kinesis_spark.sources.tables import load_table
+from decisions_kinesis_spark.functions.envelope import ENVELOPE_SCHEMA
+from decisions_kinesis_spark.sources.pyds import register
 from decisions_kinesis_spark.streaming.runtime import (
     BackoffPolicy,
     ThrottleError,
@@ -27,20 +30,56 @@ from decisions_kinesis_spark.streaming.runtime import (
     consume,
     default_retryable,
     filtered_stream,
-    read_envelope_stream,
     start_dispatch,
 )
 
 
+def _envelope(spark, sf_dir):
+    register(spark)
+    return spark.read.format("dks_kinesis").load(f"{sf_dir}/events.parquet")
+
+
+def _write_logs(df, log_dir):
+    df.write.format("dks_kinesis").option("numShards", "4").mode("append").save(
+        log_dir
+    )
+
+
 @pytest.fixture()
 def staged(spark, sf_dir):
-    """Stage the envelope-mapped events as N parquet files = N batches."""
+    """Stage the envelope rows as 4 parquet files = 4 paced batches."""
     tmp = tempfile.mkdtemp(prefix="dks-stream-")
     src = f"{tmp}/source"
-    env = events_to_envelope(load_table(spark, "events", sf_dir))
+    env = _envelope(spark, sf_dir)
     env.repartition(4).write.parquet(src)
     yield tmp, src, env
     shutil.rmtree(tmp, ignore_errors=True)
+
+
+@pytest.fixture()
+def logs(spark, sf_dir):
+    """The envelope rows published to 4 ``dks_kinesis`` shard logs."""
+    tmp = tempfile.mkdtemp(prefix="dks-consume-")
+    log_dir = f"{tmp}/logs"
+    env = _envelope(spark, sf_dir)
+    _write_logs(env, log_dir)
+    yield tmp, log_dir, env
+    shutil.rmtree(tmp, ignore_errors=True)
+
+
+def _file_stream(spark, src, files_per_trigger=None):
+    reader = spark.readStream.schema(ENVELOPE_SCHEMA)
+    if files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", files_per_trigger)
+    return reader.parquet(src)
+
+
+def _keys(batch_df):
+    # shard-log sequence numbers are per-shard line indexes
+    return [
+        (r.shardId, r.sequenceNumber)
+        for r in batch_df.select("shardId", "sequenceNumber").collect()
+    ]
 
 
 def _purchase_config() -> KinesisQueueConfig:
@@ -50,8 +89,8 @@ def _purchase_config() -> KinesisQueueConfig:
     )
 
 
-def test_consume_filters_and_dispatches(spark, staged):
-    tmp, src, env = staged
+def test_consume_filters_and_dispatches(spark, logs):
+    tmp, src, env = logs
     cfg = _purchase_config()
     seen: list[int] = []
 
@@ -70,27 +109,89 @@ def test_consume_filters_and_dispatches(spark, staged):
     assert sum(seen) == expected > 0
 
 
-def test_checkpoint_no_redelivery_on_restart(spark, staged):
+def test_checkpoint_no_redelivery_on_restart(spark, logs):
     """C4 analog: a restarted query resumes after the last committed
-    batch — already-processed files are not redelivered."""
-    tmp, src, env = staged
+    batch — already-processed records are not redelivered."""
+    tmp, src, env = logs
     cfg = KinesisQueueConfig(stream_name="events")
-    counts: list[int] = []
+    keys: list[tuple[str, str]] = []
 
     def handler(batch_df, epoch_id):
-        counts.append(batch_df.count())
+        keys.extend(_keys(batch_df))
 
     q = consume(spark, src, cfg, handler, f"{tmp}/ckpt2")
     q.processAllAvailable()
     q.stop()
-    total_first = sum(counts)
-    assert total_first == env.count()
+    assert len(keys) == len(set(keys)) == env.count()
 
-    counts.clear()
+    keys.clear()
     q = consume(spark, src, cfg, handler, f"{tmp}/ckpt2")
     q.processAllAvailable()
     q.stop()
-    assert sum(counts) == 0  # nothing redelivered
+    assert keys == []  # nothing redelivered
+
+
+def test_consume_start_from_latest_skips_backlog(spark, logs):
+    """C6: START_FROM_LATEST over an existing backlog delivers nothing;
+    records published later are delivered, stamped with the configured
+    stream name."""
+    tmp, src, env = logs
+    cfg = KinesisQueueConfig(
+        stream_name="orders-feed", initial_stream_position=START_FROM_LATEST
+    )
+    rows: list = []
+
+    def handler(batch_df, epoch_id):
+        rows.extend(batch_df.select("streamName", "shardId", "sequenceNumber").collect())
+
+    q = consume(spark, src, cfg, handler, f"{tmp}/ckpt-latest")
+    try:
+        q.processAllAvailable()
+        assert rows == []  # the backlog is skipped
+        _write_logs(env.limit(50), src)
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    assert len({(r.shardId, r.sequenceNumber) for r in rows}) == len(rows) == 50
+    assert {r.streamName for r in rows} == {cfg.stream_name}
+
+
+def test_consume_caps_steady_state_polls_per_shard(spark, logs):
+    """MaxRecordsPerRequest: once the backlog has drained, a burst
+    published to one shard pages through in polls of at most
+    ``max_records_per_request`` records per shard (the first poll after
+    a start is uncapped — see ``consume``)."""
+    tmp, src, env = logs
+    cfg = KinesisQueueConfig(stream_name="events", max_records_per_request=7)
+    batches: list[list[tuple[str, str]]] = []
+    q = consume(
+        spark,
+        src,
+        cfg,
+        lambda df, _: batches.append(_keys(df)),
+        f"{tmp}/ckpt-cap",
+        trigger_interval="200 milliseconds",
+    )
+    try:
+        q.processAllAvailable()
+        n_before = len(batches)
+        burst = spark.createDataFrame(
+            [(f"b-{i}".encode(), "burst") for i in range(60)],
+            "data binary, partitionKey string",
+        )
+        _write_logs(burst, src)  # one partition key: one shard
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    flat = [k for b in batches for k in b]
+    assert len(flat) == len(set(flat)) == env.count() + 60
+    burst_batches = [b for b in batches[n_before:] if b]
+    assert sum(len(b) for b in burst_batches) == 60
+    for b in burst_batches:
+        per_shard: dict[str, int] = {}
+        for shard, _seq in b:
+            per_shard[shard] = per_shard.get(shard, 0) + 1
+        assert all(n <= cfg.max_records_per_request for n in per_shard.values())
 
 
 def test_at_least_once_redelivery_after_crash(spark, staged):
@@ -112,7 +213,7 @@ def test_at_least_once_redelivery_after_crash(spark, staged):
             crash["armed"] = False
             raise RuntimeError("simulated crash after side effect")
 
-    stream = read_envelope_stream(spark, src, max_files_per_trigger=1)
+    stream = _file_stream(spark, src, files_per_trigger=1)
     q = start_dispatch(
         stream,
         handler,
@@ -151,7 +252,7 @@ def test_retry_backoff_then_success(spark, staged):
             raise ThrottleError("throughput exceeded")
         delivered.append(batch_df.count())
 
-    stream = read_envelope_stream(spark, src, max_files_per_trigger=None)
+    stream = _file_stream(spark, src)
     q = start_dispatch(
         stream,
         flaky,
@@ -178,7 +279,7 @@ def test_non_retryable_error_fails_with_zero_sleeps(spark, staged):
         calls["n"] += 1
         raise ValueError("malformed record")
 
-    stream = read_envelope_stream(spark, src, max_files_per_trigger=None)
+    stream = _file_stream(spark, src)
     q = start_dispatch(
         stream,
         poison,
@@ -217,28 +318,6 @@ def test_default_retryable_classification():
     assert not default_retryable(ValueError("bad input"))
 
 
-def test_max_files_per_trigger_paces_batches(spark, staged):
-    """Pacing contract (≙ MaxRecordsPerRequest, KinesisMessageQueue.cs:
-    153): maxFilesPerTrigger=1 over a 4-file source must deliver in
-    exactly 4 micro-batches, each a bounded chunk."""
-    tmp, src, env = staged
-    batches: list[int] = []
-
-    def handler(df, _):
-        batches.append(df.count())
-
-    stream = read_envelope_stream(spark, src, max_files_per_trigger=1)
-    q = start_dispatch(
-        stream, handler, f"{tmp}/ckpt-pace",
-        backoff=BackoffPolicy(max_retries=0, base_delay_s=0.0),
-    )
-    q.processAllAvailable()
-    q.stop()
-    assert len(batches) == 4  # one batch per staged file
-    assert sum(batches) == env.count()
-    assert max(batches) < env.count()  # no batch swallowed the stream
-
-
 def test_ordered_batch_restores_per_shard_sequence_order(spark, staged):
     """Fidelity of the reference's per-shard ordering contract
     (KinesisThreadJobs.cs:384 foreach in GetRecords order): within each
@@ -252,7 +331,7 @@ def test_ordered_batch_restores_per_shard_sequence_order(spark, staged):
         for row in ordered_batch(batch_df).toLocalIterator():
             seen.setdefault(row.partitionKey, []).append(int(row.sequenceNumber))
 
-    stream = read_envelope_stream(spark, src, max_files_per_trigger=None)
+    stream = _file_stream(spark, src)
     q = start_dispatch(
         stream, handler, f"{tmp}/ckpt-order",
         backoff=BackoffPolicy(max_retries=0, base_delay_s=0.0),
@@ -282,7 +361,7 @@ def test_idempotent_sink_exactly_once_after_crash(spark, staged):
             crashed["yet"] = True
             raise ValueError("simulated crash after sink write")
 
-    stream = read_envelope_stream(spark, src, max_files_per_trigger=None)
+    stream = _file_stream(spark, src)
     q = start_dispatch(
         stream, crash_once_handler, f"{tmp}/ckpt-idem",
         backoff=BackoffPolicy(max_retries=0, base_delay_s=0.0),
@@ -313,7 +392,7 @@ def test_available_now_drains_and_terminates(spark, staged):
     tmp, src, env = staged
     batches: list[int] = []
 
-    stream = read_envelope_stream(spark, src, max_files_per_trigger=1)
+    stream = _file_stream(spark, src, files_per_trigger=1)
     q = start_dispatch(
         stream,
         lambda df, _: batches.append(df.count()),
@@ -367,9 +446,10 @@ def test_backoff_policy_formula():
     assert d3 == 32.0  # 40 + jitter capped
 
 
-def test_filtered_stream_is_streaming_plan(spark, staged):
-    tmp, src, env = staged
+def test_filtered_stream_is_streaming_plan(spark, tmp_path):
+    register(spark)
     cfg = _purchase_config()
-    out = filtered_stream(read_envelope_stream(spark, src), cfg)
+    stream = spark.readStream.format("dks_kinesis").load(str(tmp_path))
+    out = filtered_stream(stream, cfg)
     assert out.isStreaming
     assert "messageText" in out.columns

@@ -344,68 +344,6 @@ def test_stateful_session_windows_event_time_timeout(spark, event_stream, sf_dir
     assert len(got) > 0.9 * len(batch)
 
 
-def test_tws_v2_gate_and_processor_logic(spark, event_stream):
-    """Arbitrary-state v2 (transformWithStateInPandas): when protobuf is
-    available the streamed running counts must equal the batch
-    groupBy(user, type).count(); otherwise the module must refuse with
-    the documented gate and the processor's fold logic is exercised
-    directly against a fake state."""
-    from decisions_kinesis_spark.streaming import stateful_v2 as v2
-
-    ev, stream = event_stream
-    if v2.tws_available():
-        out = _run_to_memory(
-            spark, v2.running_type_counts_stream(stream), "tws_out", "update"
-        )
-        final = (
-            out.groupBy("user_id", "event_type")
-            .agg(F.max("n").alias("n"))
-            .collect()
-        )
-        batch = {
-            (r.user_id, r.event_type): r.n
-            for r in ev.groupBy("user_id", "event_type")
-            .agg(F.count("*").alias("n"))
-            .collect()
-        }
-        got = {(r.user_id, r.event_type): r.n for r in final}
-        assert got == batch
-    else:
-        with pytest.raises(NotImplementedError, match="protobuf"):
-            v2.running_type_counts_stream(stream)
-
-        # drive the processor fold directly with an in-memory MapState
-        class FakeMap:
-            def __init__(self):
-                self.d = {}
-
-            def containsKey(self, k):
-                return k in self.d
-
-            def getValue(self, k):
-                return self.d[k]
-
-            def updateValue(self, k, v):
-                self.d[k] = v
-
-        import pandas as pd
-
-        proc = v2.RunningTypeCounts()
-        proc._counts = FakeMap()
-        b1 = pd.DataFrame({"event_type": ["view", "view", "purchase"]})
-        b2 = pd.DataFrame({"event_type": ["view"]})
-        out1 = list(proc.handleInputRows((7,), iter([b1]), None))
-        out2 = list(proc.handleInputRows((7,), iter([b2]), None))
-        got = {
-            (int(u), t): int(n)
-            for df in out2
-            for u, t, n in zip(df.user_id, df.event_type, df.n)
-        }
-        assert proc._counts.d == {("view",): (3,), ("purchase",): (1,)}
-        assert got == {(7, "view"): 3}
-        assert len(out1) == 1 and set(out1[0].event_type) == {"view", "purchase"}
-
-
 def test_stateful_running_totals(spark, event_stream):
     ev, stream = event_stream
     out = _run_to_memory(

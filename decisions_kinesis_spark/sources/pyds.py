@@ -9,14 +9,15 @@ with four faces:
 
 - **batch reader** — two modes, auto-detected from ``path``:
   *events-adapter* (a driver ``events`` parquet → envelope, one
-  InputPartition per parquet row group, Arrow-batch emission — the
-  split-per-row-group planning a real connector uses) and *shard-log*
-  (a directory of append-only per-shard JSONL logs, one InputPartition
-  per shard — S3 partition planning, KinesisThreadJobs.cs:201-218).
+  InputPartition per parquet row group — the split-per-row-group
+  planning a real connector uses) and *shard-log* (a directory of
+  append-only per-shard JSONL logs, one InputPartition per shard file —
+  S3 partition planning, KinesisThreadJobs.cs:201-218).
   Implements Spark 4.1 ``pushFilters`` for ``shardId``/``partitionKey``
   equality: in shard-log mode a pushed ``shardId`` prunes whole shard
-  files (partition pruning); in events mode it becomes a source-side
-  row mask applied before rows ever cross into the JVM.
+  files (partition pruning) and a pushed ``partitionKey`` is an Arrow
+  filter on each batch; in events mode both become a source-side row
+  mask applied before rows ever cross into the JVM.
 - **streaming reader** — per-shard offsets (``{shard: record_count}``),
   starting-position resolution TRIM_HORIZON/LATEST (C6,
   KinesisThreadJobs.cs:533-556; a checkpoint always wins because
@@ -30,10 +31,11 @@ with four faces:
   KinesisCheckPointer.cs:97-159) — ``commit()`` here is a no-op by
   design.
 - **batch writer** — the P2 producer (KinesisMessageQueueImpl.cs:
-  99-126) as a transactional sink: tasks stage records, the
-  driver-side ``commit()`` routes each record to its shard by the
-  MD5-of-partition-key ring (the documented Kinesis routing) and
-  appends to the shard logs; sequence numbers are *assigned by the
+  99-126) as a transactional sink: each task routes its records to
+  shards by the MD5-of-partition-key ring (the documented Kinesis
+  routing) and stages one file per shard it touched, already in the
+  log's line format; the driver-side ``commit()`` appends the staged
+  bytes to the shard logs.  Sequence numbers are *assigned by the
   sink at commit* (implied line index), mirroring the service-side
   sequence assignment of PutRecord.  ``abort()`` discards staging —
   no partial publish.
@@ -44,41 +46,60 @@ with four faces:
 Shard-log format (harness contract, shared with the tests): files
 ``shardId-%012d.jsonl``; one JSON object per line with keys ``pk``
 (partition key), ``data`` (payload text; payloads here are UTF-8 JSON,
-so bytes round-trip through UTF-8), ``ts`` (ISO event-arrival
+so bytes round-trip through UTF-8), ``ts`` (ISO 8601 event-arrival
 timestamp).  A record's sequence number is its zero-based line index
 formatted ``%020d`` — append-only logs make this stable and total
-per shard, like Kinesis sequence numbers within a shard.
+per shard, like Kinesis sequence numbers within a shard.  The writers
+write ``ts`` in UTC with an explicit ``+00:00``.  The reader takes a
+stamp with an offset as that exact instant and a naive stamp as UTC,
+the convention the events-mode reader uses for its naive Arrow
+timestamps.  (Reading a naive stamp in the worker's OS time zone, as
+row-at-a-time conversion did, would make the value depend on the
+host; only naive-stamped logs read on a non-UTC host see the
+difference.)
 
-Scale posture: partitions are row groups (events mode) or shards
-(log mode), so parallelism tracks the physical layout; the reader
-emits Arrow RecordBatches (no per-row Python cost on the batch path);
-the streaming reader's offset math is O(|shards|) per poll with a
-(size, mtime)-keyed count cache so an unchanged shard file is never
-re-read.
+Partition planning: the batch reader has one partition per row group
+or shard file.  The streaming reader packs each micro-batch's
+per-shard slices, whole and in shard order, into partitions of at
+least ``_BATCH_RECORDS`` records, so a tail batch of a few hundred
+records per shard is one task instead of one per shard (a task's
+fixed cost — launch, the Python worker round trip — dwarfs a few
+hundred records).  A slice is never split, so per-shard order holds,
+and a slice of ``_BATCH_RECORDS`` or more keeps its own task.
+
+Every path is columnar: shard-log slices are parsed by
+``pyarrow.json`` into Arrow RecordBatches of at most
+``_BATCH_RECORDS`` lines; the events adapter emits its row groups'
+Arrow batches; both writers take Arrow batches, hash each distinct
+partition key once, and build log lines with Arrow string kernels; the
+commit copies staged bytes and parses no record.  The streaming
+reader's offset math is O(|shards|) per poll with a (size,
+mtime)-keyed count cache so an unchanged shard file is never re-read.
 """
 
 from __future__ import annotations
 
 import hashlib
-import itertools
 import json
 import os
+import shutil
 import uuid
 from dataclasses import dataclass
-from datetime import datetime
 from typing import Iterator
 
+import numpy as np
 from pyspark.sql.datasource import (
     DataSource,
+    DataSourceArrowWriter,
     DataSourceReader,
+    DataSourceStreamArrowWriter,
     DataSourceStreamReader,
-    DataSourceStreamWriter,
     DataSourceWriter,
     EqualTo,
     InputPartition,
     WriterCommitMessage,
 )
-from pyspark.sql.types import Row, StructType
+from pyspark.sql.types import StructType
 
 from decisions_kinesis_spark.functions.envelope import ENVELOPE_SCHEMA
 
@@ -86,6 +107,12 @@ _ENVELOPE_NAMES = [f.name for f in ENVELOPE_SCHEMA.fields]
 _SHARD_FMT = "shardId-%012d"
 _STAGING = "_staging"
 _COMMITS = "_commits"
+# records per Arrow batch on every read path, and the least records a
+# packed streaming partition holds
+_BATCH_RECORDS = 16384
+_READ_BYTES = 1 << 22  # shard-log read chunk
+# a trailing UTC offset on an ISO 8601 stamp
+_OFFSET_RE = r"(Z|[+-]\d\d:?\d\d)$"
 
 
 def shard_file(shard_num: int) -> str:
@@ -122,11 +149,12 @@ class _RowGroupPartition(InputPartition):
         self.row_group = row_group
 
 
-class _ShardFilePartition(InputPartition):
-    def __init__(self, path: str, start: int = 0, end: int | None = None):
-        self.path = path
-        self.start = start
-        self.end = end
+class _ShardSlices(InputPartition):
+    """Whole shard-log slices ``(path, start, end)``, read in order;
+    ``end=None`` reads to the end of the file."""
+
+    def __init__(self, slices: list[tuple[str, int, int | None]]):
+        self.slices = slices
 
 
 def _list_shard_files(path: str) -> list[str]:
@@ -137,24 +165,117 @@ def _list_shard_files(path: str) -> list[str]:
     )
 
 
-def _shardlog_rows(
-    path: str, start: int, end: int | None, stream_name: str
-) -> Iterator[tuple]:
-    """Envelope tuples for one shard-log slice [start, end)."""
-    shard_id = os.path.basename(path)[: -len(".jsonl")]
+def _line_blocks(
+    path: str, start: int, end: int | None
+) -> Iterator[tuple[int, int, bytes]]:
+    """``(first line index, line count, bytes)`` blocks that cover lines
+    [start, end) of a shard log, each at most ``_BATCH_RECORDS`` lines.
+    ``end=None`` reads to EOF, an unterminated last line included."""
+    if end is not None and end <= start:
+        return
+    line, carry = 0, b""  # carry: the unterminated tail of the last chunk
     with open(path, "rb") as f:
-        for idx, line in enumerate(itertools.islice(f, start, end), start):
-            rec = json.loads(line)
-            ts = rec.get("ts")
-            yield (
-                rec["data"].encode("utf-8"),
-                rec.get("pk"),
-                "%020d" % idx,
-                datetime.fromisoformat(ts) if ts else None,
-                stream_name,
-                shard_id,
-                None,
+        while end is None or line < end:
+            chunk = f.read(_READ_BYTES)
+            if not chunk:
+                if carry and end is None and line >= start:
+                    yield line, 1, carry
+                return
+            buf = carry + chunk if carry else chunk
+            n = buf.count(b"\n")
+            if n == 0 or line + n <= start:  # no wanted line ends here
+                carry = buf[buf.rfind(b"\n") + 1 :]
+                line += n
+                continue
+            ends = np.flatnonzero(np.frombuffer(buf, np.uint8) == 0x0A) + 1
+            hi = n if end is None else min(n, end - line)
+            for a in range(max(start - line, 0), hi, _BATCH_RECORDS):
+                b = min(a + _BATCH_RECORDS, hi)
+                yield line + a, b - a, buf[ends[a - 1] if a else 0 : ends[b - 1]]
+            carry = buf[ends[-1] :]
+            line += n
+
+
+def _utc_micros(ts):
+    """Shard-log ``ts`` strings as naive UTC microseconds, the form
+    Spark's Arrow bridge reads as an instant: a stamp with an offset is
+    that instant, a naive stamp is taken as UTC, and a missing or empty
+    one is NULL."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    aware = pa.timestamp("us", "UTC")
+    try:  # every stamp carries an offset: what the writers produce
+        return pc.cast(ts, aware).cast(pa.timestamp("us"))
+    except pa.ArrowInvalid:
+        pass
+    null = pa.scalar(None, pa.string())
+    ts = pc.if_else(pc.equal(ts, ""), null, ts)
+    has_offset = pc.match_substring_regex(ts, _OFFSET_RE)
+    naive = pc.cast(pc.if_else(has_offset, null, ts), pa.timestamp("us"))
+    offset = pc.cast(pc.if_else(has_offset, ts, null), aware)
+    return pc.coalesce(offset.cast(pa.timestamp("us")), naive)
+
+
+def _slice_batches(
+    path: str,
+    start: int,
+    end: int | None,
+    stream_name: str,
+    pk_eq: str | None = None,
+):
+    """Envelope RecordBatches for one shard-log slice [start, end).
+
+    A line that is not a JSON object fails, and so does one without a
+    non-null string ``data``; a missing ``pk`` or ``ts`` reads as NULL.
+    ``pk_eq`` keeps only the records with that partition key."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.json as pj
+
+    shard_id = os.path.basename(path)[: -len(".jsonl")]
+    parse = pj.ParseOptions(
+        explicit_schema=pa.schema(
+            [("pk", pa.string()), ("data", pa.string()), ("ts", pa.string())]
+        ),
+        unexpected_field_behavior="ignore",
+    )
+    for first, n, block in _line_blocks(path, start, end):
+        where = f"{path} lines [{first}, {first + n})"
+        try:
+            table = pj.read_json(
+                pa.BufferReader(block),
+                read_options=pj.ReadOptions(
+                    use_threads=False, block_size=len(block) + 1
+                ),
+                parse_options=parse,
             )
+        except pa.ArrowInvalid as exc:
+            raise ValueError(f"{where}: {exc}") from exc
+        if table.num_rows != n:  # a blank line, or two objects on one
+            raise ValueError(f"{where}: {table.num_rows} JSON objects")
+        data = table.column("data").combine_chunks()
+        if data.null_count:
+            raise ValueError(f"{where}: a record has no 'data'")
+        seq = pc.utf8_lpad(
+            pc.cast(pa.array(np.arange(first, first + n)), pa.string()), 20, "0"
+        )
+        batch = pa.RecordBatch.from_arrays(
+            [
+                pc.cast(data, pa.binary()),
+                table.column("pk").combine_chunks(),
+                seq,
+                _utc_micros(table.column("ts").combine_chunks()),
+                pa.repeat(stream_name, n),
+                pa.repeat(shard_id, n),
+                pa.nulls(n, pa.string()),
+            ],
+            names=_ENVELOPE_NAMES,
+        )
+        if pk_eq is not None:
+            batch = batch.filter(pc.equal(batch.column(1), pk_eq))
+        if batch.num_rows:
+            yield batch
 
 
 class KinesisEnvelopeReader(DataSourceReader):
@@ -164,7 +285,7 @@ class KinesisEnvelopeReader(DataSourceReader):
         self.path = options["path"]
         self.num_shards = int(_opt(options, "numShards", "8"))
         self.stream_name = _opt(options, "streamName", "events")
-        self.batch_size = int(_opt(options, "batchSize", "16384"))
+        self.batch_size = int(_opt(options, "batchSize", str(_BATCH_RECORDS)))
         self.events_mode = self.path.endswith(".parquet")
         # pushed predicates (Spark 4.1 pushFilters)
         self.shard_eq: int | None = None
@@ -239,21 +360,18 @@ class KinesisEnvelopeReader(DataSourceReader):
         if self.shard_eq is not None:  # partition pruning on pushed shard
             want = shard_file(self.shard_eq)
             files = [p for p in files if os.path.basename(p) == want]
-        return [_ShardFilePartition(p) for p in files]
+        return [_ShardSlices([(p, 0, None)]) for p in files]
 
     def read(self, partition):
-        if isinstance(partition, _ShardFilePartition):
-            for row in _shardlog_rows(
-                partition.path, partition.start, partition.end, self.stream_name
-            ):
-                if self.pk_eq is not None and row[1] != self.pk_eq:
-                    continue
-                yield row
+        if isinstance(partition, _ShardSlices):
+            for path, start, end in partition.slices:
+                yield from _slice_batches(
+                    path, start, end, self.stream_name, self.pk_eq
+                )
             return
         yield from self._read_events(partition)
 
     def _read_events(self, partition):
-        import numpy as np
         import pyarrow as pa
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
@@ -336,7 +454,12 @@ class KinesisShardLogStreamReader(DataSourceStreamReader):
     paging loop as KinesisThreadJobs.cs:326-440 with Spark's WAL
     playing the checkpoint table (C4).  The cap is a steady-state rate
     limit: the first poll of a reader instance returns the true latest
-    (see ``__init__`` for why a capped first poll would be unsafe)."""
+    (see ``__init__`` for why a capped first poll would be unsafe).
+
+    The reference runs one GetRecords loop per leased shard
+    (KinesisThreadJobs.cs:201-218); ``partitions`` instead packs a
+    micro-batch's per-shard slices into record-sized tasks (see the
+    module docstring), keeping each slice whole and in order."""
 
     def __init__(self, options):
         self.path = options["path"]
@@ -412,21 +535,29 @@ class KinesisShardLogStreamReader(DataSourceStreamReader):
                 base.get(shard, 0), start.get(shard, 0), end.get(shard, 0)
             )
         self._poll_base = base
-        parts = []
+        # pack whole slices, in shard order, into partitions of at least
+        # _BATCH_RECORDS records; a slice that size or larger goes alone
+        parts, group, size = [], [], 0
         for shard, hi in sorted(end.items()):
             lo = start.get(shard, 0)
-            if hi > lo:
-                parts.append(
-                    _ShardFilePartition(
-                        os.path.join(self.path, shard + ".jsonl"), lo, hi
-                    )
-                )
+            if hi <= lo:
+                continue
+            piece = (os.path.join(self.path, shard + ".jsonl"), lo, hi)
+            if hi - lo >= _BATCH_RECORDS:
+                parts.append(_ShardSlices([piece]))
+                continue
+            group.append(piece)
+            size += hi - lo
+            if size >= _BATCH_RECORDS:
+                parts.append(_ShardSlices(group))
+                group, size = [], 0
+        if group:
+            parts.append(_ShardSlices(group))
         return parts
 
     def read(self, partition):
-        yield from _shardlog_rows(
-            partition.path, partition.start, partition.end, self.stream_name
-        )
+        for path, start, end in partition.slices:
+            yield from _slice_batches(path, start, end, self.stream_name)
 
     def commit(self, end: dict) -> None:
         # C4 is Spark's offset WAL; the log is append-only, nothing to trim
@@ -442,30 +573,80 @@ class KinesisShardLogStreamReader(DataSourceStreamReader):
 
 
 @dataclass
-class _StagedFile(WriterCommitMessage):
-    path: str
-    count: int
+class _StagedShards(WriterCommitMessage):
+    files: list[tuple[int, str]]  # (shard, staged file), shard order
 
 
-def _row_payload(row: Row) -> tuple[str, str, str | None]:
-    d = row.asDict()
-    data = d.get("data")
-    if data is None:
+def _json_strings(arr):
+    """JSON string literals of a non-null string array, as
+    ``json.dumps(s, ensure_ascii=False)`` writes them."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    if pc.any(pc.match_substring_regex(arr, "[\\x00-\\x1f]")).as_py():
+        # control characters take per-character escapes: rare, so the
+        # whole batch goes through the json module
+        enc = json.encoder.encode_basestring
+        return pa.array([enc(s) for s in arr.to_pylist()], pa.string())
+    esc = pc.replace_substring(pc.replace_substring(arr, "\\", "\\\\"), '"', '\\"')
+    return pc.binary_join_element_wise('"', esc, '"', "")
+
+
+def _log_lines(batch, num_shards: int):
+    """Shard-log lines (``\\n``-terminated) of one writer batch, and each
+    line's shard.  Keys are hashed and JSON-encoded once per distinct
+    key (dictionary encoding)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    names = batch.schema.names
+    if "data" not in names or batch.column("data").null_count:
         raise ValueError("writer rows need a 'data' column")
-    if isinstance(data, (bytes, bytearray)):
-        data = bytes(data).decode("utf-8")
-    pk = d.get("partitionKey")
-    pk = "" if pk is None else str(pk)
-    ts = d.get("approximateArrivalTimestamp") or d.get("ts")
-    return str(data), pk, (ts.isoformat() if ts is not None else None)
+    data = batch.column("data").cast(pa.string())  # validates UTF-8
+    n = batch.num_rows
+    pk = (
+        batch.column("partitionKey").cast(pa.string()).fill_null("")
+        if "partitionKey" in names
+        else pa.repeat("", n)
+    ).dictionary_encode()
+    keys = pk.dictionary.to_pylist()
+    key_shard = np.array([route_md5(k, num_shards) for k in keys], np.int64)
+    ts = None
+    for name in ("approximateArrivalTimestamp", "ts"):
+        if name in names:  # UTC microseconds whatever the session zone
+            col = batch.column(name).cast(pa.timestamp("us"))
+            ts = col if ts is None else pc.coalesce(ts, col)
+    ts_json = "null"
+    if ts is not None:  # 'YYYY-MM-DD hh:mm:ss.ffffff' → ISO 8601 in UTC
+        stamp = pc.replace_substring(pc.cast(ts, pa.string()), " ", "T", max_replacements=1)
+        ts_json = pc.binary_join_element_wise('"', stamp, '+00:00"', "").fill_null("null")
+    lines = pc.binary_join_element_wise(
+        '{"pk": ',
+        _json_strings(pk.dictionary).take(pk.indices),
+        ', "data": ',
+        _json_strings(data),
+        ', "ts": ',
+        ts_json,
+        "}\n",
+        "",
+    )
+    return lines, key_shard[pk.indices.to_numpy(zero_copy_only=False)]
 
 
-class KinesisShardLogWriter(DataSourceWriter):
-    """Transactional producer: stage per task, route + append at commit.
+def _utf8_bytes(arr) -> memoryview:
+    """The concatenated bytes of a string array, without a copy."""
+    offsets = np.frombuffer(arr.buffers()[1], np.int32, len(arr) + 1, 4 * arr.offset)
+    return memoryview(arr.buffers()[2])[offsets[0] : offsets[-1]]
+
+
+class KinesisShardLogWriter(DataSourceArrowWriter):
+    """Transactional producer: route and stage per task, append at commit.
 
     Mirrors PutRecord (KinesisMessageQueueImpl.cs:99-126): the record
     carries (PartitionKey, Data); the *service* assigns shard (MD5
-    ring) and sequence number — here the driver-side commit does both,
+    ring) and sequence number — here each task routes its records into
+    one staged file per shard, and the driver-side commit appends the
+    staged files in task order, which assigns the sequence numbers,
     atomically for the whole job.  ``abort`` leaves the logs untouched."""
 
     def __init__(self, options, overwrite: bool = False):
@@ -474,24 +655,26 @@ class KinesisShardLogWriter(DataSourceWriter):
         self.overwrite = overwrite
 
     # -- executor side -----------------------------------------------------
-    def write(self, iterator: Iterator[Row]) -> _StagedFile:
+    def write(self, iterator) -> _StagedShards:
+        import pyarrow as pa
+
         staging = os.path.join(self.path, _STAGING)
         os.makedirs(staging, exist_ok=True)
-        out = os.path.join(staging, uuid.uuid4().hex + ".jsonl")
-        n = 0
-        with open(out, "w", encoding="utf-8") as f:
-            for row in iterator:
-                data, pk, ts = _row_payload(row)
-                shard = route_md5(pk, self.num_shards)
-                f.write(
-                    json.dumps(
-                        {"shard": shard, "pk": pk, "data": data, "ts": ts},
-                        ensure_ascii=False,
-                    )
-                    + "\n"
-                )
-                n += 1
-        return _StagedFile(path=out, count=n)
+        stem = os.path.join(staging, uuid.uuid4().hex)
+        staged: dict[int, object] = {}
+        try:
+            for batch in iterator:
+                lines, shards = _log_lines(batch, self.num_shards)
+                for shard in np.unique(shards).tolist():
+                    fh = staged.get(shard)
+                    if fh is None:
+                        fh = open(f"{stem}-{shard}.jsonl", "wb")  # noqa: SIM115
+                        staged[shard] = fh
+                    fh.write(_utf8_bytes(lines.filter(pa.array(shards == shard))))
+        finally:
+            for fh in staged.values():
+                fh.close()
+        return _StagedShards([(s, fh.name) for s, fh in sorted(staged.items())])
 
     # -- driver side -------------------------------------------------------
     def _apply(self, messages, fsync: bool = False) -> None:
@@ -501,21 +684,15 @@ class KinesisShardLogWriter(DataSourceWriter):
         appenders: dict[int, object] = {}
         try:
             for msg in messages:
-                if msg is None or msg.count == 0:
-                    continue
-                with open(msg.path, encoding="utf-8") as f:
-                    for line in f:
-                        rec = json.loads(line)
-                        shard = rec.pop("shard")
-                        fh = appenders.get(shard)
-                        if fh is None:
-                            fh = open(  # noqa: SIM115 - pooled, closed below
-                                os.path.join(self.path, shard_file(shard)),
-                                "a",
-                                encoding="utf-8",
-                            )
-                            appenders[shard] = fh
-                        fh.write(json.dumps(rec, ensure_ascii=False) + "\n")
+                for shard, path in msg.files if msg is not None else ():
+                    fh = appenders.get(shard)
+                    if fh is None:
+                        fh = open(  # noqa: SIM115 - pooled, closed below
+                            os.path.join(self.path, shard_file(shard)), "ab"
+                        )
+                        appenders[shard] = fh
+                    with open(path, "rb") as src:
+                        shutil.copyfileobj(src, fh)
         finally:
             for fh in appenders.values():
                 if fsync:
@@ -530,8 +707,9 @@ class KinesisShardLogWriter(DataSourceWriter):
 
     def _clean_staging(self, messages) -> None:
         for msg in messages:
-            if msg is not None and os.path.exists(msg.path):
-                os.remove(msg.path)
+            for _, path in msg.files if msg is not None else ():
+                if os.path.exists(path):
+                    os.remove(path)
         staging = os.path.join(self.path, _STAGING)
         if os.path.isdir(staging) and not os.listdir(staging):
             os.rmdir(staging)
@@ -543,7 +721,7 @@ class KinesisShardLogWriter(DataSourceWriter):
         self._clean_staging(messages)
 
 
-class KinesisShardLogStreamWriter(DataSourceStreamWriter):
+class KinesisShardLogStreamWriter(DataSourceStreamArrowWriter):
     """Streaming producer with idempotent epoch commit: per ``batchId``,
     a pre-append MANIFEST (the byte size of every shard log before this
     epoch touched it, written via atomic rename) plus a post-append
@@ -582,7 +760,7 @@ class KinesisShardLogStreamWriter(DataSourceStreamWriter):
         self._inner = KinesisShardLogWriter(options, overwrite=False)
         self.path = self._inner.path
 
-    def write(self, iterator: Iterator[Row]) -> _StagedFile:
+    def write(self, iterator) -> _StagedShards:
         return self._inner.write(iterator)
 
     def _log_sizes(self) -> dict[str, int]:

@@ -16,16 +16,18 @@ import json
 import os
 import shutil
 import tempfile
-from datetime import datetime
+from datetime import datetime, timezone
 
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.datasource import EqualTo, IsNotNull
 
 from decisions_kinesis_spark.sources.pyds import (
     KinesisEnvelopeReader,
+    KinesisShardLogStreamReader,
     KinesisShardLogStreamWriter,
-    _shardlog_rows,
+    _slice_batches,
     register,
     route_md5,
     shard_file,
@@ -128,32 +130,164 @@ def log_dir():
     shutil.rmtree(tmp, ignore_errors=True)
 
 
+def _slice_rows(path, start, end, stream_name="s"):
+    return [
+        tuple(r.values())
+        for batch in _slice_batches(path, start, end, stream_name)
+        for r in batch.to_pylist()
+    ]
+
+
 def test_shardlog_slice_rows(log_dir):
-    """``_shardlog_rows(path, start, end)`` yields exactly lines
-    [start, end) of the log, sequence number = zero-based line index."""
+    """The Arrow slice reader yields exactly lines [start, end) of the
+    log, sequence number = zero-based line index.  Naive stamps read as
+    UTC, offset stamps as their instant, a missing ``ts`` or ``pk`` as
+    NULL, and non-ASCII ``data`` as its UTF-8 bytes."""
     recs = [
         {"data": json.dumps({"i": i, "s": f"é{i}"}, ensure_ascii=False),
          "pk": str(i % 3), "ts": f"2024-01-01T00:00:{i:02d}"}
         for i in range(12)
     ]
+    recs[2]["ts"] = "2024-01-01T01:00:02+00:00"
+    recs[4]["ts"] = "2024-01-01T03:00:04.250000+02:00"
+    del recs[6]["ts"]
+    recs[7]["pk"] = None
+    recs[9]["data"] = "naïve ✓ \u6f22\u5b57 \U0001f600"
     path = os.path.join(log_dir, "shardId-000000000001.jsonl")
     with open(path, "w", encoding="utf-8") as f:
         for rec in recs:
             f.write(json.dumps(rec, ensure_ascii=False) + "\n")
+
+    def instant(ts):  # the instant as naive UTC, what Spark reads
+        if ts is None:
+            return None
+        t = datetime.fromisoformat(ts)
+        if t.tzinfo is None:
+            return t
+        return t.astimezone(timezone.utc).replace(tzinfo=None)
+
     want = [
         (
             rec["data"].encode("utf-8"),
             rec["pk"],
             "%020d" % i,
-            datetime.fromisoformat(rec["ts"]),
+            instant(rec.get("ts")),
             "s",
             "shardId-000000000001",
             None,
         )
         for i, rec in enumerate(recs)
     ]
+    assert want[4][3] == datetime(2024, 1, 1, 1, 0, 4, 250000)
     for start, end in [(0, None), (0, 5), (5, 9), (9, None), (11, 12), (12, None), (3, 3)]:
-        assert list(_shardlog_rows(path, start, end, "s")) == want[start:end]
+        assert _slice_rows(path, start, end) == want[start:end]
+
+
+def test_shardlog_slice_chunk_and_batch_boundaries(log_dir, monkeypatch):
+    """Slices read the same whatever the read chunk and batch cap: lines
+    that straddle chunks, batches of at most the cap, and an
+    unterminated last line (read only when reading to EOF)."""
+    from decisions_kinesis_spark.sources import pyds
+
+    path = os.path.join(log_dir, "shardId-000000000003.jsonl")
+    with open(path, "w", encoding="utf-8") as f:
+        for i in range(10):
+            f.write(json.dumps({"pk": str(i), "data": "x" * i}) + "\n")
+        f.write('{"pk": "tail", "data": "no newline"}')
+    cases = [(0, None), (0, 10), (3, 7), (9, 10), (10, None), (4, 4)]
+    want = {c: _slice_rows(path, *c) for c in cases}
+    assert [r[1] for r in want[(0, None)]] == [str(i) for i in range(10)] + ["tail"]
+    assert len(want[(0, 10)]) == 10 and len(want[(3, 7)]) == 4
+    for read_bytes, cap in [(1, 1), (7, 3), (40, 2), (64, 16384)]:
+        monkeypatch.setattr(pyds, "_READ_BYTES", read_bytes)
+        monkeypatch.setattr(pyds, "_BATCH_RECORDS", cap)
+        for c in cases:
+            batches = list(_slice_batches(path, *c, "s"))
+            assert all(b.num_rows <= cap for b in batches)
+            assert [tuple(r.values()) for b in batches for r in b.to_pylist()] == want[c]
+
+
+@pytest.mark.parametrize(
+    "bad",
+    [{"pk": "1"}, {"pk": "1", "data": None}, ["not", "an", "object"]],
+    ids=["missing-data", "null-data", "not-an-object"],
+)
+def test_shardlog_slice_bad_line_raises(log_dir, bad):
+    """A line without non-null ``data``, or one that is not a JSON
+    object, fails the read and names the shard file."""
+    path = os.path.join(log_dir, "shardId-000000000002.jsonl")
+    with open(path, "w", encoding="utf-8") as f:
+        f.write(json.dumps({"pk": "0", "data": "ok"}) + "\n")
+        f.write(json.dumps(bad) + "\n")
+    assert len(_slice_rows(path, 0, 1)) == 1
+    with pytest.raises(ValueError, match="shardId-000000000002"):
+        _slice_rows(path, 0, None)
+
+
+def test_stream_partitions_pack_whole_slices(log_dir):
+    """``partitions(start, end)`` packs whole per-shard slices, in shard
+    order, into partitions of at least 16384 records; a slice that size
+    or larger goes alone, empty slices are dropped, none is split."""
+    reader = KinesisShardLogStreamReader({"path": log_dir})
+    stems = ["shardId-%012d" % i for i in range(8)]
+
+    def plan(start, end):
+        parts = reader.partitions(start, end)
+        got = [
+            [(os.path.basename(p)[: -len(".jsonl")], lo, hi) for p, lo, hi in part.slices]
+            for part in parts
+        ]
+        # no slice is split, lost or repeated: the slices are exactly
+        # the non-empty [start, end) ranges
+        flat = [s for part in got for s in part]
+        want = [
+            (s, start.get(s, 0), end[s]) for s in sorted(end) if end[s] > start.get(s, 0)
+        ]
+        assert sorted(flat) == want
+        return got
+
+    tail = plan({s: 1000 for s in stems}, {s: 1400 for s in stems})
+    assert len(tail) == 1 and [s for s, _, _ in tail[0]] == stems
+
+    backlog = plan({}, {s: 12_500 for s in stems})
+    assert [[s for s, _, _ in part] for part in backlog] == [
+        stems[i : i + 2] for i in range(0, 8, 2)
+    ]
+    assert [sum(hi - lo for _, lo, hi in part) for part in backlog] == [25_000] * 4
+
+    mixed = plan(
+        {stems[1]: 300, stems[2]: 700},
+        {stems[0]: 400, stems[1]: 300, stems[2]: 50_700, stems[3]: 400},
+    )
+    assert [(stems[2], 700, 50_700)] in mixed  # a large slice alone
+    assert [(stems[0], 0, 400), (stems[3], 0, 400)] in mixed
+    assert len(mixed) == 2  # the empty stems[1] slice is dropped
+
+
+def test_stream_tail_batch_is_one_partition(spark, log_dir):
+    """End to end: a micro-batch of a few hundred records on each of 8
+    shards runs as ONE partition, not one per shard."""
+    for i in range(8):
+        with open(os.path.join(log_dir, shard_file(i)), "w", encoding="utf-8") as f:
+            for j in range(300):
+                f.write(json.dumps({"pk": f"{i}-{j}", "data": f"d{j}"}) + "\n")
+    seen: list[tuple[int, int]] = []
+
+    def handle(df, epoch_id):
+        seen.append((df.rdd.getNumPartitions(), df.count()))
+
+    q = (
+        spark.readStream.format("dks_kinesis")
+        .option("path", log_dir)
+        .load()
+        .writeStream.foreachBatch(handle)
+        .option("checkpointLocation", os.path.join(log_dir, "_ckpt"))
+        .start()
+    )
+    q.processAllAvailable()
+    q.stop()
+    q.awaitTermination(30)
+    assert seen == [(1, 2400)]
 
 
 def test_writer_roundtrip(spark, sf_dir, log_dir):
@@ -186,6 +320,57 @@ def test_writer_roundtrip(spark, sf_dir, log_dir):
     ts_src = {r["approximateArrivalTimestamp"] for r in env.collect()}
     ts_got = {r["approximateArrivalTimestamp"] for r in got_rows}
     assert ts_got == ts_src
+    # written in UTC with an explicit offset, read back as the same
+    # instants (collect() gives naive datetimes in the local zone)
+    stamps = [
+        json.loads(line)["ts"]
+        for f in os.listdir(log_dir)
+        if f.endswith(".jsonl")
+        for line in open(os.path.join(log_dir, f), encoding="utf-8")
+    ]
+    assert stamps and all(t.endswith("+00:00") for t in stamps)
+    assert {
+        datetime.fromisoformat(t).astimezone().replace(tzinfo=None) for t in stamps
+    } == ts_src
+
+
+def test_writer_lines_match_json_dumps():
+    """The Arrow writer's lines are exactly what ``json.dumps`` writes for
+    ``{"pk", "data", "ts"}`` (ensure_ascii=False, ``ts`` in UTC with
+    ``+00:00``), and each record goes to its MD5-ring shard."""
+    from decisions_kinesis_spark.sources.pyds import _log_lines
+
+    data = ['{"k": "50"}', 'quote " and back\\slash', "é ✓ \u2028 \U0001f600", "", "x"]
+    pks = ["7", None, "7", "ü", "a\"b"]
+    stamps = [0, 1_700_000_000_123_456, None, 1_500_000, 86_400_000_000]
+    for ctl in (False, True):  # control characters take the json-module path
+        d = data + (["tab\tnl\nnul\x00"] if ctl else ["plain"])
+        k = pks + ["k"]
+        t = stamps + [None]
+        batch = pa.record_batch(
+            {
+                "data": pa.array([x.encode("utf-8") for x in d], pa.binary()),
+                "partitionKey": pa.array(k, pa.string()),
+                "approximateArrivalTimestamp": pa.array(t, pa.timestamp("us", "UTC")),
+            }
+        )
+        lines, shards = _log_lines(batch, N_SHARDS)
+        want = [
+            json.dumps(
+                {
+                    "pk": pk or "",
+                    "data": x,
+                    "ts": None if us is None else datetime.fromtimestamp(
+                        us / 1e6, timezone.utc
+                    ).strftime("%Y-%m-%dT%H:%M:%S.%f+00:00"),
+                },
+                ensure_ascii=False,
+            )
+            + "\n"
+            for x, pk, us in zip(d, k, t)
+        ]
+        assert lines.to_pylist() == want
+        assert shards.tolist() == [route_md5(pk or "", N_SHARDS) for pk in k]
 
 
 def test_writer_overwrite_truncates(spark, sf_dir, log_dir):
@@ -355,17 +540,26 @@ def test_stream_rate_cap_per_shard(spark, sf_dir, log_dir):
         assert all(n <= 7 for n in per_shard.values())
 
 
+def _records(data, keys):
+    """One writer batch: ``data`` payloads with ``str(key)`` partition
+    keys, the Arrow form Spark hands a DataSourceArrowWriter."""
+    return pa.record_batch(
+        {
+            "data": pa.array(data, pa.string()),
+            "partitionKey": pa.array([str(k) for k in keys], pa.string()),
+        }
+    )
+
+
 def test_stream_writer_epoch_idempotent(log_dir):
     writer = KinesisShardLogStreamWriter(
         {"path": log_dir, "numshards": str(N_SHARDS)}
     )
-    from pyspark.sql.types import Row
 
     def stage(n):
-        rows = iter(
-            Row(data=f"payload-{i}", partitionKey=str(i)) for i in range(n)
+        return writer.write(
+            iter([_records([f"payload-{i}" for i in range(n)], range(n))])
         )
-        return writer.write(rows)
 
     msg = stage(10)
     writer.commit([msg], batchId=7)
@@ -392,9 +586,7 @@ def test_writer_abort_leaves_no_partial(log_dir):
     writer = KinesisShardLogStreamWriter(
         {"path": log_dir, "numshards": str(N_SHARDS)}
     )
-    from pyspark.sql.types import Row
-
-    msg = writer.write(iter([Row(data="x", partitionKey="1")]))
+    msg = writer.write(iter([_records(["x"], [1])]))
     writer.abort([msg], batchId=1)
     assert not any(f.endswith(".jsonl") for f in os.listdir(log_dir))
 
@@ -596,8 +788,6 @@ def test_stream_writer_legacy_marker_means_committed(log_dir):
     apply — a replay must treat it as a fully committed epoch (drop
     staging, append nothing), not parse it as a JSON manifest and
     wedge the stream."""
-    from pyspark.sql.types import Row
-
     writer = KinesisShardLogStreamWriter(
         {"path": log_dir, "numshards": str(N_SHARDS)}
     )
@@ -605,7 +795,7 @@ def test_stream_writer_legacy_marker_means_committed(log_dir):
     os.makedirs(commits)
     with open(os.path.join(commits, "5"), "w", encoding="utf-8") as f:
         f.write("committed\n")
-    msg = writer.write(iter([Row(data="x", partitionKey="1")]))
+    msg = writer.write(iter([_records(["x"], [1])]))
     writer.commit([msg], batchId=5)  # replay of a legacy-committed epoch
     assert not any(f.endswith(".jsonl") for f in os.listdir(log_dir))
     assert not os.listdir(os.path.join(log_dir, "_staging")) if os.path.isdir(
@@ -619,8 +809,6 @@ def test_stream_writer_corrupt_marker_fails_loudly(log_dir):
     RAISE, not treat the epoch as committed — silently accepting it
     would skip the rollback (duplicates persist) and drop the replay's
     staged data."""
-    from pyspark.sql.types import Row
-
     writer = KinesisShardLogStreamWriter(
         {"path": log_dir, "numshards": str(N_SHARDS)}
     )
@@ -628,7 +816,7 @@ def test_stream_writer_corrupt_marker_fails_loudly(log_dir):
     os.makedirs(commits)
     with open(os.path.join(commits, "9"), "w", encoding="utf-8") as f:
         f.write('{"log_si')  # torn manifest
-    msg = writer.write(iter([Row(data="x", partitionKey="1")]))
+    msg = writer.write(iter([_records(["x"], [1])]))
     with pytest.raises(json.JSONDecodeError):
         writer.commit([msg], batchId=9)
     # nothing was appended under the corrupt marker
@@ -641,15 +829,13 @@ def test_stream_writer_crash_mid_commit_replays_exactly_once(log_dir):
     a replay of an epoch whose previous attempt died mid-append rolls
     the logs back to the manifest and re-applies — no double append,
     no partial rows."""
-    from pyspark.sql.types import Row
-
     writer = KinesisShardLogStreamWriter(
         {"path": log_dir, "numshards": str(N_SHARDS)}
     )
 
     def stage(n):
         return writer.write(
-            iter(Row(data=f"p-{i}", partitionKey=str(i)) for i in range(n))
+            iter([_records([f"p-{i}" for i in range(n)], range(n))])
         )
 
     def total():

@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from decisions_kinesis_spark.functions.parallel import materialize
+from decisions_kinesis_spark.session import session_key
 from decisions_kinesis_spark.sources.tables import load_table
 
 _KQ = 10_000  # scan-side quantization scale
@@ -71,9 +72,10 @@ def _quantized_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 #: single-slot memo for the Lloyd loop: the three kmeans queries share
-#: one (spark, sf_dir) loop result within a sweep instead of re-running
+#: one (session, sf_dir) loop result within a sweep instead of re-running
 #: the 3-iteration crossJoin+checkpoint chain three times.  Keyed on
-#: applicationId so a restarted SparkContext can never serve stale
+#: ``session.session_key`` so another session (a ``newSession()``
+#: sibling, or one of a restarted SparkContext) never reads these
 #: checkpointed frames; bounded to ONE entry so the retained
 #: localCheckpoint blocks (the session-aging lesson) stay a single
 #: bounded set rather than accumulating across sf_dirs.
@@ -119,7 +121,7 @@ def _kmeans_loop(
     interior, transported as the bounded per-member MEAN (bigint);
     update sums |Σq| ≤ n·2·10⁴ stay in bigint to ~10¹⁴ members.
     """
-    key = (spark.sparkContext.applicationId, sf_dir)
+    key = (session_key(spark), sf_dir)
     hit = _KM_LOOP_CACHE.get(key)
     if hit is not None:
         return hit
@@ -192,7 +194,7 @@ def _kmeans_loop(
             )
         )
     result = (stats, assign, cache(partial(materialize, cents)), vecs)
-    _KM_LOOP_CACHE.clear()  # single slot: evict any other (app, sf_dir)
+    _KM_LOOP_CACHE.clear()  # single slot: evict any other (session, sf_dir)
     _KM_LOOP_CACHE[key] = result
     return result
 

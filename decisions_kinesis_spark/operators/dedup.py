@@ -35,17 +35,14 @@ from decisions_kinesis_spark.functions.parallel import (
     materialize_many,
 )
 from decisions_kinesis_spark.operators.textops import (
+    _BIGHASH,
+    _DUCK_BIGHASH,
     _DUCK_QUALITY,
     _DUCK_TOKS,
     _STOP_SQL,
     _TOKS,
 )
 from decisions_kinesis_spark.sources.tables import load_table
-
-#: Spark-side 60-bit md5 hash of a string expression (see module doc).
-def _bighash(expr: str) -> str:
-    return f"cast(conv(substring(md5({expr}), 1, 15), 16, 10) as bigint)"
-
 
 #: Word 3-gram shingles from the token array (1-based element_at).
 _SHINGLES = (
@@ -534,7 +531,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.withColumn("toks", F.expr(_TOKS))
         .select("doc_id", F.explode("toks").alias("token"))
         .distinct()
-        .withColumn("h", F.expr(_bighash("token")))
+        .withColumn("h", F.expr(_BIGHASH.format(e="token")))
     )
     sums = toks.groupBy("doc_id").agg(
         *[
@@ -666,7 +663,7 @@ def _ngram_sig_from_docs(docs: DataFrame) -> DataFrame:
         docs
         .withColumn("toks", F.expr(_TOKS))
         .select("doc_id", "lang", F.explode("toks").alias("token"))
-        .withColumn("idx", F.expr(f"{_bighash('token')} % {_SIG_BITS}"))
+        .withColumn("idx", F.expr(f"{_BIGHASH.format(e='token')} % {_SIG_BITS}"))
         .select("doc_id", "lang", "idx")
         .distinct()
     )
@@ -839,7 +836,7 @@ def dedup_ngram_jaccard_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     q = _ngram_sample_q(spark, sf_dir)
     m = _ngram_sig_frame(spark, sf_dir).where(
-        F.expr(f"{_bighash('cast(doc_id as string)')} % {q} = 0")
+        F.expr(f"{_BIGHASH.format(e='cast(doc_id as string)')} % {q} = 0")
     )
     m = materialize(m)
     pairs = _same_band_pairs(m)
@@ -1260,8 +1257,6 @@ QUERIES = {
     "dedup_incremental_lsh": dedup_incremental_lsh,
     "dedup_source_overlap_matrix": dedup_source_overlap_matrix,
 }
-
-_DUCK_BIGHASH = "('0x' || substr(md5({e}), 1, 15))::BIGINT"
 
 _DUCK_SHINGLE_CTE = f"""
         toks AS (SELECT doc_id, {_DUCK_TOKS} AS t FROM corpus),

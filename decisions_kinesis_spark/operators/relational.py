@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from decisions_kinesis_spark.functions.parallel import materialize
+from decisions_kinesis_spark.session import once
 from decisions_kinesis_spark.sources.tables import load_table
 
 
@@ -738,11 +739,10 @@ def sql_udf_money_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-scale cents sum exact before the bounded mean divides out.
     """
     load_table(spark, "orders", sf_dir).createOrReplaceTempView("orders")
-    # Once-per-session guard (mirrors udfs._register_udtf_once): the
-    # CREATE OR REPLACE re-issue works but logs a SimpleFunctionRegistry
-    # "replaced a previously registered function" WARN per call — the
-    # last log-hygiene nit after the r11/r12 DataSource/UDTF fixes.
-    if not getattr(spark, "_dks_sql_fns_registered", False):
+    # once per session: the CREATE OR REPLACE re-issue works but logs a
+    # SimpleFunctionRegistry "replaced a previously registered function"
+    # WARN per call
+    def create_functions() -> None:
         spark.sql(
             "CREATE OR REPLACE TEMPORARY FUNCTION dks_qmoney(x DOUBLE)"
             " RETURNS BIGINT RETURN cast(floor(x * 100 + 0.5) as bigint)"
@@ -752,7 +752,8 @@ def sql_udf_money_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
             " RETURNS STRING RETURN case when c < 10000000 then 'small'"
             " when c < 20000000 then 'mid' else 'large' end"
         )
-        spark._dks_sql_fns_registered = True  # noqa: SLF001
+
+    once(spark, "dks_sql_fns", create_functions)
     return spark.sql(
         """
         SELECT dks_cents_bucket(dks_qmoney(o_totalprice)) AS bucket,

@@ -6,8 +6,10 @@ Composition queries (``corpus_funnel_report``, ``dedup_cluster_stats``,
 single-source-of-truth design keeps one definition per stage, but a
 bench or report session that constructs the same composition twice pays
 the full stage cost each time.  This memo keys a builder's result by
-(applicationId, stage name, dataset key) so repeated constructions in
-one session reuse the materialized stage.
+(session, stage name, dataset key) — the session is
+``session.session_key``, so a ``newSession()`` sibling builds its own
+stages — and repeated constructions in one session reuse the
+materialized stage.
 
 Contract and bounds:
 
@@ -16,11 +18,11 @@ Contract and bounds:
   cache MISS runs Spark jobs at DataFrame-CONSTRUCTION time (the same
   documented side effect the decontam eval-gram probe has had since
   round 4).
-- Entries from other sessions (different applicationId) are evicted on
-  every access: their checkpoint RDDs died with the session, and
-  dropping the Python refs lets the ContextCleaner reclaim anything
-  still live.  A stopped-and-restarted session therefore never serves
-  stale frames.
+- Entries from other sessions (a different ``session_key``) are
+  evicted on every access: a stopped session's checkpoint RDDs died
+  with it, and dropping the Python refs lets the ContextCleaner reclaim
+  anything still live.  A stopped-and-restarted session therefore never
+  serves stale frames.
 - The memo is LRU-bounded at ``_MAX_ENTRIES``; a long-lived session
   sweeping many sf_dirs (the ADVICE r4 leak scenario for the old
   ``_EVAL_GRAMS_CACHE``) tops out at 24 pinned stage frames instead of
@@ -40,6 +42,7 @@ from collections.abc import Callable, Sequence
 from pyspark.sql import SparkSession
 
 from decisions_kinesis_spark.functions.parallel import _run_concurrently
+from decisions_kinesis_spark.session import session_key
 
 _CACHE: OrderedDict[tuple[str, str, str], object] = OrderedDict()
 _MAX_ENTRIES = 24
@@ -59,8 +62,7 @@ _KEY_LOCKS: dict[tuple[str, str, str], list] = {}
 
 def _lookup(key: tuple[str, str, str]) -> tuple[bool, object]:
     with _LOCK:
-        app = key[0]
-        for k in [k for k in _CACHE if k[0] != app]:
+        for k in [k for k in _CACHE if k[0] != key[0]]:
             del _CACHE[k]
         if key in _CACHE:
             _CACHE.move_to_end(key)
@@ -73,7 +75,7 @@ def get_or_build(
 ) -> object:
     """Return the memoized value for (current session, name, dataset_key),
     building (and thereby materializing) it on first use."""
-    key = (spark.sparkContext.applicationId, name, dataset_key)
+    key = (session_key(spark), name, dataset_key)
     hit, val = _lookup(key)
     if hit:
         return val
@@ -110,13 +112,13 @@ def build_many(
     whole jobs.  Results come back in spec order; values are identical
     to sequential builds (each stage is an independent pipeline — only
     the job overlap changes)."""
-    app = spark.sparkContext.applicationId
+    sk = session_key(spark)
     _run_concurrently(
         spark,
         [
             lambda s=s: get_or_build(spark, *s)
             for s in specs
-            if not _lookup((app, s[0], s[1]))[0]
+            if not _lookup((sk, s[0], s[1]))[0]
         ],
     )
     return [get_or_build(spark, n, d, b) for n, d, b in specs]

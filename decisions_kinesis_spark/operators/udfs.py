@@ -26,22 +26,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from decisions_kinesis_spark.operators.textops import _DUCK_TOKS
+from decisions_kinesis_spark.session import once
 from decisions_kinesis_spark.sources.tables import load_table
-
-
-def _register_udtf_once(spark, name: str, cls) -> None:
-    """Register a UDTF once per SparkSession: re-registering on every
-    query call works but logs a ``SimpleTableFunctionRegistry: The
-    function ... replaced a previously registered function`` WARN per
-    call — the next-noisiest log line after the r11/r12 DataSource and
-    WindowExec hygiene fixes."""
-    seen = getattr(spark, "_dks_udtfs_registered", None)
-    if seen is None:
-        seen = set()
-        spark._dks_udtfs_registered = seen  # noqa: SLF001
-    if name not in seen:
-        spark.udtf.register(name, cls)
-        seen.add(name)
 
 
 @F.pandas_udf(T.DoubleType())
@@ -146,47 +132,42 @@ _CHUNK_S = 24  # stride (8-token overlap)
 #: from the JVM/DuckDB operators on non-ASCII-whitespace text.
 _ASCII_WS = re.compile(r"[\t\n\x0b\x0c\r ]+")
 
-try:  # Spark 4 surface; gate so older runtimes still import the module
-    from pyspark.sql.functions import udtf as _udtf
 
-    @_udtf(
-        returnType=(
-            "chunk_id int, n_tokens int, first_tok string, last_tok string"
-        ),
-        useArrow=True,
-    )
-    class _ChunkUdtf:
-        """Overlapping-window chunker as a Python UDTF — the
-        row-GENERATING extension tier (Spark 4), Arrow-optimized
-        (plan shows ArrowEvalPythonUDTF, not BatchEvalPython).  Yields
-        one row per chunk: width _CHUNK_W, stride _CHUNK_S, final
-        partial chunk kept (the text_chunk_documents policy)."""
+@F.udtf(
+    returnType=(
+        "chunk_id int, n_tokens int, first_tok string, last_tok string"
+    ),
+    useArrow=True,
+)
+class _ChunkUdtf:
+    """Overlapping-window chunker as a Python UDTF — the
+    row-GENERATING extension tier (Spark 4), Arrow-optimized
+    (plan shows ArrowEvalPythonUDTF, not BatchEvalPython).  Yields
+    one row per chunk: width _CHUNK_W, stride _CHUNK_S, final
+    partial chunk kept (the text_chunk_documents policy)."""
 
-        def eval(self, text):  # noqa: D102 - contract in class doc
-            # Case folding is Python str.lower(), matching the engine's
-            # lower(text) tokenizer discipline (Spark lower / DuckDB
-            # lower) on ASCII and the common Unicode ranges (Latin-1/
-            # Greek/Cyrillic simple mappings — test-pinned).  KNOWN
-            # exotic divergences, accepted and documented like the
-            # ASCII-whitespace rule above: U+0130 'İ' (Python/Java fold
-            # to 'i'+combining dot, some libs to bare 'i') and Greek
-            # final-sigma context sensitivity (Python/Java contextual,
-            # utf8proc per-codepoint).  Fixtures and the documents
-            # corpus contain neither; a tokenizer that must process
-            # such text belongs behind one shared fold rule first.
-            toks = [t for t in _ASCII_WS.split((text or "").lower()) if t]
-            i = cid = 0
-            while i < len(toks):
-                c = toks[i : i + _CHUNK_W]
-                yield cid, len(c), c[0], c[-1]
-                if i + _CHUNK_W >= len(toks):
-                    break
-                i += _CHUNK_S
-                cid += 1
+    def eval(self, text):  # noqa: D102 - contract in class doc
+        # Case folding is Python str.lower(), matching the engine's
+        # lower(text) tokenizer discipline (Spark lower / DuckDB
+        # lower) on ASCII and the common Unicode ranges (Latin-1/
+        # Greek/Cyrillic simple mappings — test-pinned).  KNOWN
+        # exotic divergences, accepted and documented like the
+        # ASCII-whitespace rule above: U+0130 'İ' (Python/Java fold
+        # to 'i'+combining dot, some libs to bare 'i') and Greek
+        # final-sigma context sensitivity (Python/Java contextual,
+        # utf8proc per-codepoint).  Fixtures and the documents
+        # corpus contain neither; a tokenizer that must process
+        # such text belongs behind one shared fold rule first.
+        toks = [t for t in _ASCII_WS.split((text or "").lower()) if t]
+        i = cid = 0
+        while i < len(toks):
+            c = toks[i : i + _CHUNK_W]
+            yield cid, len(c), c[0], c[-1]
+            if i + _CHUNK_W >= len(toks):
+                break
+            i += _CHUNK_S
+            cid += 1
 
-    _HAVE_UDTF = True
-except ImportError:  # pragma: no cover - pyspark < 4
-    _HAVE_UDTF = False
 
 
 def udtf_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -202,15 +183,14 @@ def udtf_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     and faster — the UDTF exists to prove the extension tier end-to-
     end (lateral join, Arrow batches, deterministic output).
     """
-    if not _HAVE_UDTF:  # pragma: no cover
-        raise NotImplementedError("Python UDTFs need pyspark >= 4")
     docs = (
         load_table(spark, "documents", sf_dir)
         .where(F.col("doc_id") % 20 == 0)
         .select("doc_id", "text")
     )
     docs.createOrReplaceTempView("_udtf_chunk_docs")
-    _register_udtf_once(spark, "dks_chunk_udtf", _ChunkUdtf)
+    name = "dks_chunk_udtf"
+    once(spark, name, lambda: spark.udtf.register(name, _ChunkUdtf))
     return spark.sql(
         """
         SELECT d.doc_id, c.chunk_id, c.n_tokens, c.first_tok, c.last_tok
@@ -228,106 +208,102 @@ import datetime as _dt_mod  # noqa: E402 - UDTF arithmetic unit
 _US = _dt_mod.timedelta(microseconds=1)
 
 
-if _HAVE_UDTF:
+@F.udtf(
+    returnType=(
+        "user_id bigint, event_id bigint, session_id int,"
+        " session_event_idx int"
+    ),
+    useArrow=True,
+)
+class _SessionizeUdtf:
+    """PER-PARTITION STATEFUL Python UDTF (the TABLE-argument +
+    PARTITION BY form): each instance receives ONE user's events
+    in (ts, event_id) order and carries running state across rows
+    — the imperative-sessionization shape that
+    ``applyInPandasWithState`` serves in streaming, here as the
+    batch table-function tier."""
 
-    @_udtf(
-        returnType=(
-            "user_id bigint, event_id bigint, session_id int,"
-            " session_event_idx int"
-        ),
-        useArrow=True,
-    )
-    class _SessionizeUdtf:
-        """PER-PARTITION STATEFUL Python UDTF (the TABLE-argument +
-        PARTITION BY form): each instance receives ONE user's events
-        in (ts, event_id) order and carries running state across rows
-        — the imperative-sessionization shape that
-        ``applyInPandasWithState`` serves in streaming, here as the
-        batch table-function tier."""
+    def __init__(self):
+        self._prev = None
+        self._sid = 0
+        self._idx = 0
 
-        def __init__(self):
-            self._prev = None
-            self._sid = 0
+    def eval(self, row):  # noqa: D102 - contract in class doc
+        import datetime as _dt
+
+        ts = row["ts"]
+        # exact timedelta compare (not float total_seconds): the
+        # oracle replays the same boundary at integer microseconds
+        if (
+            self._prev is not None
+            and (ts - self._prev)
+            > _dt.timedelta(seconds=_SESS_GAP_S)
+        ):
+            self._sid += 1
             self._idx = 0
-
-        def eval(self, row):  # noqa: D102 - contract in class doc
-            import datetime as _dt
-
-            ts = row["ts"]
-            # exact timedelta compare (not float total_seconds): the
-            # oracle replays the same boundary at integer microseconds
-            if (
-                self._prev is not None
-                and (ts - self._prev)
-                > _dt.timedelta(seconds=_SESS_GAP_S)
-            ):
-                self._sid += 1
-                self._idx = 0
-            self._idx += 1
-            self._prev = ts
-            yield row["user_id"], row["event_id"], self._sid, self._idx
+        self._idx += 1
+        self._prev = ts
+        yield row["user_id"], row["event_id"], self._sid, self._idx
 
 
-if _HAVE_UDTF:
+@F.udtf(
+    returnType=(
+        "user_id bigint, win_start timestamp, n_events int,"
+        " max_gap_us bigint, longest_up_run int"
+    ),
+    useArrow=True,
+)
+class _WindowStatsUdtf:
+    """WINDOWED stateful Python UDTF: PARTITION BY (user,
+    event-time hour window) — each instance folds ONE window's
+    ordered event stream and emits a single summary row from
+    ``terminate()`` (the aggregate-shaped table-function form,
+    completing the tier enumeration: per-row lateral →
+    per-partition stream → per-window fold)."""
 
-    @_udtf(
-        returnType=(
-            "user_id bigint, win_start timestamp, n_events int,"
-            " max_gap_us bigint, longest_up_run int"
-        ),
-        useArrow=True,
-    )
-    class _WindowStatsUdtf:
-        """WINDOWED stateful Python UDTF: PARTITION BY (user,
-        event-time hour window) — each instance folds ONE window's
-        ordered event stream and emits a single summary row from
-        ``terminate()`` (the aggregate-shaped table-function form,
-        completing the tier enumeration: per-row lateral →
-        per-partition stream → per-window fold)."""
+    def __init__(self):
+        self._key = None
+        self._n = 0
+        self._prev_ts = None
+        self._prev_val = None
+        self._max_gap = 0
+        self._run = 0
+        self._best_run = 0
 
-        def __init__(self):
-            self._key = None
-            self._n = 0
-            self._prev_ts = None
-            self._prev_val = None
-            self._max_gap = 0
-            self._run = 0
-            self._best_run = 0
+    def eval(self, row):  # noqa: D102 - contract in class doc
+        self._key = (row["user_id"], row["win_start"])
+        self._n += 1
+        if self._prev_ts is not None:
+            gap = (row["ts"] - self._prev_ts) // _US
+            if gap > self._max_gap:
+                self._max_gap = gap
+        # NULL semantics (declared, mirrored in the oracle): a
+        # NULL value can never be part of a strictly-increasing
+        # run — it breaks the current run and stands as its own
+        # length-1 run; the next row starts fresh.
+        v = row["value"]
+        if (
+            v is not None
+            and self._prev_val is not None
+            and v > self._prev_val
+        ):
+            self._run += 1
+        else:
+            self._run = 1
+        if self._run > self._best_run:
+            self._best_run = self._run
+        self._prev_ts = row["ts"]
+        self._prev_val = row["value"]
 
-        def eval(self, row):  # noqa: D102 - contract in class doc
-            self._key = (row["user_id"], row["win_start"])
-            self._n += 1
-            if self._prev_ts is not None:
-                gap = (row["ts"] - self._prev_ts) // _US
-                if gap > self._max_gap:
-                    self._max_gap = gap
-            # NULL semantics (declared, mirrored in the oracle): a
-            # NULL value can never be part of a strictly-increasing
-            # run — it breaks the current run and stands as its own
-            # length-1 run; the next row starts fresh.
-            v = row["value"]
-            if (
-                v is not None
-                and self._prev_val is not None
-                and v > self._prev_val
-            ):
-                self._run += 1
-            else:
-                self._run = 1
-            if self._run > self._best_run:
-                self._best_run = self._run
-            self._prev_ts = row["ts"]
-            self._prev_val = row["value"]
-
-        def terminate(self):  # noqa: D102 - one summary row per window
-            if self._key is not None:
-                yield (
-                    self._key[0],
-                    self._key[1],
-                    self._n,
-                    self._max_gap,
-                    self._best_run,
-                )
+    def terminate(self):  # noqa: D102 - one summary row per window
+        if self._key is not None:
+            yield (
+                self._key[0],
+                self._key[1],
+                self._n,
+                self._max_gap,
+                self._best_run,
+            )
 
 
 def udtf_window_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -343,8 +319,6 @@ def udtf_window_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     Arrow row stream per partition, O(1) state per window — the batch
     dual of a watermarked streaming window aggregate.
     """
-    if not _HAVE_UDTF:  # pragma: no cover
-        raise NotImplementedError("Python UDTFs need pyspark >= 4")
     from decisions_kinesis_spark.functions.parallel import repartition_for_python
 
     # the UDTF eval loop is the cost here; pre-partition by the UDTF's
@@ -366,7 +340,8 @@ def udtf_window_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         "win_start",
     )
     ev.createOrReplaceTempView("_udtf_win_events")
-    _register_udtf_once(spark, "dks_window_stats_udtf", _WindowStatsUdtf)
+    name = "dks_window_stats_udtf"
+    once(spark, name, lambda: spark.udtf.register(name, _WindowStatsUdtf))
     return spark.sql(
         """
         SELECT * FROM dks_window_stats_udtf(
@@ -391,8 +366,6 @@ def udtf_sessionize_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     sessionizer proves.  Scale: one user-keyed shuffle, Arrow row
     stream per partition; state is O(1) per user.
     """
-    if not _HAVE_UDTF:  # pragma: no cover
-        raise NotImplementedError("Python UDTFs need pyspark >= 4")
     from decisions_kinesis_spark.functions.parallel import repartition_for_python
 
     # Python-stage-width pre-partition by the UDTF key (see
@@ -404,7 +377,8 @@ def udtf_sessionize_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
     )
     ev.createOrReplaceTempView("_udtf_sess_events")
-    _register_udtf_once(spark, "dks_sessionize_udtf", _SessionizeUdtf)
+    name = "dks_sessionize_udtf"
+    once(spark, name, lambda: spark.udtf.register(name, _SessionizeUdtf))
     return spark.sql(
         """
         SELECT * FROM dks_sessionize_udtf(

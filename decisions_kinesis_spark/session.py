@@ -8,15 +8,70 @@ same code runs unchanged on a multi-executor cluster:
 - UTC session timezone (stable oracle comparison vs DuckDB),
 - shuffle partitions sized by env (cores locally, per-cluster config
   in production — the engine never hardcodes a cluster-shaped value).
+
+This module also owns all per-session state: ``session_key`` names a
+session, ``once`` runs a setup (conf, data source, function
+registration) once per session, and ``_SESSION_CONF`` holds the confs
+query code relies on.  ``sources.tables.load_table`` and
+``sources.pyds.register`` call ``once`` too, so a session built
+elsewhere (a driver's own builder, ``newSession()``) gets the same
+setup on first use.  Query code writes no session conf, except the BPE
+loop's scoped AQE toggle in ``operators/corpus.py``.
 """
 
 from __future__ import annotations
 
 import os
+import threading
+from collections.abc import Callable
 
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = max(8, os.cpu_count() or 8)
+
+#: Session confs that query code relies on, set once per session.
+_SESSION_CONF = {
+    # timestamp values compare stably against the DuckDB oracle
+    "spark.sql.session.timeZone": "UTC",
+    # Older fixture generations stored events.ts as TIMESTAMP(NANOS);
+    # Spark reads those as long-nanos with this flag, converted back to
+    # a timestamp in sources.tables.load_table.  Current fixtures store
+    # TIMESTAMP(MICROS, isAdjustedToUTC=false) and do not need it.
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+    # let Python data sources (sources/pyds.py) receive pushFilters;
+    # Spark refuses to plan a reader that implements them without it
+    "spark.sql.python.filterPushdown.enabled": "true",
+}
+
+_DONE: set[tuple[str, str]] = set()
+#: re-entrant, so a setup may itself call ``once``
+_ONCE_LOCK = threading.RLock()
+
+
+def session_key(spark: SparkSession) -> str:
+    """The JVM session's UUID: distinct for every ``newSession()`` and
+    for every session of a restarted SparkContext."""
+    return spark._jsparkSession.sessionUUID()  # noqa: SLF001
+
+
+def once(spark: SparkSession, name: str, setup: Callable[[], object]) -> None:
+    """Run ``setup()`` once per (session, name).  A thread that arrives
+    while another runs the same setup waits for it to finish."""
+    key = (session_key(spark), name)
+    with _ONCE_LOCK:
+        if key not in _DONE:
+            setup()
+            _DONE.add(key)
+
+
+def apply_session_conf(spark: SparkSession) -> None:
+    """Set ``_SESSION_CONF`` on ``spark``, once per session."""
+
+    def setup() -> None:
+        for k, v in _SESSION_CONF.items():
+            spark.conf.set(k, v)
+
+    once(spark, "conf", setup)
 
 
 def get_session(
@@ -41,17 +96,8 @@ def get_session(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
-        # let Python data sources (sources/pyds.py) receive pushFilters
-        .config("spark.sql.python.filterPushdown.enabled", "true")
-        # Older fixture generations stored events.ts as TIMESTAMP(NANOS);
-        # Spark reads those as long-nanos with this flag, converted back
-        # to a timestamp in sources.tables.load_table.  Current fixtures
-        # use TIMESTAMP(MICROS, isAdjustedToUTC=false), which load_table
-        # normalizes from TimestampNTZ to the session timestamp type.
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
         # Long many-query sessions (the 244-query bench/oracle sweeps)
         # age without these: even with the UI off, the app status
@@ -84,6 +130,7 @@ def get_session(
         for k, v in extra_conf.items():
             builder = builder.config(k, v)
     spark = builder.getOrCreate()
+    apply_session_conf(spark)
     spark.sparkContext.setLogLevel("WARN")
     if os.environ.get("SPARK_GRAFT_QUIET_WINDOWEXEC") == "1":
         # Silence WindowExec's per-plan "No Partition Defined" WARN:

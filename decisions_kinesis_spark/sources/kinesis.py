@@ -26,7 +26,7 @@ except ImportError:
     boto3 = None
 
 
-def connector_options(config: KinesisQueueConfig, region: str | None = None) -> dict[str, str]:
+def connector_options(config: KinesisQueueConfig) -> dict[str, str]:
     """KinesisQueueConfig → connector option map, for the AWS connector
     and the native ``dks_kinesis`` source alike (the latter reads
     ``streamName``, ``startingposition`` and ``maxFetchRecordsPerShard``
@@ -41,7 +41,7 @@ def connector_options(config: KinesisQueueConfig, region: str | None = None) -> 
     s = config.settings
     opts: dict[str, str] = {
         "streamName": config.stream_name,
-        "region": region or s.region,
+        "region": s.region,
         "startingposition": (
             "TRIM_HORIZON"
             if config.initial_stream_position == START_FROM_OLDEST

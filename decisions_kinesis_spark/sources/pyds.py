@@ -102,6 +102,7 @@ from pyspark.sql.datasource import (
 from pyspark.sql.types import StructType
 
 from decisions_kinesis_spark.functions.envelope import ENVELOPE_SCHEMA
+from decisions_kinesis_spark.session import apply_session_conf, once
 
 _ENVELOPE_NAMES = [f.name for f in ENVELOPE_SCHEMA.fields]
 _SHARD_FMT = "shardId-%012d"
@@ -285,7 +286,6 @@ class KinesisEnvelopeReader(DataSourceReader):
         self.path = options["path"]
         self.num_shards = int(_opt(options, "numShards", "8"))
         self.stream_name = _opt(options, "streamName", "events")
-        self.batch_size = int(_opt(options, "batchSize", str(_BATCH_RECORDS)))
         self.events_mode = self.path.endswith(".parquet")
         # pushed predicates (Spark 4.1 pushFilters)
         self.shard_eq: int | None = None
@@ -378,7 +378,7 @@ class KinesisEnvelopeReader(DataSourceReader):
 
         f = pq.ParquetFile(partition.path)
         for batch in f.iter_batches(
-            batch_size=self.batch_size,
+            batch_size=_BATCH_RECORDS,
             row_groups=[partition.row_group],
             columns=["event_id", "ts", "user_id", "props"],
         ):
@@ -869,16 +869,11 @@ class KinesisEnvelopeDataSource(DataSource):
 
 
 def register(spark) -> None:
-    """Idempotent registration of ``format("dks_kinesis")`` — truly
-    once per SparkSession.  Re-registering on every query call is
-    accepted by Spark but logs a ``DataSourceManager: The data source
-    dks_kinesis replaced...`` WARN each time, which dominated the
-    post-WindowExec-fix bench log tail (VERDICT r11 hygiene nit)."""
-    if getattr(spark, "_dks_kinesis_registered", False):
-        return
-    # runtime conf: a session not built by session.get_session lacks it,
-    # and Spark refuses to plan a reader that implements pushFilters
-    # without it (DATA_SOURCE_PUSHDOWN_DISABLED).
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    spark.dataSource.register(KinesisEnvelopeDataSource)
-    spark._dks_kinesis_registered = True  # noqa: SLF001
+    """Register ``format("dks_kinesis")`` once per session, after the
+    engine confs (the reader's pushFilters needs
+    ``spark.sql.python.filterPushdown.enabled``).  Re-registering on
+    every query call is accepted by Spark but logs a
+    ``DataSourceManager: The data source dks_kinesis replaced...`` WARN
+    each time."""
+    apply_session_conf(spark)
+    once(spark, "dks_kinesis", lambda: spark.dataSource.register(KinesisEnvelopeDataSource))

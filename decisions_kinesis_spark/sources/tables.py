@@ -13,6 +13,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import TimestampType
 
+from decisions_kinesis_spark.session import apply_session_conf, session_key
+
 TABLE_NAMES = (
     "region",
     "nation",
@@ -38,42 +40,31 @@ _RELATION_CACHE: dict[tuple[str, str, str], DataFrame] = {}
 
 def load_table(spark: SparkSession, name: str, sf_dir: str | None = None) -> DataFrame:
     sf_dir = sf_dir or DEFAULT_SF_DIR
-    # The driver owns the SparkSession; pin UTC on EVERY call (cache hit
-    # or miss) so timestamp values compare stably against the DuckDB
-    # oracle even if intervening code changed the session timezone.
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    key = (spark.sparkContext.applicationId, sf_dir, name)
+    # a session the caller built itself gets the engine confs (UTC,
+    # nanosAsLong) on its first load_table
+    apply_session_conf(spark)
+    key = (session_key(spark), sf_dir, name)
     cached = _RELATION_CACHE.get(key)
     if cached is not None:
         return cached
-    if name == "events":
-        # ts is parquet TIMESTAMP(NANOS): Spark has no nanosecond timestamp
-        # type, so read it as long-nanos and truncate to microseconds —
-        # exactly what DuckDB does when casting TIMESTAMP_NS → TIMESTAMP,
-        # keeping oracle comparisons exact.  The legacy conf is confined
-        # to this one read (restored after analysis) so unrelated parquet
-        # reads in the session keep normal timestamp decoding.
-        prior = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong")
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        try:
-            df = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-            if dict(df.dtypes).get("ts") == "bigint":
-                # integer division: ns-since-epoch overflows double precision
-                df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-            elif dict(df.dtypes).get("ts") == "timestamp_ntz":
-                # TIMESTAMP(MICROS, isAdjustedToUTC=false) parquet comes out
-                # TimestampNTZ under inferTimestampNTZ; normalize to LTZ.
-                # The session tz is pinned UTC above, so the NTZ→LTZ cast
-                # reinterprets the naive value as UTC — the same instants
-                # DuckDB sees for its naive TIMESTAMP.  The cast target is
-                # the EXPLICIT TimestampType (not the "timestamp" alias,
-                # which resolves through spark.sql.timestampType and would
-                # silently no-op if a caller overrode that conf to NTZ).
-                df = df.withColumn("ts", F.col("ts").cast(TimestampType()))
-        finally:
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", prior)
-    else:
-        df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    ts_type = dict(df.dtypes).get("ts") if name == "events" else None
+    if ts_type == "bigint":
+        # TIMESTAMP(NANOS) parquet read as long-nanos under nanosAsLong:
+        # Spark has no nanosecond timestamp type, so truncate to
+        # microseconds — what DuckDB does when casting TIMESTAMP_NS →
+        # TIMESTAMP.  Integer division: ns-since-epoch overflows double.
+        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    elif ts_type == "timestamp_ntz":
+        # TIMESTAMP(MICROS, isAdjustedToUTC=false) parquet comes out
+        # TimestampNTZ under inferTimestampNTZ; normalize to LTZ.  The
+        # session tz is UTC, so the NTZ→LTZ cast reinterprets the naive
+        # value as UTC — the same instants DuckDB sees for its naive
+        # TIMESTAMP.  The cast target is the EXPLICIT TimestampType (not
+        # the "timestamp" alias, which resolves through
+        # spark.sql.timestampType and would silently no-op if a caller
+        # overrode that conf to NTZ).
+        df = df.withColumn("ts", F.col("ts").cast(TimestampType()))
     _RELATION_CACHE[key] = df
     return df
 
@@ -87,7 +78,7 @@ _COUNT_CACHE: dict[tuple[str, str, str], int] = {}
 
 def table_count(spark: SparkSession, name: str, sf_dir: str | None = None) -> int:
     sf_dir = sf_dir or DEFAULT_SF_DIR
-    key = (spark.sparkContext.applicationId, sf_dir, name)
+    key = (session_key(spark), sf_dir, name)
     n = _COUNT_CACHE.get(key)
     if n is None:
         n = load_table(spark, name, sf_dir).count()

@@ -6,6 +6,7 @@ leak-scenario guarantees, asserted — plus the materialization seam
 from __future__ import annotations
 
 from decisions_kinesis_spark.operators import stage_cache
+from decisions_kinesis_spark.session import session_key
 
 
 def test_stage_cache_memoizes_per_key(spark):
@@ -30,10 +31,10 @@ def test_stage_cache_lru_bound(spark):
         stage_cache.get_or_build(spark, "bound", f"k{i}", lambda: object())
     assert len(stage_cache._CACHE) <= stage_cache._MAX_ENTRIES
     # the OLDEST keys were evicted, the newest retained
-    app = spark.sparkContext.applicationId
-    assert (app, "bound", "k0") not in stage_cache._CACHE
+    sk = session_key(spark)
+    assert (sk, "bound", "k0") not in stage_cache._CACHE
     assert (
-        app,
+        sk,
         "bound",
         f"k{stage_cache._MAX_ENTRIES + 4}",
     ) in stage_cache._CACHE

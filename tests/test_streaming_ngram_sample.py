@@ -29,7 +29,6 @@ from pyspark.sql import functions as F
 
 from _helpers import stage_file as _stage_file
 from decisions_kinesis_spark.operators.dedup import (
-    _bighash,
     _ngram_sample_q,
     _ngram_sig_from_docs,
     _pow2_ceil,
@@ -37,6 +36,7 @@ from decisions_kinesis_spark.operators.dedup import (
     _NGRAM_SAMPLE_TARGET,
     dedup_ngram_jaccard_sampled,
 )
+from decisions_kinesis_spark.operators.textops import _BIGHASH
 from decisions_kinesis_spark.sources.tables import load_table
 
 SF = "/root/testdata/sf0.1"  # 5000 docs → Q evolves 1 → 1 → 2
@@ -76,7 +76,7 @@ def test_streaming_sampled_jaccard_maintenance_matches_batch(spark, tmp_path):
         q_now = _pow2_ceil(max(1, track["d"] // _NGRAM_SAMPLE_TARGET))
         sig = _ngram_sig_from_docs(
             batch_df.select("doc_id", "lang", "text")
-        ).withColumn("h", F.expr(_bighash("cast(doc_id as string)")))
+        ).withColumn("h", F.expr(_BIGHASH.format(e="cast(doc_id as string)")))
         if sig_schema["holder"] is None:
             sig_schema["holder"] = sig.schema
         for r in sig.where(F.expr(f"h % {q_now} = 0")).collect():

@@ -1,6 +1,7 @@
 """Degenerate-input robustness sweep: run every registered query
 against 0-row (or N-row) copies of all ten tables — schemas preserved
-byte-for-byte from a source SF dir, including the NANOS ``ts`` — and
+byte-for-byte from a source SF dir, including ``events.ts``'s
+``TIMESTAMP(MICROS, isAdjustedToUTC=false)`` type — and
 report which queries crash instead of returning a well-defined result.
 
 Empty inputs are the realistic degenerate at scale: a filter that

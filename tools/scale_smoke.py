@@ -140,8 +140,8 @@ def build_replica(spark, k: int) -> str:
         .repartition(32)
         .write.parquet(f"{out}/lineitem.parquet")
     )
-    # events.parquet is TIMESTAMP(NANOS): go through load_table, which
-    # owns the legacy-conf dance and lands ts at micros
+    # events.ts is a naive TIMESTAMP(MICROS): go through load_table,
+    # which reads it as UTC instants of the session timestamp type
     from decisions_kinesis_spark.sources.tables import load_table
 
     ev = load_table(spark, "events", BASE)

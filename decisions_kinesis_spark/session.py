@@ -16,7 +16,19 @@ query code relies on.  ``sources.tables.load_table`` and
 ``sources.pyds.register`` call ``once`` too, so a session built
 elsewhere (a driver's own builder, ``newSession()``) gets the same
 setup on first use.  Query code writes no session conf, except the BPE
-loop's scoped AQE toggle in ``operators/corpus.py``.
+loop's scoped AQE toggle in ``operators/corpus.py``.  Per-session memos
+(``session_memo``) and ``once``'s record are emptied when ``once`` first
+sees a new SparkContext: their entries belong to stopped sessions.
+
+``get_session`` also makes ``_worker_python`` the Python interpreter of
+the sessions it builds, unless the caller set ``spark.pyspark.python``.
+Every Python process Spark starts for them (the daemons, their workers,
+the streaming source runner) then imports pyspark from the installed
+package's cached bytecode instead of compiling ``$SPARK_HOME``'s
+``pyspark.zip`` from source, when the two are the same version (see
+``_worker_boot.py``).  The ``lookup_data_sources`` process that the JVM
+starts with the session takes its interpreter from the JVM's
+environment and still imports from the zip.
 """
 
 from __future__ import annotations
@@ -43,9 +55,15 @@ _SESSION_CONF = {
     "spark.sql.python.filterPushdown.enabled": "true",
 }
 
+#: the Python interpreter of ``get_session``'s sessions
+_WORKER_PYTHON = os.path.join(os.path.dirname(os.path.abspath(__file__)), "_worker_python")
+
 _DONE: set[tuple[str, str]] = set()
 #: re-entrant, so a setup may itself call ``once``
 _ONCE_LOCK = threading.RLock()
+#: the memos ``session_memo`` made, and the SparkContext ``once`` last saw
+_MEMOS: list[dict] = []
+_CONTEXT = None
 
 
 def session_key(spark: SparkSession) -> str:
@@ -54,11 +72,30 @@ def session_key(spark: SparkSession) -> str:
     return spark._jsparkSession.sessionUUID()  # noqa: SLF001
 
 
+def session_memo() -> dict:
+    """A new dict for values keyed by ``session_key``, emptied whenever
+    ``once`` first sees a new SparkContext."""
+    memo: dict = {}
+    _MEMOS.append(memo)
+    return memo
+
+
 def once(spark: SparkSession, name: str, setup: Callable[[], object]) -> None:
     """Run ``setup()`` once per (session, name).  A thread that arrives
-    while another runs the same setup waits for it to finish."""
+    while another runs the same setup waits for it to finish.
+
+    A process runs one SparkContext at a time, so on the first call
+    under a new one every memo entry and every record of a setup
+    belongs to a stopped session: all are dropped.  ``newSession()``
+    siblings share their context and keep theirs."""
+    global _CONTEXT
     key = (session_key(spark), name)
     with _ONCE_LOCK:
+        if spark.sparkContext is not _CONTEXT:
+            for memo in _MEMOS:
+                memo.clear()
+            _DONE.clear()
+            _CONTEXT = spark.sparkContext
         if key not in _DONE:
             setup()
             _DONE.add(key)
@@ -126,12 +163,20 @@ def get_session(
         builder = builder.master(master)
     elif "SPARK_MASTER" not in os.environ:
         builder = builder.master(f"local[{cpus}]")
-    if extra_conf:
-        for k, v in extra_conf.items():
-            builder = builder.config(k, v)
+    extra_conf = extra_conf or {}
+    if "spark.pyspark.python" not in extra_conf:
+        builder = builder.config("spark.pyspark.python", _WORKER_PYTHON)
+    for k, v in extra_conf.items():
+        builder = builder.config(k, v)
     spark = builder.getOrCreate()
+    sc = spark.sparkContext
+    # Python data sources, UDFs and the streaming source runner take
+    # their interpreter from ``pythonExec``, which pyspark sets from
+    # $PYSPARK_PYTHON; a context built without the launcher keeps its own
+    if sc.getConf().get("spark.pyspark.python") == _WORKER_PYTHON:
+        sc.pythonExec = _WORKER_PYTHON
     apply_session_conf(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    sc.setLogLevel("WARN")
     if os.environ.get("SPARK_GRAFT_QUIET_WINDOWEXEC") == "1":
         # Silence WindowExec's per-plan "No Partition Defined" WARN:
         # the engine's unpartitioned frames are all calendar-bounded

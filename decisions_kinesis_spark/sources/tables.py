@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import TimestampType
 
-from decisions_kinesis_spark.session import apply_session_conf, session_key
+from decisions_kinesis_spark.session import apply_session_conf, session_key, session_memo
 
 TABLE_NAMES = (
     "region",
@@ -35,7 +35,7 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 #: footer/schema read and DataFrame construction (~180 ms via py4j) are
 #: paid once per (session, sf_dir, table) instead of once per query —
 #: the catalog-metadata cache every real engine keeps.
-_RELATION_CACHE: dict[tuple[str, str, str], DataFrame] = {}
+_RELATION_CACHE: dict[tuple[str, str, str], DataFrame] = session_memo()
 
 
 def load_table(spark: SparkSession, name: str, sf_dir: str | None = None) -> DataFrame:
@@ -73,7 +73,7 @@ def load_table(spark: SparkSession, name: str, sf_dir: str | None = None) -> Dat
 #: centroid modulus, LSH plane count) size themselves from N; the
 #: fixtures are immutable, so one column-pruned count per (session,
 #: sf_dir, table) serves every query in the session.
-_COUNT_CACHE: dict[tuple[str, str, str], int] = {}
+_COUNT_CACHE: dict[tuple[str, str, str], int] = session_memo()
 
 
 def table_count(spark: SparkSession, name: str, sf_dir: str | None = None) -> int:

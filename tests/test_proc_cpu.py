@@ -1,4 +1,5 @@
-"""tools/proc_cpu.py: interval deltas and span splitting on synthetic samples."""
+"""tools/proc_cpu.py: interval deltas, span splitting and the
+per-process table on synthetic samples."""
 
 from __future__ import annotations
 
@@ -8,7 +9,7 @@ import sys
 TOOLS = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools")
 sys.path.insert(0, TOOLS)
 
-from proc_cpu import intervals, report, split  # noqa: E402
+from proc_cpu import intervals, process_table, python_command, report, split  # noqa: E402
 
 
 def _samples():
@@ -61,3 +62,44 @@ def test_report_rows_and_columns():
     assert rows["jvm:Executor task l"] == [3.0, 2.0]
     assert rows["total"] == [4.5, 3.0]
     assert "driver" not in report(table, min_s=0.6)
+
+
+BOOT = "/repo/decisions_kinesis_spark/_worker_boot.py"
+
+
+def test_python_command_parses_plain_and_boot_starts():
+    assert python_command("python -m pyspark.daemon pyspark.worker") == (
+        "-m", "pyspark.daemon pyspark.worker"
+    )
+    assert python_command(f"/usr/bin/python3.11 {BOOT} -m pyspark.daemon pyspark.worker") == (
+        "boot", "pyspark.daemon pyspark.worker"
+    )
+    assert python_command(
+        f"python {BOOT} -m pyspark.sql.streaming.python_streaming_source_runner"
+    ) == ("boot", "pyspark.sql.streaming.python_streaming_source_runner")
+    assert python_command("python3 perfbench/run.py --seed 1") == ("script", "perfbench/run.py")
+    # the launcher's shell before its exec, a JVM, an exited process
+    assert python_command("/bin/sh /repo/_worker_python -m pyspark.daemon x") is None
+    assert python_command("/usr/bin/java -cp x Main") is None
+    assert python_command("") is None
+
+
+def test_process_table_rows_in_start_order():
+    samples = [
+        (10.0, {1: ("driver", 1.0), 7: ("jvm:main", 3.0)}),
+        (10.5, {1: ("driver", 1.5), 7: ("jvm:main", 3.5), 30: ("python-workers", 0.2)}),
+        (11.0, {1: ("driver", 2.0), 30: ("python-workers", 0.8), 20: ("python-workers", 0.1)}),
+    ]
+    cmdlines = {
+        1: "python3 perfbench/run.py",
+        7: "/usr/bin/java -cp x Main",
+        30: f"python {BOOT} -m pyspark.daemon pyspark.worker",
+        20: "python -m pyspark.daemon pyspark.sql.worker.lookup_data_sources",
+    }
+    lines = process_table(samples, cmdlines, t_start=9.5).splitlines()
+    assert lines[0].split() == ["pid", "how", "start_s", "cpu_s", "module"]
+    assert [ln.split() for ln in lines[1:]] == [
+        ["1", "script", "0.5", "2.00", "perfbench/run.py"],
+        ["30", "boot", "1.0", "0.80", "pyspark.daemon", "pyspark.worker"],
+        ["20", "-m", "1.5", "0.10", "pyspark.daemon", "pyspark.sql.worker.lookup_data_sources"],
+    ]

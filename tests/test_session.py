@@ -1,7 +1,8 @@
 """Per-session state (session.py): a ``newSession()`` sibling gets its
 own relations, temp views, stage memo and confs; the confs are set once
 per session, not on every ``load_table``; and queries built from
-several threads on one fresh session equal a serial build."""
+several threads on one fresh session equal a serial build.  A new
+SparkContext drops every memo entry and setup record of the old one."""
 
 from __future__ import annotations
 
@@ -10,14 +11,17 @@ import sys
 import threading
 import time
 from collections import Counter
+from types import SimpleNamespace
 from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql.conf import RuntimeConfig
 
 from decisions_kinesis_spark.operators import stage_cache
 from decisions_kinesis_spark.operators.relational import sql_udf_money_buckets
+from decisions_kinesis_spark import session
 from decisions_kinesis_spark.session import once, session_key
-from decisions_kinesis_spark.sources.tables import load_table
+from decisions_kinesis_spark.sources import tables
+from decisions_kinesis_spark.sources.tables import load_table, table_count
 
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools"))
 
@@ -73,6 +77,34 @@ def test_once_under_thread_contention(spark):
         sys.setswitchinterval(prev)
     assert not any(t.is_alive() for t in threads)
     assert calls == [1] and seen == [1] * 16
+
+
+def test_new_context_drops_the_stopped_sessions_entries(spark, sf_dir, monkeypatch):
+    """A stub session on a stub SparkContext stands in for a restarted
+    context: tier-1 shares one live context."""
+    monkeypatch.setattr(session, "_DONE", set(session._DONE))
+    sibling = spark.newSession()
+    load_table(spark, "orders", sf_dir)
+    table_count(sibling, "nation", sf_dir)
+    keys = {session_key(spark), session_key(sibling)}
+    # a sibling shares the context: nothing is dropped
+    once(sibling, "test_new_context", lambda: None)
+    assert keys <= {k[0] for k in tables._RELATION_CACHE}
+    assert session_key(sibling) in {k[0] for k in tables._COUNT_CACHE}
+    assert keys <= {k[0] for k in session._DONE}
+
+    stub = SimpleNamespace(
+        sparkContext=object(), _jsparkSession=SimpleNamespace(sessionUUID=lambda: "stub")
+    )
+    once(stub, "test_new_context", lambda: None)
+    assert tables._RELATION_CACHE == {} and tables._COUNT_CACHE == {}
+    assert session._DONE == {("stub", "test_new_context")}
+
+    # back on the live context, its setups run again
+    calls = []
+    once(spark, "test_new_context", lambda: calls.append(1))
+    assert calls == [1] and session._DONE == {(session_key(spark), "test_new_context")}
+    assert load_table(spark, "orders", sf_dir).count() > 0
 
 
 def test_sibling_session_owns_its_relations_views_and_stages(spark, sf_dir):

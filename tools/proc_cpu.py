@@ -9,7 +9,11 @@ name, ``jvm:<name>`` (``Executor task l`` is task code).  Each
 interval's CPU goes to every span holding its midpoint, from the spans
 file of a traced perfbench run (``.perfbench_out/<run>-spans.json`` or
 ``--spans``); ``(run)`` is the whole command.  A process that exits
-loses at most its last interval.  The table goes to stderr.  Usage::
+loses at most its last interval.  After that table comes one row per
+Python process: its pid, whether it started through the package's
+``_worker_boot.py`` (``boot``) or plain ``-m``, the module with its
+first argument (or the script), when it was first seen and its CPU
+seconds.  Both tables go to stderr.  Usage::
 
     python tools/proc_cpu.py -- python3 perfbench/run.py \\
         --workload kinesis_consumer --seed 13 --seconds 8 --trace 1
@@ -43,12 +47,15 @@ def _stat(path: str) -> tuple[str, int, float] | None:
     return comm, int(rest[1]), (int(rest[11]) + int(rest[12])) / TICK
 
 
-def classify(pid: int, root: int) -> str:
+def _cmdline(pid: int) -> str:
     try:
         with open(f"/proc/{pid}/cmdline", "rb") as f:
-            cmdline = f.read().replace(b"\0", b" ").decode(errors="replace")
+            return f.read().replace(b"\0", b" ").decode(errors="replace")
     except OSError:
-        cmdline = ""
+        return ""
+
+
+def classify(pid: int, root: int, cmdline: str) -> str:
     if pid == root:
         return "driver"
     if "-m pyspark." in cmdline:
@@ -58,10 +65,27 @@ def classify(pid: int, root: int) -> str:
     return "jvm" if cmdline.split(" ", 1)[0].endswith("java") else "other"
 
 
-def sample(root: int) -> dict[int, tuple[str, float]]:
+def python_command(cmdline: str) -> tuple[str, str] | None:
+    """(how, what) for a Python command line, else None: ``boot`` or
+    ``-m`` and the module with its first argument, for ``python
+    [.../_worker_boot.py] -m <module> [<arg>]``; ``script`` and the
+    script otherwise."""
+    argv = cmdline.split()
+    if not argv or not os.path.basename(argv[0]).startswith("python"):
+        return None
+    how, args = "-m", argv[1:]
+    if args[:1] and args[0].endswith("_worker_boot.py"):
+        how, args = "boot", args[1:]
+    if args[:1] == ["-m"]:
+        return how, " ".join(args[1:3])
+    return "script", " ".join(args[:1])
+
+
+def sample(root: int, cmdlines: dict[int, str]) -> dict[int, tuple[str, float]]:
     """(class, cumulative CPU seconds) of the tree under ``root``, keyed
     by pid or, for JVM threads, by tid: keyed by id, a process whose
-    class changes (an exec) does not count its past CPU again."""
+    class changes (an exec) does not count its past CPU again.  Records
+    each process's latest command line in ``cmdlines``."""
     stats = {}
     for d in glob.glob("/proc/[0-9]*/stat"):
         st = _stat(d)
@@ -73,7 +97,10 @@ def sample(root: int) -> dict[int, tuple[str, float]]:
         tree |= frontier
     out = {}
     for pid in tree & stats.keys():
-        cls = classify(pid, root)
+        cmdline = _cmdline(pid)
+        if cmdline:
+            cmdlines[pid] = cmdline
+        cls = classify(pid, root, cmdline)
         if cls != "jvm":
             out[pid] = (cls, stats[pid][2])
             continue
@@ -125,6 +152,26 @@ def report(table: dict[str, dict[str, float]], min_s: float = 0.5) -> str:
     return "\n".join(lines)
 
 
+def process_table(samples, cmdlines: dict[int, str], t_start: float) -> str:
+    """A row per Python process in ``samples``, in the order they were
+    first seen: pid, ``python_command``, seconds from ``t_start`` to the
+    first sample holding it, and its CPU seconds at the last."""
+    first: dict[int, float] = {}
+    cpu: dict[int, float] = {}
+    for t, smp in samples:
+        for pid, (_, v) in smp.items():
+            if pid in cmdlines:
+                first.setdefault(pid, t)
+                cpu[pid] = v
+    lines = ["pid".rjust(8) + "  how     start_s    cpu_s  module"]
+    for pid in sorted(first, key=first.get):
+        cmd = python_command(cmdlines[pid])
+        if cmd is not None:
+            how, what = cmd
+            lines.append(f"{pid:8d}  {how:6s}{first[pid] - t_start:9.1f}{cpu[pid]:9.2f}  {what}")
+    return "\n".join(lines)
+
+
 def main(argv=None) -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--interval", type=float, default=0.1)
@@ -133,9 +180,9 @@ def main(argv=None) -> int:
     a = ap.parse_args(argv)
     t_start = time.time()
     proc = subprocess.Popen(a.cmd[1:] if a.cmd[:1] == ["--"] else a.cmd)
-    samples = []
+    samples, cmdlines = [], {}
     while proc.poll() is None:
-        samples.append((time.time(), sample(proc.pid)))
+        samples.append((time.time(), sample(proc.pid, cmdlines)))
         time.sleep(a.interval)
     path = a.spans
     if path is None:
@@ -143,6 +190,7 @@ def main(argv=None) -> int:
         path = max(found, key=os.path.getmtime) if found else None
     spans = json.load(open(path, encoding="utf-8")) if path else []
     print(report(split(intervals(samples), spans)), file=sys.stderr)
+    print(process_table(samples, cmdlines, t_start), file=sys.stderr)
     return proc.returncode
 
 

@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from decisions_kinesis_spark.functions.parallel import materialize
-from decisions_kinesis_spark.session import session_key
+from decisions_kinesis_spark.session import session_key, session_memo
 from decisions_kinesis_spark.sources.tables import load_table
 
 _KQ = 10_000  # scan-side quantization scale
@@ -76,10 +76,12 @@ def _quantized_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: the 3-iteration crossJoin+checkpoint chain three times.  Keyed on
 #: ``session.session_key`` so another session (a ``newSession()``
 #: sibling, or one of a restarted SparkContext) never reads these
-#: checkpointed frames; bounded to ONE entry so the retained
-#: localCheckpoint blocks (the session-aging lesson) stay a single
-#: bounded set rather than accumulating across sf_dirs.
-_KM_LOOP_CACHE: dict = {}
+#: checkpointed frames, and a ``session.session_memo`` so a stopped
+#: context's frames go when ``once`` sees a new one; bounded to ONE
+#: entry so the retained localCheckpoint blocks (the session-aging
+#: lesson) stay a single bounded set rather than accumulating across
+#: sf_dirs.
+_KM_LOOP_CACHE: dict = session_memo()
 
 
 def _kmeans_loop(

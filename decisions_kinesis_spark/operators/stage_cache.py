@@ -18,11 +18,10 @@ Contract and bounds:
   cache MISS runs Spark jobs at DataFrame-CONSTRUCTION time (the same
   documented side effect the decontam eval-gram probe has had since
   round 4).
-- Entries from other sessions (a different ``session_key``) are
-  evicted on every access: a stopped session's checkpoint RDDs died
-  with it, and dropping the Python refs lets the ContextCleaner reclaim
-  anything still live.  A stopped-and-restarted session therefore never
-  serves stale frames.
+- The memo is a ``session.session_memo``: ``session.once`` empties it
+  when it first sees a new SparkContext, whose sessions' keys differ
+  anyway, so a restarted session never serves stale frames.  A live
+  ``newSession()`` sibling keeps its entries next to its parent's.
 - The memo is LRU-bounded at ``_MAX_ENTRIES``; a long-lived session
   sweeping many sf_dirs (the ADVICE r4 leak scenario for the old
   ``_EVAL_GRAMS_CACHE``) tops out at 24 pinned stage frames instead of
@@ -36,15 +35,15 @@ keep measuring the operator, not the memo.
 from __future__ import annotations
 
 import threading
-from collections import OrderedDict
 from collections.abc import Callable, Sequence
 
 from pyspark.sql import SparkSession
 
 from decisions_kinesis_spark.functions.parallel import _run_concurrently
-from decisions_kinesis_spark.session import session_key
+from decisions_kinesis_spark.session import session_key, session_memo
 
-_CACHE: OrderedDict[tuple[str, str, str], object] = OrderedDict()
+#: in least-recently-used order: a hit moves its entry to the end
+_CACHE: dict[tuple[str, str, str], object] = session_memo()
 _MAX_ENTRIES = 24
 
 #: bookkeeping lock (cache dict + key-lock table); never held while a
@@ -62,10 +61,8 @@ _KEY_LOCKS: dict[tuple[str, str, str], list] = {}
 
 def _lookup(key: tuple[str, str, str]) -> tuple[bool, object]:
     with _LOCK:
-        for k in [k for k in _CACHE if k[0] != key[0]]:
-            del _CACHE[k]
         if key in _CACHE:
-            _CACHE.move_to_end(key)
+            _CACHE[key] = _CACHE.pop(key)
             return True, _CACHE[key]
         return False, None
 
@@ -91,7 +88,7 @@ def get_or_build(
             with _LOCK:
                 _CACHE[key] = val
                 while len(_CACHE) > _MAX_ENTRIES:
-                    _CACHE.popitem(last=False)
+                    del _CACHE[next(iter(_CACHE))]
     finally:
         with _LOCK:
             entry[1] -= 1

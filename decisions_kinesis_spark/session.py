@@ -20,15 +20,17 @@ loop's scoped AQE toggle in ``operators/corpus.py``.  Per-session memos
 (``session_memo``) and ``once``'s record are emptied when ``once`` first
 sees a new SparkContext: their entries belong to stopped sessions.
 
-``get_session`` also makes ``_worker_python`` the Python interpreter of
-the sessions it builds, unless the caller set ``spark.pyspark.python``.
-Every Python process Spark starts for them (the daemons, their workers,
-the streaming source runner) then imports pyspark from the installed
-package's cached bytecode instead of compiling ``$SPARK_HOME``'s
-``pyspark.zip`` from source, when the two are the same version (see
-``_worker_boot.py``).  The ``lookup_data_sources`` process that the JVM
-starts with the session takes its interpreter from the JVM's
-environment and still imports from the zip.
+The once-per-session setup (``apply_session_conf``) also makes
+``_worker_python`` the Python interpreter of the session's context,
+unless the caller chose one (``spark.pyspark.python``, or a
+``pythonExec`` other than pyspark's default).  Every Python process
+Spark then starts for the session (the daemons, their workers, the
+streaming source runner) drops Spark's archives from ``sys.path`` and
+imports the installed pyspark and py4j from their cached bytecode (see
+``_worker_boot.py``), whoever built the session.  The
+``lookup_data_sources`` process that the JVM starts with the session
+takes its interpreter from the JVM's environment and still imports
+from the zips.
 """
 
 from __future__ import annotations
@@ -55,7 +57,7 @@ _SESSION_CONF = {
     "spark.sql.python.filterPushdown.enabled": "true",
 }
 
-#: the Python interpreter of ``get_session``'s sessions
+#: the Python interpreter of every session ``apply_session_conf`` sets up
 _WORKER_PYTHON = os.path.join(os.path.dirname(os.path.abspath(__file__)), "_worker_python")
 
 _DONE: set[tuple[str, str]] = set()
@@ -102,11 +104,19 @@ def once(spark: SparkSession, name: str, setup: Callable[[], object]) -> None:
 
 
 def apply_session_conf(spark: SparkSession) -> None:
-    """Set ``_SESSION_CONF`` on ``spark``, once per session."""
+    """Set ``_SESSION_CONF`` on ``spark`` and route its context's Python
+    processes through ``_worker_python``, once per session."""
 
     def setup() -> None:
         for k, v in _SESSION_CONF.items():
             spark.conf.set(k, v)
+        sc = spark.sparkContext
+        # UDFs, UDTFs, Python data sources and the streaming source
+        # runner take their interpreter from ``pythonExec``; the launcher
+        # runs pyspark's default one, so only that one is replaced
+        default = os.environ.get("PYSPARK_PYTHON", "python3")
+        if sc.pythonExec == default and sc.getConf().get("spark.pyspark.python") is None:
+            sc.pythonExec = _WORKER_PYTHON
 
     once(spark, "conf", setup)
 
@@ -163,20 +173,11 @@ def get_session(
         builder = builder.master(master)
     elif "SPARK_MASTER" not in os.environ:
         builder = builder.master(f"local[{cpus}]")
-    extra_conf = extra_conf or {}
-    if "spark.pyspark.python" not in extra_conf:
-        builder = builder.config("spark.pyspark.python", _WORKER_PYTHON)
-    for k, v in extra_conf.items():
+    for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
-    sc = spark.sparkContext
-    # Python data sources, UDFs and the streaming source runner take
-    # their interpreter from ``pythonExec``, which pyspark sets from
-    # $PYSPARK_PYTHON; a context built without the launcher keeps its own
-    if sc.getConf().get("spark.pyspark.python") == _WORKER_PYTHON:
-        sc.pythonExec = _WORKER_PYTHON
     apply_session_conf(spark)
-    sc.setLogLevel("WARN")
+    spark.sparkContext.setLogLevel("WARN")
     if os.environ.get("SPARK_GRAFT_QUIET_WINDOWEXEC") == "1":
         # Silence WindowExec's per-plan "No Partition Defined" WARN:
         # the engine's unpartitioned frames are all calendar-bounded

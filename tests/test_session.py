@@ -1,8 +1,9 @@
 """Per-session state (session.py): a ``newSession()`` sibling gets its
-own relations, temp views, stage memo and confs; the confs are set once
-per session, not on every ``load_table``; and queries built from
-several threads on one fresh session equal a serial build.  A new
-SparkContext drops every memo entry and setup record of the old one."""
+own relations, temp views, stage memo and confs, next to its parent's;
+the confs are set once per session, not on every ``load_table``; and
+queries built from several threads on one fresh session equal a serial
+build.  A new SparkContext drops every memo entry and setup record of
+the old one."""
 
 from __future__ import annotations
 
@@ -16,7 +17,7 @@ from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql.conf import RuntimeConfig
 
-from decisions_kinesis_spark.operators import stage_cache
+from decisions_kinesis_spark.operators import clustering, stage_cache
 from decisions_kinesis_spark.operators.relational import sql_udf_money_buckets
 from decisions_kinesis_spark import session
 from decisions_kinesis_spark.session import once, session_key
@@ -92,12 +93,15 @@ def test_new_context_drops_the_stopped_sessions_entries(spark, sf_dir, monkeypat
     assert keys <= {k[0] for k in tables._RELATION_CACHE}
     assert session_key(sibling) in {k[0] for k in tables._COUNT_CACHE}
     assert keys <= {k[0] for k in session._DONE}
+    stage_cache.get_or_build(sibling, "test_new_context", "k", object)
+    clustering._KM_LOOP_CACHE[(session_key(spark), sf_dir)] = object()
 
     stub = SimpleNamespace(
         sparkContext=object(), _jsparkSession=SimpleNamespace(sessionUUID=lambda: "stub")
     )
     once(stub, "test_new_context", lambda: None)
     assert tables._RELATION_CACHE == {} and tables._COUNT_CACHE == {}
+    assert stage_cache._CACHE == {} and clustering._KM_LOOP_CACHE == {}
     assert session._DONE == {("stub", "test_new_context")}
 
     # back on the live context, its setups run again
@@ -118,6 +122,8 @@ def test_sibling_session_owns_its_relations_views_and_stages(spark, sf_dir):
     built = []
     stage_cache.get_or_build(spark, "sibling", "k", lambda: built.append(spark))
     stage_cache.get_or_build(s2, "sibling", "k", lambda: built.append(s2))
+    # the sibling's build leaves the parent's entry a hit
+    stage_cache.get_or_build(spark, "sibling", "k", lambda: built.append(spark))
     assert built == [spark, s2]
     stage_cache.clear()
 

@@ -1,7 +1,7 @@
 """Session stage-cache contract (operators/stage_cache.py): memoization,
-LRU bound, dead-session eviction, explicit clear — the ADVICE r4
-leak-scenario guarantees, asserted — plus the materialization seam
-(functions/parallel.py) it builds on."""
+LRU bound, explicit clear — the ADVICE r4 leak-scenario guarantees,
+asserted — plus the materialization seam (functions/parallel.py) it
+builds on.  Dropping a stopped context's entries is in test_session.py."""
 
 from __future__ import annotations
 
@@ -39,15 +39,6 @@ def test_stage_cache_lru_bound(spark):
         f"k{stage_cache._MAX_ENTRIES + 4}",
     ) in stage_cache._CACHE
     stage_cache.clear()
-
-
-def test_stage_cache_evicts_dead_session_entries(spark):
-    stage_cache.clear()
-    stage_cache._CACHE[("dead-app-id", "x", "y")] = "stale"
-    stage_cache.get_or_build(spark, "t", "k1", lambda: object())
-    assert ("dead-app-id", "x", "y") not in stage_cache._CACHE
-    stage_cache.clear()
-    assert not stage_cache._CACHE
 
 
 def test_build_many_returns_spec_order_and_builds_once(spark):

@@ -10,15 +10,17 @@ same code runs unchanged on a multi-executor cluster:
   in production — the engine never hardcodes a cluster-shaped value).
 
 This module also owns all per-session state: ``session_key`` names a
-session, ``once`` runs a setup (conf, data source, function
-registration) once per session, and ``_SESSION_CONF`` holds the confs
-query code relies on.  ``sources.tables.load_table`` and
-``sources.pyds.register`` call ``once`` too, so a session built
-elsewhere (a driver's own builder, ``newSession()``) gets the same
-setup on first use.  Query code writes no session conf, except the BPE
-loop's scoped AQE toggle in ``operators/corpus.py``.  Per-session memos
-(``session_memo``) and ``once``'s record are emptied when ``once`` first
-sees a new SparkContext: their entries belong to stopped sessions.
+session, ``SessionMemo`` builds a value once per (session, key) and
+makes concurrent callers for that key wait for it, ``once`` runs a
+setup (conf, data source, function registration) once per session
+through one, and ``_SESSION_CONF`` holds the confs query code relies
+on.  ``sources.tables.load_table`` and ``sources.pyds.register`` call
+``once`` too, so a session built elsewhere (a driver's own builder,
+``newSession()``) gets the same setup on first use.  Query code writes
+no session conf, except the BPE loop's scoped AQE toggle in
+``operators/corpus.py``.  Every ``SessionMemo`` is emptied when any of
+them first sees a new SparkContext: its entries belong to stopped
+sessions.
 
 The once-per-session setup (``apply_session_conf``) also makes
 ``_worker_python`` the Python interpreter of the session's context,
@@ -38,6 +40,8 @@ from __future__ import annotations
 import os
 import threading
 from collections.abc import Callable
+from concurrent.futures import Future
+from typing import TypeVar
 
 from pyspark.sql import SparkSession
 
@@ -60,12 +64,14 @@ _SESSION_CONF = {
 #: the Python interpreter of every session ``apply_session_conf`` sets up
 _WORKER_PYTHON = os.path.join(os.path.dirname(os.path.abspath(__file__)), "_worker_python")
 
-_DONE: set[tuple[str, str]] = set()
-#: re-entrant, so a setup may itself call ``once``
-_ONCE_LOCK = threading.RLock()
-#: the memos ``session_memo`` made, and the SparkContext ``once`` last saw
-_MEMOS: list[dict] = []
+#: guards every ``SessionMemo`` and ``_CONTEXT``; never held while a
+#: value is built, so builds of different keys run concurrently
+_LOCK = threading.Lock()
+#: every ``SessionMemo``, and the SparkContext one last saw
+_MEMOS: list[SessionMemo] = []
 _CONTEXT = None
+
+T = TypeVar("T")
 
 
 def session_key(spark: SparkSession) -> str:
@@ -74,33 +80,68 @@ def session_key(spark: SparkSession) -> str:
     return spark._jsparkSession.sessionUUID()  # noqa: SLF001
 
 
-def session_memo() -> dict:
-    """A new dict for values keyed by ``session_key``, emptied whenever
-    ``once`` first sees a new SparkContext."""
-    memo: dict = {}
-    _MEMOS.append(memo)
-    return memo
+class SessionMemo(dict):
+    """Values keyed by ``(session_key, *key)``, each built once.
+
+    Entries are ``Future``s in least-recently-used order: a lookup moves
+    its key to the end, and past ``max_entries`` the oldest go.  A
+    process runs one SparkContext at a time, so when any memo first
+    sees a new one, every entry of every memo belongs to a stopped
+    session: all are dropped.  ``newSession()`` siblings share their
+    context and keep theirs."""
+
+    def __init__(self, max_entries: int | None = None) -> None:
+        super().__init__()
+        self.max_entries = max_entries
+        _MEMOS.append(self)
+
+    def get_or_build(self, spark: SparkSession, key: tuple, build: Callable[[], T]) -> T:
+        """Return the value for (session, *key), running ``build()`` on
+        the first call.  A thread that asks while another builds the
+        key waits for it and gets its value or its exception; a failed
+        build is dropped, so the next call builds again.  ``build``
+        must not ask for its own key: it would wait on itself."""
+        global _CONTEXT
+        full = (session_key(spark), *key)
+        with _LOCK:
+            if spark.sparkContext is not _CONTEXT:
+                for memo in _MEMOS:
+                    dict.clear(memo)
+                _CONTEXT = spark.sparkContext
+            fut = self.pop(full, None)
+            owner = fut is None
+            if owner:
+                fut = Future()
+            self[full] = fut
+            while self.max_entries is not None and len(self) > self.max_entries:
+                del self[next(iter(self))]
+        if not owner:
+            return fut.result()
+        try:
+            value = build()
+        except BaseException as e:
+            with _LOCK:
+                if self.get(full) is fut:
+                    del self[full]
+            fut.set_exception(e)
+            raise
+        fut.set_result(value)
+        return value
+
+    def clear(self) -> None:
+        with _LOCK:
+            super().clear()
+
+
+#: the setups ``once`` has run (or is running)
+_SETUPS = SessionMemo()
 
 
 def once(spark: SparkSession, name: str, setup: Callable[[], object]) -> None:
     """Run ``setup()`` once per (session, name).  A thread that arrives
-    while another runs the same setup waits for it to finish.
-
-    A process runs one SparkContext at a time, so on the first call
-    under a new one every memo entry and every record of a setup
-    belongs to a stopped session: all are dropped.  ``newSession()``
-    siblings share their context and keep theirs."""
-    global _CONTEXT
-    key = (session_key(spark), name)
-    with _ONCE_LOCK:
-        if spark.sparkContext is not _CONTEXT:
-            for memo in _MEMOS:
-                memo.clear()
-            _DONE.clear()
-            _CONTEXT = spark.sparkContext
-        if key not in _DONE:
-            setup()
-            _DONE.add(key)
+    while another runs the same setup waits for it to finish; setups
+    with different names run concurrently."""
+    _SETUPS.get_or_build(spark, (name,), setup)
 
 
 def apply_session_conf(spark: SparkSession) -> None:

@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import TimestampType
 
-from decisions_kinesis_spark.session import apply_session_conf, session_key, session_memo
+from decisions_kinesis_spark.session import SessionMemo, apply_session_conf
 
 TABLE_NAMES = (
     "region",
@@ -35,7 +35,7 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 #: footer/schema read and DataFrame construction (~180 ms via py4j) are
 #: paid once per (session, sf_dir, table) instead of once per query —
 #: the catalog-metadata cache every real engine keeps.
-_RELATION_CACHE: dict[tuple[str, str, str], DataFrame] = session_memo()
+_RELATION_CACHE = SessionMemo()
 
 
 def load_table(spark: SparkSession, name: str, sf_dir: str | None = None) -> DataFrame:
@@ -43,10 +43,12 @@ def load_table(spark: SparkSession, name: str, sf_dir: str | None = None) -> Dat
     # a session the caller built itself gets the engine confs (UTC,
     # nanosAsLong) on its first load_table
     apply_session_conf(spark)
-    key = (session_key(spark), sf_dir, name)
-    cached = _RELATION_CACHE.get(key)
-    if cached is not None:
-        return cached
+    return _RELATION_CACHE.get_or_build(
+        spark, (sf_dir, name), lambda: _read(spark, name, sf_dir)
+    )
+
+
+def _read(spark: SparkSession, name: str, sf_dir: str) -> DataFrame:
     df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
     ts_type = dict(df.dtypes).get("ts") if name == "events" else None
     if ts_type == "bigint":
@@ -65,7 +67,6 @@ def load_table(spark: SparkSession, name: str, sf_dir: str | None = None) -> Dat
         # spark.sql.timestampType and would silently no-op if a caller
         # overrode that conf to NTZ).
         df = df.withColumn("ts", F.col("ts").cast(TimestampType()))
-    _RELATION_CACHE[key] = df
     return df
 
 
@@ -73,17 +74,14 @@ def load_table(spark: SparkSession, name: str, sf_dir: str | None = None) -> Dat
 #: centroid modulus, LSH plane count) size themselves from N; the
 #: fixtures are immutable, so one column-pruned count per (session,
 #: sf_dir, table) serves every query in the session.
-_COUNT_CACHE: dict[tuple[str, str, str], int] = session_memo()
+_COUNT_CACHE = SessionMemo()
 
 
 def table_count(spark: SparkSession, name: str, sf_dir: str | None = None) -> int:
     sf_dir = sf_dir or DEFAULT_SF_DIR
-    key = (session_key(spark), sf_dir, name)
-    n = _COUNT_CACHE.get(key)
-    if n is None:
-        n = load_table(spark, name, sf_dir).count()
-        _COUNT_CACHE[key] = n
-    return n
+    return _COUNT_CACHE.get_or_build(
+        spark, (sf_dir, name), lambda: load_table(spark, name, sf_dir).count()
+    )
 
 
 def load_tables(

@@ -3,11 +3,13 @@ own relations, temp views, stage memo and confs, next to its parent's;
 the confs are set once per session, not on every ``load_table``; and
 queries built from several threads on one fresh session equal a serial
 build.  A new SparkContext drops every memo entry and setup record of
-the old one."""
+the old one; concurrent callers of one key share one build."""
 
 from __future__ import annotations
 
 import os
+import pathlib
+import re
 import sys
 import threading
 import time
@@ -15,6 +17,7 @@ from collections import Counter
 from types import SimpleNamespace
 from concurrent.futures import ThreadPoolExecutor
 
+from pyspark.sql import DataFrameReader
 from pyspark.sql.conf import RuntimeConfig
 
 from decisions_kinesis_spark.operators import clustering, stage_cache
@@ -80,10 +83,11 @@ def test_once_under_thread_contention(spark):
     assert calls == [1] and seen == [1] * 16
 
 
-def test_new_context_drops_the_stopped_sessions_entries(spark, sf_dir, monkeypatch):
+def test_new_context_drops_the_stopped_sessions_entries(spark, sf_dir):
     """A stub session on a stub SparkContext stands in for a restarted
-    context: tier-1 shares one live context."""
-    monkeypatch.setattr(session, "_DONE", set(session._DONE))
+    context: tier-1 shares one live context.  Any memo's first call
+    under the new context empties every memo, ``once``'s included."""
+    live_setups = dict(session._SETUPS)
     sibling = spark.newSession()
     load_table(spark, "orders", sf_dir)
     table_count(sibling, "nation", sf_dir)
@@ -92,23 +96,90 @@ def test_new_context_drops_the_stopped_sessions_entries(spark, sf_dir, monkeypat
     once(sibling, "test_new_context", lambda: None)
     assert keys <= {k[0] for k in tables._RELATION_CACHE}
     assert session_key(sibling) in {k[0] for k in tables._COUNT_CACHE}
-    assert keys <= {k[0] for k in session._DONE}
+    assert keys <= {k[0] for k in session._SETUPS}
     stage_cache.get_or_build(sibling, "test_new_context", "k", object)
-    clustering._KM_LOOP_CACHE[(session_key(spark), sf_dir)] = object()
+    clustering._KM_LOOP_CACHE.get_or_build(spark, (sf_dir,), object)
+    assert clustering._KM_LOOP_CACHE
 
     stub = SimpleNamespace(
         sparkContext=object(), _jsparkSession=SimpleNamespace(sessionUUID=lambda: "stub")
     )
-    once(stub, "test_new_context", lambda: None)
-    assert tables._RELATION_CACHE == {} and tables._COUNT_CACHE == {}
-    assert stage_cache._CACHE == {} and clustering._KM_LOOP_CACHE == {}
-    assert session._DONE == {("stub", "test_new_context")}
+    try:
+        stage_cache.get_or_build(stub, "test_new_context", "k", object)
+        assert tables._RELATION_CACHE == {} and tables._COUNT_CACHE == {}
+        assert set(stage_cache._CACHE) == {("stub", "test_new_context", "k")}
+        assert clustering._KM_LOOP_CACHE == {} and session._SETUPS == {}
+        once(stub, "test_new_context", lambda: None)
+        assert set(session._SETUPS) == {("stub", "test_new_context")}
 
-    # back on the live context, its setups run again
-    calls = []
-    once(spark, "test_new_context", lambda: calls.append(1))
-    assert calls == [1] and session._DONE == {(session_key(spark), "test_new_context")}
-    assert load_table(spark, "orders", sf_dir).count() > 0
+        # back on the live context, its setups run again
+        calls = []
+        once(spark, "test_new_context", lambda: calls.append(1))
+        assert calls == [1] and stage_cache._CACHE == {}
+        assert set(session._SETUPS) == {(session_key(spark), "test_new_context")}
+        assert load_table(spark, "orders", sf_dir).count() > 0
+    finally:
+        # the live context's confs and registrations are still in place
+        dict.update(session._SETUPS, live_setups)
+
+
+def test_concurrent_load_table_reads_once(spark, sf_dir, monkeypatch):
+    """8 threads load one table on a fresh session: the parquet is read
+    once and every thread gets the same frame."""
+    fresh = spark.newSession()
+    reads = []
+    real_parquet = DataFrameReader.parquet
+
+    def slow_parquet(self, *paths, **options):
+        reads.append(paths)
+        time.sleep(0.2)
+        return real_parquet(self, *paths, **options)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", slow_parquet)
+    with ThreadPoolExecutor(max_workers=8) as pool:
+        frames = list(pool.map(lambda _: load_table(fresh, "nation", sf_dir), range(8)))
+    assert len(reads) == 1
+    assert len({id(df) for df in frames}) == 1
+
+
+def test_once_setups_with_different_names_run_concurrently(spark):
+    """A setup that blocks holds up only callers of its own name."""
+    started, gate = threading.Event(), threading.Event()
+
+    def blocked_setup():
+        started.set()
+        gate.wait(60)
+
+    a = threading.Thread(target=once, args=(spark, "test_once_a", blocked_setup))
+    b = threading.Thread(target=once, args=(spark, "test_once_b", lambda: None))
+    a.start()
+    try:
+        assert started.wait(5)
+        b.start()
+        b.join(5)
+        assert not b.is_alive()
+    finally:
+        gate.set()
+        a.join(60)
+        b.join(60)
+    assert not a.is_alive()
+
+
+def test_only_session_constructs_locks():
+    """Per-session memos and their locking live in session.SessionMemo:
+    no other package module constructs a threading lock, so a
+    hand-rolled memo cannot come back unseen."""
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "decisions_kinesis_spark"
+    owner = pkg / "session.py"
+    direct = re.compile(r"\bR?Lock\(")
+    hits = [
+        f"{path.relative_to(pkg)}:{n}: {line.strip()}"
+        for path in sorted(pkg.rglob("*.py"))
+        if path != owner
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if direct.search(line)
+    ]
+    assert not hits, "memoize through session.SessionMemo:\n" + "\n".join(hits)
 
 
 def test_sibling_session_owns_its_relations_views_and_stages(spark, sf_dir):

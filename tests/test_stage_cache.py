@@ -44,8 +44,8 @@ def test_stage_cache_lru_bound(spark):
 def test_build_many_returns_spec_order_and_builds_once(spark):
     """build_many (guide §2.6 concurrent stage builds): results come
     back in spec order, each missing key's builder runs exactly once
-    even when the same key appears twice in one call, and hits skip
-    the pool entirely."""
+    even when the same key appears twice in one call, and a second call
+    runs no builder."""
     import threading
 
     stage_cache.clear()
@@ -96,6 +96,44 @@ def test_build_many_propagates_builder_error(spark):
     stage_cache.clear()
 
 
+def test_failed_build_reaches_every_waiter_and_is_retried(spark):
+    """4 threads ask for a key whose builder fails: it runs once, every
+    thread gets its error, and the failed build is not memoized."""
+    import threading
+    import time
+
+    import pytest
+
+    stage_cache.clear()
+    calls, errors = [], []
+    arrived = threading.Barrier(4)
+
+    def boom():
+        calls.append(1)
+        time.sleep(0.2)
+        raise ValueError("stage exploded")
+
+    def worker():
+        arrived.wait(10)
+        try:
+            stage_cache.get_or_build(spark, "fail", "k", boom)
+        except ValueError as e:
+            errors.append(e)
+
+    threads = [threading.Thread(target=worker) for _ in range(4)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(60)
+    assert not any(t.is_alive() for t in threads)
+    assert calls == [1] and len(errors) == 4
+    with pytest.raises(ValueError, match="stage exploded"):
+        stage_cache.get_or_build(spark, "fail", "k", boom)
+    assert calls == [1, 1]
+    assert stage_cache.get_or_build(spark, "fail", "k", lambda: "rebuilt") == "rebuilt"
+    stage_cache.clear()
+
+
 def test_materialize_many_matches_sequential(spark):
     """materialize_many returns frames with the same rows as
     sequential materialization (only job overlap changes)."""
@@ -112,21 +150,10 @@ def test_materialize_many_matches_sequential(spark):
     )
 
 
-def test_key_locks_bounded_after_eviction(spark):
-    """Per-key build locks do not outlive their keys: after more
-    distinct keys than the LRU holds, the lock table is bounded too."""
-    stage_cache.clear()
-    for i in range(stage_cache._MAX_ENTRIES + 10):
-        stage_cache.get_or_build(spark, "locks", f"k{i}", lambda: object())
-    assert len(stage_cache._KEY_LOCKS) <= stage_cache._MAX_ENTRIES
-    stage_cache.clear()
-
-
 def test_concurrent_get_or_build_stress(spark):
     """More threads than cores race on a few missing keys with a tiny
     switch interval: each key's builder runs exactly once and never
-    twice at a time, every caller gets the built value, and the lock
-    table drains to empty."""
+    twice at a time, and every caller gets the built value."""
     import sys
     import threading
     import time
@@ -171,7 +198,6 @@ def test_concurrent_get_or_build_stress(spark):
     assert not any(t.is_alive() for t in threads)
     assert calls == dict.fromkeys(keys, 1) and not overlaps
     assert sorted(out) == sorted(keys * 16)
-    assert not stage_cache._KEY_LOCKS
     stage_cache.clear()
 
 

@@ -143,8 +143,6 @@ class KinesisQueueConfig:
         for i, f in enumerate(self.payload_filters):
             if not f.property:
                 issues.append(f"Payload filter #{i}: Property is required")
-            if not str(getattr(f.verb, "value", f.verb)):
-                issues.append(f"Payload filter #{i}: Verb is required")
             if f.value is None or f.value == "":
                 issues.append(f"Payload filter #{i}: Value is required")
         if self.override_settings:
@@ -180,12 +178,8 @@ class KinesisQueueConfig:
         import dataclasses
         import json
 
-        d = dataclasses.asdict(self)
-        for f in d["payload_filters"]:
-            f["verb"] = (
-                f["verb"].value if isinstance(f["verb"], FilterVerb) else f["verb"]
-            )
-        return json.dumps(d, indent=2)
+        # a FilterVerb is a str Enum: json writes it as its value
+        return json.dumps(dataclasses.asdict(self), indent=2)
 
     @classmethod
     def from_json(cls, text: str) -> KinesisQueueConfig:

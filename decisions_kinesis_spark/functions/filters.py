@@ -37,6 +37,7 @@ past the shuffle-free pipeline at any data size.
 from __future__ import annotations
 
 import json
+import operator
 from collections.abc import Iterable
 from functools import reduce
 
@@ -64,34 +65,29 @@ def json_object_valid(payload: Column) -> Column:
     )
 
 
+_CI = " (Case Insensitive)"
+
+#: Each verb's base comparison; a case-insensitive verb applies its
+#: base to lowered operands.
+_BASE_OPS = {
+    "Equals": operator.eq,
+    "Not Equals": operator.ne,
+    "Contains": Column.contains,
+    "Starts With": Column.startswith,
+    "Ends With": Column.endswith,
+    "Greater Than": operator.gt,
+    "Less Than": operator.lt,
+    "Greater Than or Equal": operator.ge,
+    "Less Than or Equal": operator.le,
+}
+
+
 def _verb_expr(v: Column, verb: FilterVerb, value: str) -> Column:
     """One verb → one Column predicate (KinesisThreadJobs.cs:746-805)."""
-    lit = F.lit(value)
-    lv, llit = F.lower(v), F.lit(value.lower())
-    table = {
-        FilterVerb.EQUALS: v == lit,
-        FilterVerb.EQUALS_CI: lv == llit,
-        FilterVerb.NOT_EQUALS: v != lit,
-        FilterVerb.NOT_EQUALS_CI: lv != llit,
-        FilterVerb.CONTAINS: v.contains(lit),
-        FilterVerb.CONTAINS_CI: lv.contains(llit),
-        FilterVerb.STARTS_WITH: v.startswith(lit),
-        FilterVerb.STARTS_WITH_CI: lv.startswith(llit),
-        FilterVerb.ENDS_WITH: v.endswith(lit),
-        FilterVerb.ENDS_WITH_CI: lv.endswith(llit),
-        FilterVerb.GREATER_THAN: v > lit,
-        FilterVerb.GREATER_THAN_CI: lv > llit,
-        FilterVerb.LESS_THAN: v < lit,
-        FilterVerb.LESS_THAN_CI: lv < llit,
-        FilterVerb.GREATER_THAN_OR_EQUAL: v >= lit,
-        FilterVerb.GREATER_THAN_OR_EQUAL_CI: lv >= llit,
-        FilterVerb.LESS_THAN_OR_EQUAL: v <= lit,
-        FilterVerb.LESS_THAN_OR_EQUAL_CI: lv <= llit,
-    }
-    try:
-        return table[verb]
-    except KeyError:  # reference logs + rejects (:802-804); we fail at compile time
-        raise ValueError(f"Unknown filter verb: {verb!r}") from None
+    base, ci, _ = verb.value.partition(_CI)
+    if ci:
+        v, value = F.lower(v), value.lower()
+    return _BASE_OPS[base](v, F.lit(value))
 
 
 def compile_payload_filters(
@@ -116,10 +112,9 @@ def compile_payload_filters(
     per_filter = []
     for f in filters:
         v = extracted[f.property]
-        verb = f.verb if isinstance(f.verb, FilterVerb) else FilterVerb(f.verb)
         # isNotNull first: missing property → False → AND rejects (:739),
         # OR treats as non-match i.e. "skip" (:737-738).
-        per_filter.append(v.isNotNull() & _verb_expr(v, verb, f.value))
+        per_filter.append(v.isNotNull() & _verb_expr(v, f.verb, f.value))
 
     combined = reduce((Column.__or__ if use_or else Column.__and__), per_filter)
     # Invalid/non-object payload passes unfiltered (:705-708).

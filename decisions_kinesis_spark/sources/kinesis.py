@@ -80,9 +80,9 @@ def read_kinesis_stream(spark: SparkSession, config: KinesisQueueConfig) -> Data
 def classify_aws_error(exc: BaseException) -> BaseException:
     """Map a live AWS error onto the engine's retryable taxonomy
     (streaming.runtime.ThrottleError / TransientServiceError), so the
-    dispatch loop's BackoffPolicy classifies real boto3 failures the
-    way the reference's catch ladder classifies SDK exceptions
-    (KinesisThreadJobs.cs:60-88).  Non-AWS exceptions pass through
+    dispatch loop's ``default_retryable`` classifies real boto3
+    failures the way the reference's catch ladder classifies SDK
+    exceptions (KinesisThreadJobs.cs:60-88).  Non-AWS exceptions pass through
     unchanged (→ non-retryable, matching "Don't retry on other
     exceptions").  Usage in a handler::
 

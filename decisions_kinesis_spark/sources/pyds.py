@@ -28,17 +28,19 @@ with four faces:
   pages through backlog across micro-batches exactly like the
   reference's GetRecords loop, KinesisThreadJobs.cs:326-440).
   Commit-after-batch is Spark's offset WAL (C4,
-  KinesisCheckPointer.cs:97-159) — ``commit()`` here is a no-op by
-  design.
+  KinesisCheckPointer.cs:97-159); the logs are append-only, so the
+  reader keeps the base class's no-op ``commit()`` and ``stop()``.
 - **batch writer** — the P2 producer (KinesisMessageQueueImpl.cs:
   99-126) as a transactional sink: each task routes its records to
   shards by the MD5-of-partition-key ring (the documented Kinesis
   routing) and stages one file per shard it touched, already in the
   log's line format; the driver-side ``commit()`` appends the staged
-  bytes to the shard logs.  Sequence numbers are *assigned by the
-  sink at commit* (implied line index), mirroring the service-side
-  sequence assignment of PutRecord.  ``abort()`` discards staging —
-  no partial publish.
+  bytes to the shard logs, shard by shard.  Sequence numbers are
+  *assigned by the sink at commit* (implied line index), mirroring the
+  service-side sequence assignment of PutRecord.  ``abort()`` discards
+  staging, so a failed job publishes nothing; a driver crash during
+  ``commit()`` can leave some shard logs appended (see
+  ``KinesisShardLogWriter``).
 - **streaming writer** — same staging/commit with an epoch marker per
   ``batchId``: a replayed epoch (at-least-once upstream, P1) commits
   exactly once.
@@ -218,6 +220,45 @@ def _utc_micros(ts):
     return pc.coalesce(offset.cast(pa.timestamp("us")), naive)
 
 
+def _envelope_batch(
+    data,
+    pk,
+    seq,
+    ts,
+    stream_name: str,
+    shard,
+    pk_eq: str | None = None,
+    shard_eq: str | None = None,
+):
+    """The envelope RecordBatch of both batch read modes: ``data`` as
+    binary, the given columns, ``stream_name`` on every row and a NULL
+    ``encryptionType``.  ``pk_eq`` / ``shard_eq`` keep only the rows
+    whose ``partitionKey`` / ``shardId`` equals them (a NULL key
+    matches neither), in one filter."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    n = len(data)
+    batch = pa.RecordBatch.from_arrays(
+        [
+            pc.cast(data, pa.binary()),
+            pk,
+            seq,
+            ts,
+            pa.repeat(stream_name, n),
+            shard,
+            pa.nulls(n, pa.string()),
+        ],
+        names=_ENVELOPE_NAMES,
+    )
+    keep = None
+    for col, want in ((pk, pk_eq), (shard, shard_eq)):
+        if want is not None:
+            eq = pc.equal(col, want)
+            keep = eq if keep is None else pc.and_(keep, eq)
+    return batch if keep is None else batch.filter(keep)
+
+
 def _slice_batches(
     path: str,
     start: int,
@@ -261,20 +302,15 @@ def _slice_batches(
         seq = pc.utf8_lpad(
             pc.cast(pa.array(np.arange(first, first + n)), pa.string()), 20, "0"
         )
-        batch = pa.RecordBatch.from_arrays(
-            [
-                pc.cast(data, pa.binary()),
-                table.column("pk").combine_chunks(),
-                seq,
-                _utc_micros(table.column("ts").combine_chunks()),
-                pa.repeat(stream_name, n),
-                pa.repeat(shard_id, n),
-                pa.nulls(n, pa.string()),
-            ],
-            names=_ENVELOPE_NAMES,
+        batch = _envelope_batch(
+            data,
+            table.column("pk").combine_chunks(),
+            seq,
+            _utc_micros(table.column("ts").combine_chunks()),
+            stream_name,
+            pa.repeat(shard_id, n),
+            pk_eq=pk_eq,
         )
-        if pk_eq is not None:
-            batch = batch.filter(pc.equal(batch.column(1), pk_eq))
         if batch.num_rows:
             yield batch
 
@@ -376,66 +412,41 @@ class KinesisEnvelopeReader(DataSourceReader):
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
+        shard_eq = None if self.shard_eq is None else _SHARD_FMT % self.shard_eq
         f = pq.ParquetFile(partition.path)
         for batch in f.iter_batches(
             batch_size=_BATCH_RECORDS,
             row_groups=[partition.row_group],
             columns=["event_id", "ts", "user_id", "props"],
         ):
-            uid_col = batch.column("user_id")
-            # NULL partition keys route NOWHERE (the pushFilters
-            # docstring contract): carry an explicit null mask instead
-            # of letting to_numpy produce NaN (which made
-            # `_SHARD_FMT % int(s)` raise on any unfiltered scan of a
-            # corpus with null user_id).  Null rows keep NULL
-            # partitionKey AND NULL shardId; any shard/pk equality
-            # filter excludes them.
-            uid_null = pc.is_null(uid_col).to_numpy(zero_copy_only=False)
-            uid = uid_col.fill_null(0).to_numpy(zero_copy_only=False)
-            shard = np.mod(uid, self.num_shards)
-            mask = None
-            if self.shard_eq is not None:
-                mask = (shard == self.shard_eq) & ~uid_null
-            if self.pk_eq is not None:
-                pk_mask = (
-                    pc.equal(
-                        pc.cast(batch.column("user_id"), pa.string()),
-                        self.pk_eq,
-                    )
-                    .fill_null(False)
-                    .to_numpy(zero_copy_only=False)
-                )
-                mask = pk_mask if mask is None else (mask & pk_mask)
-            if mask is not None:
-                batch = batch.filter(pa.array(mask))
-                shard = shard[mask]
-                uid_null = uid_null[mask]
-                if batch.num_rows == 0:
-                    continue
-            n = batch.num_rows
+            uid = batch.column("user_id")
+            # shardId-%012d of user_id mod numShards; a NULL user_id
+            # routes NOWHERE (the pushFilters contract): NULL
+            # partitionKey and NULL shardId, so every shard/pk equality
+            # excludes it
+            shard = pa.array(
+                np.mod(uid.fill_null(0).to_numpy(), self.num_shards),
+                mask=uid.is_null().to_numpy(zero_copy_only=False),
+            )
             ts = batch.column("ts")
             if ts.type != pa.timestamp("us"):
                 # writers differ (us in the driver fixtures, ns from a
                 # Spark rewrite); Spark's Arrow bridge takes only us
                 ts = ts.cast(pa.timestamp("us"), safe=False)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pc.cast(batch.column("props"), pa.binary()),
-                    pc.cast(batch.column("user_id"), pa.string()),
-                    pc.cast(batch.column("event_id"), pa.string()),
-                    ts,
-                    pa.array([self.stream_name] * n, pa.string()),
-                    pa.array(
-                        [
-                            None if isnull else _SHARD_FMT % int(s)
-                            for s, isnull in zip(shard, uid_null)
-                        ],
-                        pa.string(),
-                    ),
-                    pa.nulls(n, pa.string()),
-                ],
-                names=_ENVELOPE_NAMES,
+            env = _envelope_batch(
+                batch.column("props"),
+                pc.cast(uid, pa.string()),
+                pc.cast(batch.column("event_id"), pa.string()),
+                ts,
+                self.stream_name,
+                pc.binary_join_element_wise(
+                    "shardId-", pc.utf8_lpad(pc.cast(shard, pa.string()), 12, "0"), ""
+                ),
+                pk_eq=self.pk_eq,
+                shard_eq=shard_eq,
             )
+            if env.num_rows:
+                yield env
 
 
 # ---------------------------------------------------------------------------
@@ -559,13 +570,6 @@ class KinesisShardLogStreamReader(DataSourceStreamReader):
         for path, start, end in partition.slices:
             yield from _slice_batches(path, start, end, self.stream_name)
 
-    def commit(self, end: dict) -> None:
-        # C4 is Spark's offset WAL; the log is append-only, nothing to trim
-        return
-
-    def stop(self) -> None:
-        return
-
 
 # ---------------------------------------------------------------------------
 # writers (P2 producer analog)
@@ -646,8 +650,14 @@ class KinesisShardLogWriter(DataSourceArrowWriter):
     carries (PartitionKey, Data); the *service* assigns shard (MD5
     ring) and sequence number — here each task routes its records into
     one staged file per shard, and the driver-side commit appends the
-    staged files in task order, which assigns the sequence numbers,
-    atomically for the whole job.  ``abort`` leaves the logs untouched."""
+    staged files in task order, which assigns the sequence numbers.
+    ``abort`` leaves the logs untouched.
+
+    The commit is not crash-atomic: it appends shard by shard, so a
+    driver crash mid-commit leaves the logs it reached appended and the
+    others not, and a rerun of the job appends those records again.
+    Only ``KinesisShardLogStreamWriter``'s per-epoch manifest makes a
+    commit safe to replay after a crash."""
 
     def __init__(self, options, overwrite: bool = False):
         self.path = options["path"]

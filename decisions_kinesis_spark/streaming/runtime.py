@@ -8,7 +8,8 @@ Streaming (SURVEY.md §3 lifecycle mapping):
   ReceiveMessages poll loop              micro-batch planner + trigger
   shard lease acquire/renew/release      task scheduler (exclusive tasks)
   kinesis_checkpoint table (C4-C6)       checkpointLocation offsets/commits WAL
-  ShardPollInterval / BatchWaitTime      trigger(processingTime=...)
+  BatchWaitTime                          trigger(processingTime=...)
+  ShardPollInterval                      describeShardInterval (AWS connector)
   MaxRecordsPerRequest                   maxFetchRecordsPerShard (per poll)
   ProcessRecordAsync decode+filter       DataFrame decode + compiled predicate
   ProcessMessage dispatch (P1)           foreachBatch handler
@@ -68,19 +69,17 @@ class BackoffPolicy:
     """Exponential backoff with jitter (KinesisThreadJobs.cs:107-117, :226).
 
     delay = base * 2^attempt + U(0,1) seconds, capped at ``max_delay_s``.
-    Reference defaults: base 5 s, cap 32 s, 3 retries.  ``retryable``
-    classifies exceptions (KinesisThreadJobs.cs:60-88): non-retryable
-    errors are rethrown with zero sleeps.
+    Reference defaults: base 5 s, cap 32 s, 3 retries.  Only errors that
+    ``default_retryable`` accepts are retried (KinesisThreadJobs.cs:
+    60-88); any other is rethrown with zero sleeps.  Handlers surface
+    transient failures by raising ThrottleError / TransientServiceError
+    (live AWS errors map onto them via
+    ``sources.kinesis.classify_aws_error``).
     """
 
-    #: Handlers surface transient failures by raising ThrottleError /
-    #: TransientServiceError (live AWS errors map via
-    #: sources.kinesis.classify_aws_error), or pass a custom
-    #: ``retryable`` predicate for other error taxonomies.
     max_retries: int = 3
     base_delay_s: float = 5.0
     max_delay_s: float = 32.0
-    retryable: Callable[[BaseException], bool] = default_retryable
 
     def delay(self, attempt: int) -> float:
         return min(
@@ -123,7 +122,6 @@ def start_dispatch(
     stream: DataFrame,
     handler: Callable[[DataFrame, int], None],
     checkpoint_dir: str,
-    config: KinesisQueueConfig | None = None,
     backoff: BackoffPolicy | None = None,
     trigger_interval: str | None = None,
     available_now: bool = False,
@@ -135,13 +133,11 @@ def start_dispatch(
     before the checkpoint commit, so a crash between handler success
     and commit redelivers the batch (at-least-once,
     KinesisThreadJobs.cs:405-408); a handler failure after all retries
-    fails the batch → the query stops → restart redelivers.
+    fails the batch → the query stops → restart redelivers.  ``backoff``
+    defaults to ``BackoffPolicy()``, the reference's defaults.
     """
     if backoff is None:
-        backoff = BackoffPolicy(
-            max_retries=config.max_retries if config else 3,
-            base_delay_s=float(config.error_backoff_time_s) if config else 5.0,
-        )
+        backoff = BackoffPolicy()
 
     def _dispatch(batch_df: DataFrame, epoch_id: int) -> None:
         attempt = 0
@@ -153,7 +149,7 @@ def start_dispatch(
                 # Reference classifies retryable vs non-retryable
                 # (KinesisThreadJobs.cs:60-88): a poison-pill batch
                 # fails immediately with zero backoff sleeps.
-                if attempt >= backoff.max_retries or not backoff.retryable(exc):
+                if attempt >= backoff.max_retries or not default_retryable(exc):
                     raise
                 sleeper(backoff.delay(attempt))
                 attempt += 1
@@ -218,7 +214,6 @@ def consume(
     config: KinesisQueueConfig,
     handler: Callable[[DataFrame, int], None],
     checkpoint_dir: str,
-    trigger_interval: str | None = None,
 ) -> StreamingQuery:
     """Full consumer pipeline: source → decode/filter → dispatch.
 
@@ -229,13 +224,24 @@ def consume(
     TRIM_HORIZON or LATEST (C6; a checkpoint always wins),
     ``stream_name`` fills ``streamName``, and
     ``max_records_per_request`` caps each poll per shard
-    (``maxFetchRecordsPerShard``, the GetRecords ``Limit``).
+    (``maxFetchRecordsPerShard``, the GetRecords ``Limit``).  The
+    config is the only source of the dispatch's settings too:
+    micro-batches are paced ``shard_batch_wait_time_s`` seconds apart
+    (the reference's BatchWaitTime, KinesisThreadJobs.cs:425-432; 0
+    runs them back to back), and a failed handler is retried up to
+    ``max_retries`` times with a backoff based at
+    ``error_backoff_time_s`` (``BackoffPolicy``).
 
-    Departure from the reference: the cap holds only for steady-state
+    Departures from the reference: the cap holds only for steady-state
     polls.  The first poll after a (re)start returns the true latest
     offset, so a backlog present at start arrives in one batch (see
     ``pyds.KinesisShardLogStreamReader.__init__`` for why a capped
-    first poll could regress the offset WAL).
+    first poll could regress the offset WAL).  The pacing is Spark's
+    processing-time trigger, start to start, whatever the batch held;
+    the reference waits after each batch, BatchWaitTime after a full
+    one and ShardPollInterval after a short one
+    (``shard_poll_interval_s`` reaches only the AWS connector's
+    ``describeShardInterval``).
     """
     register(spark)
     stream = (
@@ -247,6 +253,9 @@ def consume(
         filtered_stream(stream, config),
         handler,
         checkpoint_dir,
-        config=config,
-        trigger_interval=trigger_interval,
+        backoff=BackoffPolicy(
+            max_retries=config.max_retries,
+            base_delay_s=float(config.error_backoff_time_s),
+        ),
+        trigger_interval=f"{config.shard_batch_wait_time_s} seconds",
     )

@@ -105,3 +105,29 @@ def test_require_valid_raises():
     cfg.stream_name = ""
     with pytest.raises(ValueError):
         cfg.require_valid()
+
+
+def test_every_setting_is_read_by_the_package():
+    """Each field of KinesisQueueConfig and KinesisSettings is read, as
+    an attribute, by package code outside config.py: a setting that
+    nothing reads is a knob that does nothing."""
+    import ast
+    import dataclasses
+    from pathlib import Path
+
+    import decisions_kinesis_spark
+
+    root = Path(decisions_kinesis_spark.__file__).parent
+    read: set[str] = set()
+    for path in root.rglob("*.py"):
+        if path == root / "config.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if isinstance(node, ast.Attribute) and isinstance(node.ctx, ast.Load):
+                read.add(node.attr)
+    fields = {
+        f"{cls.__name__}.{f.name}": f.name
+        for cls in (KinesisQueueConfig, KinesisSettings)
+        for f in dataclasses.fields(cls)
+    }
+    assert [k for k, name in fields.items() if name not in read] == []

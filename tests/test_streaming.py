@@ -162,15 +162,12 @@ def test_consume_caps_steady_state_polls_per_shard(spark, logs):
     ``max_records_per_request`` records per shard (the first poll after
     a start is uncapped — see ``consume``)."""
     tmp, src, env = logs
-    cfg = KinesisQueueConfig(stream_name="events", max_records_per_request=7)
+    cfg = KinesisQueueConfig(
+        stream_name="events", max_records_per_request=7, shard_batch_wait_time_s=0
+    )
     batches: list[list[tuple[str, str]]] = []
     q = consume(
-        spark,
-        src,
-        cfg,
-        lambda df, _: batches.append(_keys(df)),
-        f"{tmp}/ckpt-cap",
-        trigger_interval="200 milliseconds",
+        spark, src, cfg, lambda df, _: batches.append(_keys(df)), f"{tmp}/ckpt-cap"
     )
     try:
         q.processAllAvailable()
@@ -192,6 +189,31 @@ def test_consume_caps_steady_state_polls_per_shard(spark, logs):
         for shard, _seq in b:
             per_shard[shard] = per_shard.get(shard, 0) + 1
         assert all(n <= cfg.max_records_per_request for n in per_shard.values())
+
+
+def test_consume_takes_pacing_and_backoff_from_config(spark, tmp_path, monkeypatch):
+    """The queue config is the only source of ``consume``'s dispatch
+    settings: BatchWaitTime paces the trigger, MaxRetries and
+    ErrorBackoffTime build the backoff."""
+    from decisions_kinesis_spark.streaming import runtime
+
+    calls: list[dict] = []
+    monkeypatch.setattr(
+        runtime, "start_dispatch", lambda *args, **kwargs: calls.append(kwargs)
+    )
+    cfg = KinesisQueueConfig(
+        stream_name="events",
+        shard_batch_wait_time_s=3,
+        max_retries=0,
+        error_backoff_time_s=7,
+    )
+    consume(spark, str(tmp_path), cfg, lambda df, _: None, str(tmp_path / "ckpt"))
+    assert calls == [
+        {
+            "backoff": BackoffPolicy(max_retries=0, base_delay_s=7.0),
+            "trigger_interval": "3 seconds",
+        }
+    ]
 
 
 def test_at_least_once_redelivery_after_crash(spark, staged):

@@ -176,6 +176,39 @@ def orders_pareto_abc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _hourly_sums(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(event_type, b, n, sdec): per event type and hour bucket ``b``,
+    the row count and the exact DECIMAL(18,4) sum of ``value`` — the
+    map-side-combining head of every hourly-series query."""
+    ev = load_table(spark, "events", sf_dir).select(
+        "event_type", F.date_trunc("hour", F.col("ts")).alias("b"), "value"
+    )
+    return ev.groupBy("event_type", "b").agg(
+        F.count("*").alias("n"),
+        F.sum(F.col("value").cast("decimal(18,4)")).alias("sdec"),
+    )
+
+
+def _hourly_means(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``_hourly_sums`` plus ``mean``: the exact sum divided once, so
+    both engines produce the identical double."""
+    return _hourly_sums(spark, sf_dir).withColumn(
+        "mean", F.expr("cast(sdec as double) / n")
+    )
+
+
+def _mean_series(means: DataFrame) -> DataFrame:
+    """(event_type, n_buckets, xs): each type's hourly means as one
+    bucket-ordered array, the input of the sequential smoothing folds."""
+    return means.groupBy("event_type").agg(
+        F.count("*").alias("n_buckets"),
+        F.expr(
+            "transform(array_sort(collect_list(struct(b, mean))),"
+            " s -> s.mean)"
+        ).alias("xs"),
+    )
+
+
 def events_ewma_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exponentially-weighted moving average (α = 1/2) over each event
     type's HOURLY mean series — the time-series smoothing shape every
@@ -196,24 +229,7 @@ def events_ewma_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation, which map-side combines.  α = 1/2 keeps every
     intermediate a clean dyadic operation.
     """
-    ev = load_table(spark, "events", sf_dir).select(
-        "event_type", F.date_trunc("hour", F.col("ts")).alias("b"), "value"
-    )
-    hourly = ev.groupBy("event_type", "b").agg(
-        F.count("*").alias("n"),
-        F.sum(F.col("value").cast("decimal(18,4)")).alias("sdec"),
-    )
-    series = (
-        hourly.withColumn("mean", F.expr("cast(sdec as double) / n"))
-        .groupBy("event_type")
-        .agg(
-            F.count("*").alias("n_buckets"),
-            F.expr(
-                "transform(array_sort(collect_list(struct(b, mean))),"
-                " s -> s.mean)"
-            ).alias("xs"),
-        )
-    )
+    series = _mean_series(_hourly_means(spark, sf_dir))
     return series.select(
         "event_type",
         "n_buckets",
@@ -254,24 +270,8 @@ def events_holt_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded, thousands of elements at most), never raw events; the
     hourly aggregation map-side combines.
     """
-    ev = load_table(spark, "events", sf_dir).select(
-        "event_type", F.date_trunc("hour", F.col("ts")).alias("b"), "value"
-    )
-    hourly = ev.groupBy("event_type", "b").agg(
-        F.count("*").alias("n"),
-        F.sum(F.col("value").cast("decimal(18,4)")).alias("sdec"),
-    )
-    series = (
-        hourly.withColumn("mean", F.expr("cast(sdec as double) / n"))
-        .where(F.col("mean").isNotNull())
-        .groupBy("event_type")
-        .agg(
-            F.count("*").alias("n_buckets"),
-            F.expr(
-                "transform(array_sort(collect_list(struct(b, mean))),"
-                " s -> s.mean)"
-            ).alias("xs"),
-        )
+    series = _mean_series(
+        _hourly_means(spark, sf_dir).where(F.col("mean").isNotNull())
     )
     fold = (
         "aggregate(xs,"
@@ -333,16 +333,8 @@ def events_holt_conformal(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     import pandas as pd
 
-    ev = load_table(spark, "events", sf_dir).select(
-        "event_type", F.date_trunc("hour", F.col("ts")).alias("b"), "value"
-    )
     pts = (
-        ev.groupBy("event_type", "b")
-        .agg(
-            F.count("*").alias("n"),
-            F.sum(F.col("value").cast("decimal(18,4)")).alias("sdec"),
-        )
-        .withColumn("mean", F.expr("cast(sdec as double) / n"))
+        _hourly_means(spark, sf_dir)
         .where(F.col("mean").isNotNull())
         .select("event_type", "b", "mean")
     )
@@ -429,24 +421,8 @@ def events_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
     where Spark's transform index is 0-based; each dialect spells its
     own offset).
     """
-    ev = load_table(spark, "events", sf_dir).select(
-        "event_type", F.date_trunc("hour", F.col("ts")).alias("b"), "value"
-    )
-    hourly = ev.groupBy("event_type", "b").agg(
-        F.count("*").alias("n"),
-        F.sum(F.col("value").cast("decimal(18,4)")).alias("sdec"),
-    )
-    series = (
-        hourly.withColumn("mean", F.expr("cast(sdec as double) / n"))
-        .where(F.col("mean").isNotNull())
-        .groupBy("event_type")
-        .agg(
-            F.count("*").alias("n_buckets"),
-            F.expr(
-                "transform(array_sort(collect_list(struct(b, mean))),"
-                " s -> s.mean)"
-            ).alias("xs"),
-        )
+    series = _mean_series(
+        _hourly_means(spark, sf_dir).where(F.col("mean").isNotNull())
     )
     lp = (
         f"(x - element_at(acc.s, (acc.j % {_HW_M}) + 1) + acc.l + acc.t)"
@@ -1442,6 +1418,31 @@ def orders_scd2_ship_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _order_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(o_key, open_day, close_day): each order is open from its order
+    date through its last ship date inclusive."""
+    li = load_table(spark, "lineitem", sf_dir).groupBy(
+        F.col("l_orderkey").alias("o_key")
+    ).agg(F.max(F.to_date("l_shipdate")).alias("close_day"))
+    o = load_table(spark, "orders", sf_dir).select(
+        F.col("o_orderkey").alias("o_key"),
+        F.to_date("o_orderdate").alias("open_day"),
+    )
+    return o.join(li, "o_key")
+
+
+def _day_deltas(iv: DataFrame) -> DataFrame:
+    """(day, d): the sweep-line boundaries of ``_order_intervals`` —
+    +1 on each open day, −1 on the day after each close."""
+    opens = iv.select(F.col("open_day").alias("day"), F.lit(1).alias("d"))
+    return opens.unionByName(
+        iv.select(
+            F.expr("date_add(close_day, 1)").alias("day"),
+            F.lit(-1).alias("d"),
+        )
+    )
+
+
 _LL_SAMPLE_DAYS = 7  # snapshot cadence of the audited WIP measurement
 
 
@@ -1469,14 +1470,7 @@ def orders_littles_law_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     documented bounded-frame exception; everything else is one-row
     arithmetic.
     """
-    li = load_table(spark, "lineitem", sf_dir).groupBy(
-        F.col("l_orderkey").alias("o_key")
-    ).agg(F.max(F.to_date("l_shipdate")).alias("close_day"))
-    o = load_table(spark, "orders", sf_dir).select(
-        F.col("o_orderkey").alias("o_key"),
-        F.to_date("o_orderdate").alias("open_day"),
-    )
-    iv = o.join(li, "o_key")
+    iv = _order_intervals(spark, sf_dir)
     mom = iv.agg(
         F.count("*").alias("n_orders"),
         F.sum(
@@ -1488,13 +1482,7 @@ def orders_littles_law_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("close_day").alias("d1"),
     )
     deltas = (
-        iv.select(F.col("open_day").alias("day"), F.lit(1).alias("d"))
-        .unionByName(
-            iv.select(
-                F.expr("date_add(close_day, 1)").alias("day"),
-                F.lit(-1).alias("d"),
-            )
-        )
+        _day_deltas(iv)
         .groupBy("day")
         .agg(F.sum("d").alias("net"))
         .select("day", "net", F.lit(0).alias("marker"))
@@ -1563,22 +1551,9 @@ def orders_open_backlog_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     construction; every data-proportional step before it map-side
     combines.
     """
-    li = load_table(spark, "lineitem", sf_dir).groupBy(
-        F.col("l_orderkey").alias("o_key")
-    ).agg(F.max(F.to_date("l_shipdate")).alias("close_day"))
-    o = load_table(spark, "orders", sf_dir).select(
-        F.col("o_orderkey").alias("o_key"),
-        F.to_date("o_orderdate").alias("open_day"),
-    )
-    iv = o.join(li, "o_key")
+    iv = _order_intervals(spark, sf_dir)
     deltas = (
-        iv.select(F.col("open_day").alias("day"), F.lit(1).alias("d"))
-        .unionByName(
-            iv.select(
-                F.expr("date_add(close_day, 1)").alias("day"),
-                F.lit(-1).alias("d"),
-            )
-        )
+        _day_deltas(iv)
         .groupBy("day")
         .agg(
             F.sum("d").alias("net"),
@@ -1752,13 +1727,7 @@ def events_hourly_trend_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
     a bounded partitioned window; the moment sums are one
     map-side-combining aggregation.
     """
-    ev = load_table(spark, "events", sf_dir).select(
-        "event_type", F.date_trunc("hour", F.col("ts")).alias("b"), "value"
-    )
-    hourly = ev.groupBy("event_type", "b").agg(
-        F.count("*").alias("n"),
-        F.sum(F.col("value").cast("decimal(18,4)")).alias("sdec"),
-    )
+    hourly = _hourly_sums(spark, sf_dir)
     w = Window.partitionBy("event_type").orderBy("b")
     pts = hourly.select(
         "event_type",
@@ -1838,13 +1807,7 @@ def events_theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     ACF/CCF probes document.  |y·10⁶| ≤ 10¹³ and |slope·x| ≤ 10¹⁶
     keep every term inside bigint.
     """
-    ev = load_table(spark, "events", sf_dir).select(
-        "event_type", F.date_trunc("hour", F.col("ts")).alias("b"), "value"
-    )
-    hourly = ev.groupBy("event_type", "b").agg(
-        F.count("*").alias("n"),
-        F.sum(F.col("value").cast("decimal(18,4)")).alias("sdec"),
-    )
+    hourly = _hourly_sums(spark, sf_dir)
     w = Window.partitionBy("event_type").orderBy("b")
     # an hour whose every value is NULL (sdec NULL → mean NULL) is
     # SKIPPED before ranking, the events_holt_linear contract — ranks

@@ -209,6 +209,45 @@ def repetition_flags(docs: DataFrame) -> DataFrame:
     )
 
 
+#: per bigram position ``i`` of a ``toks`` column: the pair, its left
+#: token and its right token.  The 0x1F separator cannot appear in a
+#: whitespace-split token, so the pair → hash map is injective.
+_BIGRAM_FIELDS = {
+    "gb": "concat(element_at(toks, i), char(31), element_at(toks, i + 1))",
+    "gu": "element_at(toks, i)",
+    "gv": "element_at(toks, i + 1)",
+}
+
+
+def _bigram_structs(fields: tuple[str, ...]) -> str:
+    """Spark SQL array of one struct of ``fields`` per bigram position."""
+    named = ", ".join(f"'{f}', {_BIGRAM_FIELDS[f]}" for f in fields)
+    return f"transform(sequence(1, size(toks) - 1), i -> named_struct({named}))"
+
+
+#: directional adjacent-bigram (pair, left, right) extraction — ONE
+#: spelling shared by ``text_collocations`` and its streaming
+#: maintenance proof, so the two cannot silently diverge
+_BIGRAM_STRUCTS = _bigram_structs(tuple(_BIGRAM_FIELDS))
+
+
+def _doc_bigram_tf(toks: DataFrame, fields: tuple[str, ...]) -> DataFrame:
+    """(doc_id, *fields, tf): each doc's bigram TYPES as 60-bit hashes
+    of ``fields`` with their occurrence count — the type-collapsed
+    frame the corpus-LM scores join on (8-byte keys in every shuffle)."""
+    return (
+        toks.select(
+            "doc_id", F.explode(F.expr(_bigram_structs(fields))).alias("b")
+        )
+        .select(
+            "doc_id",
+            *[F.expr(_BIGHASH.format(e=f"b.{f}")).alias(f) for f in fields],
+        )
+        .groupBy("doc_id", *fields)
+        .agg(F.count("*").alias("tf"))
+    )
+
+
 _LM_SCALE = 1_000_000  # integer-scaled bigram probability
 
 
@@ -234,33 +273,12 @@ def lm_bigram_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = docs.select("doc_id", F.expr(_TOKS).alias("toks")).filter(
         F.size("toks") >= 2
     )
-    # 0x1F separator cannot appear in whitespace-split tokens, so the
-    # (w1, w2) → hash map is injective on this corpus shape.
-    bi = toks.select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                "transform(sequence(1, size(toks) - 1),"
-                " i -> named_struct("
-                "   'gb', concat(element_at(toks, i), char(31),"
-                "                element_at(toks, i + 1)),"
-                "   'gu', element_at(toks, i)))"
-            )
-        ).alias("b"),
-    ).select(
-        "doc_id",
-        F.expr(_BIGHASH.format(e="b.gb")).alias("gb"),
-        F.expr(_BIGHASH.format(e="b.gu")).alias("gu"),
-    )
     # doc_tf feeds BOTH corpus-count aggregations AND the scoring join —
     # materialize the type-collapsed frame once (the LSH shingle-frame
     # discipline) instead of replaying scan+tokenize+explode+hash for
     # each consumer (alternating same-process A/B at sf0.1: 1.83 →
     # 1.49 s min-of-3; no ReusedExchange appears in the plain plan)
-    doc_tf = materialize(
-        bi.groupBy("doc_id", "gb", "gu")
-        .agg(F.count("*").alias("tf"))
-    )
+    doc_tf = materialize(_doc_bigram_tf(toks, ("gb", "gu")))
     cnt_bi = doc_tf.groupBy("gb").agg(F.sum("tf").alias("c_bi"))
     cnt_uni = doc_tf.groupBy("gu").agg(F.sum("tf").alias("c_uni"))
     scored = (
@@ -316,30 +334,12 @@ def lm_interpolated_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     # vocabulary-sized unigram counts feed the grand total AND the
     # scoring join — one materialization, not two unigram explodes
     cnt_tok_lazy = tok.groupBy("gv").agg(F.count("*").alias("c_tok"))
-    bi = toks.filter(F.size("toks") >= 2).select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                "transform(sequence(1, size(toks) - 1),"
-                " i -> named_struct("
-                "   'gb', concat(element_at(toks, i), char(31),"
-                "                element_at(toks, i + 1)),"
-                "   'gu', element_at(toks, i),"
-                "   'gv', element_at(toks, i + 1)))"
-            )
-        ).alias("b"),
-    ).select(
-        "doc_id",
-        F.expr(_BIGHASH.format(e="b.gb")).alias("gb"),
-        F.expr(_BIGHASH.format(e="b.gu")).alias("gu"),
-        F.expr(_BIGHASH.format(e="b.gv")).alias("gv"),
-    )
     # same three-consumer shape as lm_bigram_score — materialize once;
     # the unigram-count and per-doc-bigram pipelines are independent,
     # so their jobs overlap (guide §2.6)
     cnt_tok, doc_tf = materialize_many(
         cnt_tok_lazy,
-        bi.groupBy("doc_id", "gb", "gu", "gv").agg(F.count("*").alias("tf")),
+        _doc_bigram_tf(toks.filter(F.size("toks") >= 2), ("gb", "gu", "gv")),
     )
     total = cnt_tok.groupBy().agg(F.sum("c_tok").alias("n_total"))
     cnt_bi = doc_tf.groupBy("gb").agg(F.sum("tf").alias("c_bi"))
@@ -405,28 +405,7 @@ def lm_kneser_ney_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = docs.select("doc_id", F.expr(_TOKS).alias("toks")).filter(
         F.size("toks") >= 2
     )
-    bi = toks.select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                "transform(sequence(1, size(toks) - 1),"
-                " i -> named_struct("
-                "   'gb', concat(element_at(toks, i), char(31),"
-                "                element_at(toks, i + 1)),"
-                "   'gu', element_at(toks, i),"
-                "   'gv', element_at(toks, i + 1)))"
-            )
-        ).alias("b"),
-    ).select(
-        "doc_id",
-        F.expr(_BIGHASH.format(e="b.gb")).alias("gb"),
-        F.expr(_BIGHASH.format(e="b.gu")).alias("gu"),
-        F.expr(_BIGHASH.format(e="b.gv")).alias("gv"),
-    )
-    doc_tf = materialize(
-        bi.groupBy("doc_id", "gb", "gu", "gv")
-        .agg(F.count("*").alias("tf"))
-    )
+    doc_tf = materialize(_doc_bigram_tf(toks, ("gb", "gu", "gv")))
     # the DISTINCT-bigram type table: gb determines (gu, gv), so this
     # one vocabulary-scale frame feeds c_bi, c_uni, BOTH continuation
     # counts, and the type total
@@ -466,19 +445,6 @@ def lm_kneser_ney_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _COLLOC_MIN_N = 3  # minimum bigram occurrences for a reported pair
 _COLLOC_TOPK = 50
-
-#: directional adjacent-bigram (pair, left, right) extraction over a
-#: ``toks`` column — ONE spelling shared by ``text_collocations`` and
-#: its streaming maintenance proof, so the two cannot silently diverge
-_BIGRAM_STRUCTS = (
-    "transform(sequence(1, size(toks) - 1),"
-    " i -> named_struct("
-    "   'gb', concat(element_at(toks, i), char(31),"
-    "                element_at(toks, i + 1)),"
-    "   'gu', element_at(toks, i),"
-    "   'gv', element_at(toks, i + 1)))"
-)
-
 
 def text_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """COLLOCATION extraction (Manning & Schütze ch. 5, the lift/PMI
@@ -845,6 +811,38 @@ _GREEDY_ENC = (
 )
 
 
+def _bpe_compression(
+    spark: SparkSession, sf_dir: str, vocab: DataFrame, encode: str
+) -> DataFrame:
+    """Per doc: word, char and BPE-token counts and the chars-per-token
+    ``compression``.  ``encode`` is the Spark SQL token count of word
+    ``w`` against the ONE-row ``vocab`` frame (broadcast); it runs once
+    per distinct word TYPE, and the per-word counts join back on the
+    type key and reduce per doc with map-side combine."""
+    docs = ensure_parallelism(load_table(spark, "documents", sf_dir).select("doc_id", "text"))
+    toks = docs.select("doc_id", F.explode(F.expr(_TOKS)).alias("w"))
+    wt = toks.groupBy("doc_id", "w").agg(F.count("*").alias("tf"))
+    enc = (
+        wt.select("w")
+        .distinct()
+        .join(F.broadcast(vocab))
+        .withColumn("cnt", F.expr(encode))
+        .select("w", "cnt")
+    )
+    per = (
+        wt.join(enc, "w")
+        .groupBy("doc_id")
+        .agg(
+            F.sum("tf").alias("n_words"),
+            F.sum(F.col("tf") * F.length("w")).alias("n_chars"),
+            F.sum(F.col("tf") * F.col("cnt")).alias("n_bpe_tokens"),
+        )
+    )
+    return per.withColumn(
+        "compression", _fl4(F.col("n_chars") / F.col("n_bpe_tokens"))
+    )
+
+
 def tokenize_bpe_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tokenizer APPLY: greedy longest-match encode of every document
     against the mined merge vocabulary (the ``bpe_pair_counts`` top-20
@@ -869,31 +867,10 @@ def tokenize_bpe_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-word token counts join back on the word-type key and reduce
     per doc with map-side combine.
     """
-    docs = ensure_parallelism(load_table(spark, "documents", sf_dir).select("doc_id", "text"))
-    toks = docs.select("doc_id", F.explode(F.expr(_TOKS)).alias("w"))
-    wt = toks.groupBy("doc_id", "w").agg(F.count("*").alias("tf"))
     vocab = bpe_pair_counts(spark, sf_dir).groupBy().agg(
         F.collect_list("pair").alias("vocab")
     )
-    enc = (
-        wt.select("w")
-        .distinct()
-        .join(F.broadcast(vocab))
-        .withColumn("cnt", F.expr(_GREEDY_ENC))
-        .select("w", "cnt")
-    )
-    per = (
-        wt.join(enc, "w")
-        .groupBy("doc_id")
-        .agg(
-            F.sum("tf").alias("n_words"),
-            F.sum(F.col("tf") * F.length("w")).alias("n_chars"),
-            F.sum(F.col("tf") * F.col("cnt")).alias("n_bpe_tokens"),
-        )
-    )
-    return per.withColumn(
-        "compression", _fl4(F.col("n_chars") / F.col("n_bpe_tokens"))
-    )
+    return _bpe_compression(spark, sf_dir, vocab, _GREEDY_ENC)
 
 
 #: 20 rounds = the same vocabulary BUDGET as ``bpe_pair_counts``'s
@@ -1087,28 +1064,7 @@ def tokenize_bpe_iterative(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy()
         .agg(F.expr("array_sort(collect_list(u))").alias("units"))
     )
-    docs = ensure_parallelism(load_table(spark, "documents", sf_dir).select("doc_id", "text"))
-    toks = docs.select("doc_id", F.explode(F.expr(_TOKS)).alias("w"))
-    wt = toks.groupBy("doc_id", "w").agg(F.count("*").alias("tf"))
-    enc = (
-        wt.select("w")
-        .distinct()
-        .join(F.broadcast(vocab))
-        .withColumn("cnt", F.expr(_BPE_ITER_ENC))
-        .select("w", "cnt")
-    )
-    per = (
-        wt.join(enc, "w")
-        .groupBy("doc_id")
-        .agg(
-            F.sum("tf").alias("n_words"),
-            F.sum(F.col("tf") * F.length("w")).alias("n_chars"),
-            F.sum(F.col("tf") * F.col("cnt")).alias("n_bpe_tokens"),
-        )
-    )
-    return per.withColumn(
-        "compression", _fl4(F.col("n_chars") / F.col("n_bpe_tokens"))
-    )
+    return _bpe_compression(spark, sf_dir, vocab, _BPE_ITER_ENC)
 
 
 _INDEX_TOPK = 30
@@ -1613,7 +1569,6 @@ def budget_epoch_expansion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _DSIR_BUCKETS = 4096  # hashed feature space (DSIR's dimensionality trick)
-_DSIR_SCALE = 1_000_000  # integer-scaled likelihood ratio
 _DSIR_TARGET_LANG = "en"  # deterministic stand-in for the target corpus
 
 

@@ -160,9 +160,9 @@ def dedup_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _signatures(_doc_shingles(docs))
 
 
-def _band_table(sh: DataFrame) -> DataFrame:
-    """(doc_id, band, band_sig): banded LSH keys from minhash signatures."""
-    sig = _signatures(sh)
+def _signature_bands(sig: DataFrame) -> DataFrame:
+    """(doc_id, band, band_sig): banded LSH keys from (doc_id, seed,
+    minhash) signatures, two seeds per band."""
     return sig.groupBy(
         "doc_id", (F.col("seed") / 2).cast("int").alias("band")
     ).agg(
@@ -170,6 +170,67 @@ def _band_table(sh: DataFrame) -> DataFrame:
             "concat_ws(',', transform(array_sort(collect_list(struct(seed, minhash))),"
             " x -> cast(x.minhash as string)))"
         ).alias("band_sig")
+    )
+
+
+def _band_table(sh: DataFrame) -> DataFrame:
+    """(doc_id, band, band_sig): banded LSH keys from (doc_id, shingle)."""
+    return _signature_bands(_signatures(sh))
+
+
+def _band_candidates(bands: DataFrame) -> DataFrame:
+    """(doc_a, doc_b) with doc_a < doc_b: the distinct pairs that share
+    at least one band key — an equi-join on (band, band_sig), so the
+    fanout is bounded by bucket size, never all-pairs."""
+    a, b = bands.alias("a"), bands.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col("a.band") == F.col("b.band"))
+            & (F.col("a.band_sig") == F.col("b.band_sig"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        )
+        .select(
+            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
+        )
+        .distinct()
+    )
+
+
+def _shared_shingles(cand: DataFrame, sh: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, n_inter): exact shingle intersection size of each
+    candidate pair — only candidates pay the verification join."""
+    return (
+        cand.join(sh.alias("sa"), F.col("doc_a") == F.col("sa.doc_id"))
+        .join(
+            sh.alias("sb"),
+            (F.col("doc_b") == F.col("sb.doc_id"))
+            & (F.col("sa.shingle") == F.col("sb.shingle")),
+        )
+        .groupBy("doc_a", "doc_b")
+        .agg(F.count("*").alias("n_inter"))
+    )
+
+
+def _with_sizes(pairs: DataFrame, sh: DataFrame) -> DataFrame:
+    """``pairs`` plus each side's shingle count, as ``za.n_sh`` and
+    ``zb.n_sh``."""
+    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
+    return pairs.join(
+        sizes.alias("za"), F.col("doc_a") == F.col("za.doc_id")
+    ).join(sizes.alias("zb"), F.col("doc_b") == F.col("zb.doc_id"))
+
+
+def _jaccard_pairs(cand: DataFrame, sh: DataFrame) -> DataFrame:
+    """Candidate pairs with ``n_inter``, both sizes and the exact shingle
+    ``jaccard`` (rounded to 4dp)."""
+    return _with_sizes(_shared_shingles(cand, sh), sh).withColumn(
+        "jaccard",
+        F.round(
+            F.col("n_inter")
+            / (F.col("za.n_sh") + F.col("zb.n_sh") - F.col("n_inter")),
+            4,
+        ),
     )
 
 
@@ -190,42 +251,9 @@ def dedup_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # until the frame is GC'd, and lineage is non-replayable — an
     # executor loss fails the query instead of recomputing.
     sh = materialize(_doc_shingles(corpus))
-    bands = _band_table(sh)
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_sig") == F.col("b.band_sig"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .distinct()
-    )
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
-    inter = (
-        cand.join(sh.alias("sa"), F.col("doc_a") == F.col("sa.doc_id"))
-        .join(
-            sh.alias("sb"),
-            (F.col("doc_b") == F.col("sb.doc_id"))
-            & (F.col("sa.shingle") == F.col("sb.shingle")),
-        )
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("n_inter"))
-    )
+    cand = _band_candidates(_band_table(sh))
     return (
-        inter.join(sizes.alias("za"), F.col("doc_a") == F.col("za.doc_id"))
-        .join(sizes.alias("zb"), F.col("doc_b") == F.col("zb.doc_id"))
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("n_inter")
-                / (F.col("za.n_sh") + F.col("zb.n_sh") - F.col("n_inter")),
-                4,
-            ),
-        )
+        _jaccard_pairs(cand, sh)
         .filter(F.col("jaccard") >= 0.5)
         .select("doc_a", "doc_b", "jaccard")
     )
@@ -254,27 +282,7 @@ def dedup_minhash_estimate_calibration(
     corpus = _with_injected_dups(load_table(spark, "documents", sf_dir))
     sh = materialize(_doc_shingles(corpus))
     sig = materialize(_signatures(sh))
-    bands = sig.groupBy(
-        "doc_id", (F.col("seed") / 2).cast("int").alias("band")
-    ).agg(
-        F.expr(
-            "concat_ws(',', transform(array_sort(collect_list(struct(seed,"
-            " minhash))), x -> cast(x.minhash as string)))"
-        ).alias("band_sig")
-    )
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_sig") == F.col("b.band_sig"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .distinct()
-    )
+    cand = _band_candidates(_signature_bands(sig))
     agree = (
         cand.join(sig.alias("ga"), F.col("doc_a") == F.col("ga.doc_id"))
         .join(
@@ -289,22 +297,12 @@ def dedup_minhash_estimate_calibration(
             ).alias("n_agree")
         )
     )
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
-    inter = (
-        cand.join(sh.alias("sa"), F.col("doc_a") == F.col("sa.doc_id"))
-        .join(
-            sh.alias("sb"),
-            (F.col("doc_b") == F.col("sb.doc_id"))
-            & (F.col("sa.shingle") == F.col("sb.shingle")),
-        )
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("n_inter"))
+    inter = _shared_shingles(cand, sh)
+    pairs = agree.join(inter, ["doc_a", "doc_b"], "left").withColumn(
+        "n_inter", F.coalesce("n_inter", F.lit(0))
     )
     return (
-        agree.join(inter, ["doc_a", "doc_b"], "left")
-        .withColumn("n_inter", F.coalesce("n_inter", F.lit(0)))
-        .join(sizes.alias("za"), F.col("doc_a") == F.col("za.doc_id"))
-        .join(sizes.alias("zb"), F.col("doc_b") == F.col("zb.doc_id"))
+        _with_sizes(pairs, sh)
         .select(
             "doc_a",
             "doc_b",
@@ -356,42 +354,9 @@ def dedup_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     corpus = docs.unionByName(halves)
     sh = materialize(_doc_shingles(corpus))
-    bands = _band_table(sh)
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_sig") == F.col("b.band_sig"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .distinct()
-    )
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
-    inter = (
-        cand.join(sh.alias("sa"), F.col("doc_a") == F.col("sa.doc_id"))
-        .join(
-            sh.alias("sb"),
-            (F.col("doc_b") == F.col("sb.doc_id"))
-            & (F.col("sa.shingle") == F.col("sb.shingle")),
-        )
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("n_inter"))
-    )
+    cand = _band_candidates(_band_table(sh))
     return (
-        inter.join(sizes.alias("za"), F.col("doc_a") == F.col("za.doc_id"))
-        .join(sizes.alias("zb"), F.col("doc_b") == F.col("zb.doc_id"))
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("n_inter")
-                / (F.col("za.n_sh") + F.col("zb.n_sh") - F.col("n_inter")),
-                4,
-            ),
-        )
+        _jaccard_pairs(cand, sh)
         .withColumn(
             "containment",
             F.round(
@@ -529,8 +494,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     toks = (
         docs.withColumn("toks", F.expr(_TOKS))
-        .select("doc_id", F.explode("toks").alias("token"))
-        .distinct()
+        .select("doc_id", F.explode(F.array_distinct("toks")).alias("token"))
         .withColumn("h", F.expr(_BIGHASH.format(e="token")))
     )
     sums = toks.groupBy("doc_id").agg(

@@ -26,12 +26,6 @@ from pyspark.sql import functions as F
 
 from decisions_kinesis_spark.sources.tables import load_table
 
-#: Media-envelope schema: opaque bytes + typed metadata (mirrors the
-#: record envelope of functions/envelope.py for media payloads).
-MEDIA_SCHEMA = (
-    "media_id long, blob binary, media_type string, n_bytes long, meta string"
-)
-
 
 def documents_as_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Adapter: treat document text bytes as an opaque media blob —

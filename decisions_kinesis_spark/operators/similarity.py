@@ -17,6 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.window import WindowSpec
 
 from decisions_kinesis_spark.functions.parallel import (
     ensure_parallelism,
@@ -60,6 +61,78 @@ def _emb_v(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _as_queries(df: DataFrame, *extra: F.Column) -> DataFrame:
+    """A (vec_id, v, nv, …) frame renamed to the query side of a
+    probe: (query_id, qv, qnv, *extra)."""
+    return df.select(
+        F.col("vec_id").alias("query_id"),
+        F.col("v").alias("qv"),
+        F.col("nv").alias("qnv"),
+        *extra,
+    )
+
+
+def _queries(df: DataFrame, *extra: F.Column) -> DataFrame:
+    """The ``_N_QUERIES`` query vectors of a (vec_id, v, nv, …) frame,
+    as ``_as_queries``."""
+    return _as_queries(df.filter(F.col("vec_id") < _N_QUERIES), *extra)
+
+
+def _probe_candidates(
+    index: DataFrame, q: DataFrame, key: str, probe: str
+) -> DataFrame:
+    """Every index row whose ``key`` equals a query's ``probe`` (the
+    query itself excluded), with the pair cosine ``cos``: an equi-join
+    against the broadcast query side, so each query meets only its
+    bucket or cell."""
+    return index.join(
+        F.broadcast(q),
+        (F.col(key) == F.col(probe)) & (F.col("vec_id") != F.col("query_id")),
+    ).withColumn(
+        "cos",
+        F.expr(
+            _PAIR_COS.format(dot=_DOT.format(a="v", b="qv"), na="nv", nb="qnv")
+        ),
+    )
+
+
+def _by_cos() -> WindowSpec:
+    """Per query, candidates by descending cosine, ties to the lower
+    vec_id: a total order, so every top-k is deterministic."""
+    return Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
+
+
+def _top_k(cand: DataFrame) -> DataFrame:
+    """(query_id, neighbor_id, cos, rank) of the ``_TOP_K`` best
+    candidates of each query."""
+    return (
+        cand.withColumn("rank", F.row_number().over(_by_cos()).cast("bigint"))
+        .filter(F.col("rank") <= _TOP_K)
+        .select("query_id", F.col("vec_id").alias("neighbor_id"), "cos", "rank")
+    )
+
+
+def _best_neighbor(queries: DataFrame, cand: DataFrame) -> DataFrame:
+    """``queries`` (one row per query_id) with the candidate count and
+    the single best candidate by cosine; a query with no candidate
+    keeps its row with ``n_candidates`` 0."""
+    best = (
+        cand.withColumn("rk", F.row_number().over(_by_cos()))
+        .filter(F.col("rk") == 1)
+        .select(
+            "query_id",
+            F.col("vec_id").alias("best_neighbor"),
+            F.col("cos").alias("best_cos"),
+        )
+    )
+    n_cand = cand.groupBy("query_id").agg(F.count("*").alias("n_candidates"))
+    return (
+        queries.join(n_cand, "query_id", "left")
+        .join(best, "query_id", "left")
+        .na.fill({"n_candidates": 0})
+    )
+
+
 def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-k for the first 10 vectors as queries.
 
@@ -79,11 +152,7 @@ def _cosine_truth_frame(emb: DataFrame) -> DataFrame:
     """Brute-force top-k over a (vec_id, v, nv) frame — the method
     tail, shared by the standalone query and the recall calibration
     (which feeds a checkpointed shared corpus frame)."""
-    q = emb.filter(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("nv").alias("qnv"),
-    )
+    q = _queries(emb)
     scored = (
         emb.join(F.broadcast(q), F.col("vec_id") != F.col("query_id"))
         .withColumn(
@@ -103,12 +172,7 @@ def _cosine_truth_frame(emb: DataFrame) -> DataFrame:
         scored.withColumn("lrk", F.row_number().over(w_local))
         .filter(F.col("lrk") <= _TOP_K)
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    return (
-        survivors.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= _TOP_K)
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), "cos", "rank")
-    )
+    return _top_k(survivors)
 
 
 def embedding_norm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -173,37 +237,10 @@ def ann_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _lsh_best_frame(bucketed: DataFrame) -> DataFrame:
     """Single-probe best-neighbor tail over a (vec_id, v, nv, bucket)
     frame — shared by the standalone query and the recall calibration."""
-    q = bucketed.filter(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("nv").alias("qnv"),
-        F.col("bucket").alias("qbucket"),
-    )
-    cand = bucketed.join(
-        F.broadcast(q),
-        (F.col("bucket") == F.col("qbucket")) & (F.col("vec_id") != F.col("query_id")),
-    ).withColumn(
-        "cos",
-        F.expr(
-            _PAIR_COS.format(dot=_DOT.format(a="v", b="qv"), na="nv", nb="qnv")
-        ),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    best = (
-        cand.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") == 1)
-        .select(
-            "query_id",
-            F.col("vec_id").alias("best_neighbor"),
-            F.col("cos").alias("best_cos"),
-        )
-    )
-    n_cand = cand.groupBy("query_id").agg(F.count("*").alias("n_candidates"))
-    return (
-        q.select("query_id", F.col("qbucket").alias("bucket"))
-        .join(n_cand, "query_id", "left")
-        .join(best, "query_id", "left")
-        .na.fill({"n_candidates": 0})
+    q = _queries(bucketed, F.col("bucket").alias("qbucket"))
+    cand = _probe_candidates(bucketed, q, "bucket", "qbucket")
+    return _best_neighbor(
+        q.select("query_id", F.col("qbucket").alias("bucket")), cand
     )
 
 
@@ -231,42 +268,12 @@ def _lsh_multiprobe_frame(bucketed: DataFrame) -> DataFrame:
             for b in range(_N_PLANES)
         ],
     )
-    q = (
-        bucketed.filter(F.col("vec_id") < _N_QUERIES)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("v").alias("qv"),
-            F.col("nv").alias("qnv"),
-            F.col("bucket").alias("qbucket"),
-        )
-        .withColumn("probe", F.explode(probes))
+    q = _queries(bucketed, F.col("bucket").alias("qbucket")).withColumn(
+        "probe", F.explode(probes)
     )
-    cand = bucketed.join(
-        F.broadcast(q),
-        (F.col("bucket") == F.col("probe")) & (F.col("vec_id") != F.col("query_id")),
-    ).withColumn(
-        "cos",
-        F.expr(
-            _PAIR_COS.format(dot=_DOT.format(a="v", b="qv"), na="nv", nb="qnv")
-        ),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    best = (
-        cand.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") == 1)
-        .select(
-            "query_id",
-            F.col("vec_id").alias("best_neighbor"),
-            F.col("cos").alias("best_cos"),
-        )
-    )
-    n_cand = cand.groupBy("query_id").agg(F.count("*").alias("n_candidates"))
-    return (
-        q.select("query_id", F.col("qbucket").alias("bucket"))
-        .distinct()
-        .join(n_cand, "query_id", "left")
-        .join(best, "query_id", "left")
-        .na.fill({"n_candidates": 0})
+    cand = _probe_candidates(bucketed, q, "bucket", "probe")
+    return _best_neighbor(
+        q.select("query_id", F.col("qbucket").alias("bucket")).distinct(), cand
     )
 
 
@@ -465,25 +472,10 @@ def _centered_topk(
     shared by the standalone query and the recall calibration."""
     nbits = _adaptive_nbits(table_count(spark, "embeddings", sf_dir))
     bucketed = _centered_int_buckets(emb, nbits)
-    q = bucketed.filter(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("nv").alias("qnv"),
-        F.col("bucket").alias("qbucket"),
-    )
-    cand = bucketed.join(
-        F.broadcast(q),
-        (F.col("bucket") == F.col("qbucket"))
-        & (F.col("vec_id") != F.col("query_id")),
-    ).withColumn(
-        "cos",
-        F.expr(
-            _PAIR_COS.format(dot=_DOT.format(a="v", b="qv"), na="nv", nb="qnv")
-        ),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
+    q = _queries(bucketed, F.col("bucket").alias("qbucket"))
+    cand = _probe_candidates(bucketed, q, "bucket", "qbucket")
     return (
-        cand.withColumn("nn_rank", F.row_number().over(w))
+        cand.withColumn("nn_rank", F.row_number().over(_by_cos()))
         .filter(F.col("nn_rank") <= _CENTERED_TOPK_K)
         .select(
             "query_id",
@@ -622,27 +614,8 @@ def _ivf_probe_topk(assigned: DataFrame) -> DataFrame:
     (vec_id, v, nv, cent_id, …) frame — the tail every IVF variant
     reuses: broadcast the query rows, equi-join on the cell id, rank
     within query."""
-    q = assigned.filter(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("nv").alias("qnv"),
-        F.col("cent_id").alias("qcent"),
-    )
-    cand = assigned.join(
-        F.broadcast(q),
-        (F.col("cent_id") == F.col("qcent")) & (F.col("vec_id") != F.col("query_id")),
-    ).withColumn(
-        "cos",
-        F.expr(
-            _PAIR_COS.format(dot=_DOT.format(a="v", b="qv"), na="nv", nb="qnv")
-        ),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    return (
-        cand.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= _TOP_K)
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), "cos", "rank")
-    )
+    q = _queries(assigned, F.col("cent_id").alias("qcent"))
+    return _top_k(_probe_candidates(assigned, q, "cent_id", "qcent"))
 
 
 _IVF_C_CAP = 64  # fixed centroid budget of the capped variant
@@ -729,31 +702,13 @@ def _nprobe2_topk(
     # probe set: the query's two nearest centroids — the rank-2 window
     # runs over the QUERY rows only (k × n_queries rows, trivial)
     wa = Window.partitionBy("vec_id").orderBy(F.desc("ccos"), F.asc("cent_id"))
-    probes = (
-        scored_q.withColumn("ark", F.row_number().over(wa))
-        .filter(F.col("ark") <= 2)
-    ).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("nv").alias("qnv"),
+    probes = _as_queries(
+        scored_q.withColumn("ark", F.row_number().over(wa)).filter(
+            F.col("ark") <= 2
+        ),
         F.col("cent_id").alias("probe_cent"),
     )
-    cand = assigned.join(
-        F.broadcast(probes),
-        (F.col("cent_id") == F.col("probe_cent"))
-        & (F.col("vec_id") != F.col("query_id")),
-    ).withColumn(
-        "cos",
-        F.expr(
-            _PAIR_COS.format(dot=_DOT.format(a="v", b="qv"), na="nv", nb="qnv")
-        ),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    return (
-        cand.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= _TOP_K)
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), "cos", "rank")
-    )
+    return _top_k(_probe_candidates(assigned, probes, "cent_id", "probe_cent"))
 
 
 def _assign_cents(vecs: DataFrame, cents: DataFrame) -> DataFrame:
@@ -1082,12 +1037,7 @@ def _pq_topk(
         .groupBy("vec_id", "m")
         .agg(F.min_by("code_id", F.struct("d2i", "code_id")).alias("code_id"))
     )
-    q = assigned.filter(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("nv").alias("qnv"),
-        F.col("cent_id").alias("qcent"),
-    )
+    q = _queries(assigned, F.col("cent_id").alias("qcent"))
     qsubs = q.withColumn("qvn", F.expr("transform(qv, x -> x / qnv)")).select(
         "query_id", F.posexplode(F.expr(_pq_sub_expr("qvn"))).alias("m", "sv")
     ).withColumn("svv", F.expr(_DOT.format(a="sv", b="sv")))
@@ -1122,12 +1072,7 @@ def _pq_topk(
             ),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    return (
-        rer.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= _TOP_K)
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), "cos", "rank")
-    )
+    return _top_k(rer)
 
 
 _DEDUP_TARGET_BUCKET = 64  # target avg bucket population for dedup blocking
@@ -1437,17 +1382,9 @@ def ann_recall_mean_shifted(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     nbits = _adaptive_nbits(table_count(spark, "embeddings", sf_dir))
 
-    def _queries_of(bucketed: DataFrame) -> DataFrame:
-        return bucketed.filter(F.col("vec_id") < _N_QUERIES).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("v").alias("qv"),
-            F.col("nv").alias("qnv"),
-            F.col("bucket").alias("qbucket"),
-        )
-
     def _cands(bucketed: DataFrame) -> DataFrame:
         return bucketed.join(
-            F.broadcast(_queries_of(bucketed)),
+            F.broadcast(_queries(bucketed, F.col("bucket").alias("qbucket"))),
             (F.col("bucket") == F.col("qbucket"))
             & (F.col("vec_id") != F.col("query_id")),
         )
@@ -1455,9 +1392,7 @@ def ann_recall_mean_shifted(spark: SparkSession, sf_dir: str) -> DataFrame:
     cos = F.expr(
         _PAIR_COS.format(dot=_DOT.format(a="v", b="qv"), na="nv", nb="qnv")
     )
-    w_rank = Window.partitionBy("query_id").orderBy(
-        F.desc("cos"), F.asc("vec_id")
-    )
+    w_rank = _by_cos()
 
     def _topk(cand: DataFrame) -> DataFrame:
         return (
@@ -1470,11 +1405,7 @@ def ann_recall_mean_shifted(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ground truth: brute-force top-k under the SHIFTED cosine (the
     # shift changes the metric, so truth must be recomputed — the
     # unshifted ann_cosine_topk truth would grade the wrong question)
-    q = emb.filter(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("nv").alias("qnv"),
-    )
+    q = _queries(emb)
     # truth (N×queries brute force, read 3×: n_truth + both methods'
     # hit joins) and the two index frames (read 3× each: both _cands
     # sides + buckets_used) are independent given emb — materialize

@@ -51,11 +51,6 @@ DEFAULT_SHUFFLE_PARTITIONS = max(8, os.cpu_count() or 8)
 _SESSION_CONF = {
     # timestamp values compare stably against the DuckDB oracle
     "spark.sql.session.timeZone": "UTC",
-    # Older fixture generations stored events.ts as TIMESTAMP(NANOS);
-    # Spark reads those as long-nanos with this flag, converted back to
-    # a timestamp in sources.tables.load_table.  Current fixtures store
-    # TIMESTAMP(MICROS, isAdjustedToUTC=false) and do not need it.
-    "spark.sql.legacy.parquet.nanosAsLong": "true",
     # let Python data sources (sources/pyds.py) receive pushFilters;
     # Spark refuses to plan a reader that implements them without it
     "spark.sql.python.filterPushdown.enabled": "true",

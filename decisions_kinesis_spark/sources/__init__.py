@@ -1,1 +1,1 @@
-from decisions_kinesis_spark.sources.tables import TABLE_NAMES, load_table, load_tables  # noqa: F401
+from decisions_kinesis_spark.sources.tables import TABLE_NAMES, load_table  # noqa: F401

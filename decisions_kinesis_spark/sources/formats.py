@@ -14,8 +14,6 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-WRITE_FORMATS = ("parquet", "orc", "json", "csv")
-
 
 def write_table(df: DataFrame, path: str, fmt: str = "parquet", **options) -> None:
     """Sink: columnar (parquet/orc) or line (json/csv) with sane defaults."""

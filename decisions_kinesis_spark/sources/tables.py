@@ -40,8 +40,8 @@ _RELATION_CACHE = SessionMemo()
 
 def load_table(spark: SparkSession, name: str, sf_dir: str | None = None) -> DataFrame:
     sf_dir = sf_dir or DEFAULT_SF_DIR
-    # a session the caller built itself gets the engine confs (UTC,
-    # nanosAsLong) on its first load_table
+    # a session the caller built itself gets the engine confs (UTC
+    # among them) on its first load_table
     apply_session_conf(spark)
     return _RELATION_CACHE.get_or_build(
         spark, (sf_dir, name), lambda: _read(spark, name, sf_dir)
@@ -50,14 +50,7 @@ def load_table(spark: SparkSession, name: str, sf_dir: str | None = None) -> Dat
 
 def _read(spark: SparkSession, name: str, sf_dir: str) -> DataFrame:
     df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-    ts_type = dict(df.dtypes).get("ts") if name == "events" else None
-    if ts_type == "bigint":
-        # TIMESTAMP(NANOS) parquet read as long-nanos under nanosAsLong:
-        # Spark has no nanosecond timestamp type, so truncate to
-        # microseconds — what DuckDB does when casting TIMESTAMP_NS →
-        # TIMESTAMP.  Integer division: ns-since-epoch overflows double.
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif ts_type == "timestamp_ntz":
+    if name == "events" and dict(df.dtypes).get("ts") == "timestamp_ntz":
         # TIMESTAMP(MICROS, isAdjustedToUTC=false) parquet comes out
         # TimestampNTZ under inferTimestampNTZ; normalize to LTZ.  The
         # session tz is UTC, so the NTZ→LTZ cast reinterprets the naive
@@ -82,15 +75,3 @@ def table_count(spark: SparkSession, name: str, sf_dir: str | None = None) -> in
     return _COUNT_CACHE.get_or_build(
         spark, (sf_dir, name), lambda: load_table(spark, name, sf_dir).count()
     )
-
-
-def load_tables(
-    spark: SparkSession, sf_dir: str | None = None, names: tuple[str, ...] = TABLE_NAMES
-) -> dict[str, DataFrame]:
-    return {n: load_table(spark, n, sf_dir) for n in names}
-
-
-def register_views(spark: SparkSession, sf_dir: str | None = None) -> None:
-    """Register every fixture table as a temp view for the SQL API."""
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)

@@ -1,10 +1,13 @@
 """Benchmark harness: runs every registered query at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints
-ONE JSON line: {"metric", "value", "unit", "queries", "sf"}.
+ONE JSON line: {"metric", "value", "unit", "queries", "sf", ...}.
 
 Each query is forced end-to-end with the noop sink (full computation,
-no driver-side collect).  ``value`` is the summed wall-clock seconds
-across all queries.
+no driver-side collect).  ``value`` is the summed best-pass wall-clock
+seconds across all queries (see ``best_pass``).  The bench only times:
+it keeps no history across runs, and whether a slower total comes from
+the machine or the code is a question for an interleaved same-box A/B
+(``tools/ab.py``, ``perfbench/run.py``), not for this script.
 """
 
 from __future__ import annotations
@@ -13,70 +16,24 @@ import gc
 import json
 import os
 import re
-import statistics
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
-def update_floor_state(
-    all_floors: dict,
-    sf_key: str,
-    prior: dict,
-    timings: dict,
-    breached: list,
-    noisy_box: bool,
-    registered: set,
-) -> None:
-    """Apply one run's evidence to the rolling-floor file state
-    (mutates ``all_floors``).  Pure bookkeeping, factored out of
-    main() so the rules ADVICE keeps refining are regression-tested
-    (tests/test_bench_floors.py) without running a bench:
-
-    - floor = min(prior, best) per query; a breach (>2.0× floor and
-      >0.3 s) resets the floor ONLY when the same query also breached
-      the PREVIOUS run (two-run rule — a localized stall can cover
-      every pass of one query in a single run);
-    - a noisy-box (suppressed) run resets nothing and records no
-      breach memory — its breaches are environmental by the gauge's
-      own testimony;
-    - queries that errored this run keep their prior floor; queries
-      gone from the registry are pruned, from floors AND from every
-      sf's breach memory;
-    - run metadata lives under the reserved "_meta" sub-object
-      (ADVICE r12: top level stays sf-keys-only); the one release
-      that wrote "_breached_prev" as a top-level sibling is migrated
-      on read.
-    """
-    meta = dict(all_floors.pop("_meta", None) or {})
-    legacy = all_floors.pop("_breached_prev", None)
-    if legacy and "breached_prev" not in meta:
-        meta["breached_prev"] = legacy
-    prev_breached = set(
-        (meta.get("breached_prev") or {}).get(sf_key) or []
-    )
-    new_floor = {
-        n: f0 for n, f0 in prior.items()
-        if n in registered and n not in timings
-    }
-    for name, best in timings.items():
-        f0 = prior.get(name)
-        if f0 and best > 2.0 * f0 and best > 0.3 and not noisy_box:
-            if name in prev_breached:
-                new_floor[name] = best  # persistent regression: reset
-            else:
-                new_floor[name] = f0  # first breach: hold, remember
-        else:
-            new_floor[name] = min(f0, best) if f0 else best
-    breached_prev = {
-        k: [n for n in v if n in registered]
-        for k, v in (meta.get("breached_prev") or {}).items()
-    }
-    breached_prev[sf_key] = sorted(breached) if not noisy_box else []
-    meta["breached_prev"] = breached_prev
-    all_floors["_meta"] = meta
-    all_floors[sf_key] = new_floor
+def best_pass(one_pass) -> tuple[float, float]:
+    """The per-query timing rule: a cold pass (file listing + codegen +
+    JIT) and a warm pass, best = min.  When the two disagree by more
+    than 2x, one of them was a contention stall, so take a third pass
+    and keep the min of all three.  ``one_pass()`` runs the query once
+    and returns its seconds.  Returns (cold, best)."""
+    cold = one_pass()
+    warm = one_pass()
+    best = min(cold, warm)
+    if max(cold, warm) > 2.0 * best:
+        best = min(best, one_pass())
+    return cold, best
 
 
 def main() -> None:
@@ -93,27 +50,26 @@ def main() -> None:
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else None
 
-    # bench opts into the WindowExec WARN silence (ADVICE r11 #3):
-    # 247 queries x repeated per-plan WARNs drown the log tail.
+    # silence the per-plan WindowExec WARNs: ~250 queries of them
+    # drown the log tail
     os.environ.setdefault("SPARK_GRAFT_QUIET_WINDOWEXEC", "1")
 
     import __spark_entry__ as entry_mod
+    from decisions_kinesis_spark.operators import stage_cache
+    from decisions_kinesis_spark.operators.clustering import _KM_LOOP_CACHE
     from decisions_kinesis_spark.session import get_session
+    from perfbench.common import stream_bw_gbps
 
     spark = get_session(app_name="dks-bench")
     # warm up the JVM + parquet footer cache outside the timed region
     spark.range(1000).selectExpr("sum(id)").collect()
 
-    # Untimed WHOLE-REGISTRY warm-up at the smallest fixture: the
-    # thirds-gradient instrumentation showed the first third of a
-    # fresh session running 1.37x its floors (17.3s excess vs 6.8/3.0
-    # in later thirds) — start-of-session cost in SHARED
-    # infrastructure (janino/codegen compiler, Arrow serializers,
+    # Untimed whole-registry warm-up at the smallest fixture: the first
+    # queries of a fresh session otherwise pay start-of-session cost in
+    # shared infrastructure (janino/codegen compiler, Arrow serializers,
     # parquet reader classes, the Python worker daemon pool), not in
-    # any query's plan.  One cheap sf0.001 pass per query JIT-warms
-    # those paths for ~30s outside the timed region, so the timed
-    # loop measures plans, not session youth.  Guarded: any warm-up
-    # failure is ignored (the timed loop re-reports it properly).
+    # their own plans.  Any warm-up failure is ignored: the timed loop
+    # reports it properly.
     warm_dir = os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.001")
     warmup_sec = 0.0
     if os.path.isdir(warm_dir) and os.path.abspath(
@@ -135,294 +91,52 @@ def main() -> None:
     # recommended execution path) are excluded from the headline total.
     alternates = {"asof_join_events_orders_pandas"}
 
-    # Historical per-query floor: when BOTH passes of a query stall
-    # together (r5 json_nested, r6 bm25 — cold≈warm so the disagreement
-    # trigger below never fires), the only local evidence of the stall
-    # is history.  bench_floor.json carries the rolling MIN per query
-    # across runs — a single stalled run can't poison the floor the way
-    # a last-run-only reference would.  Re-probing on a floor breach is
-    # still honest: extra passes are real end-to-end runs and min()
-    # only removes box noise, never real plan cost — a genuine
-    # regression survives all probes (and then becomes the new floor).
-    # Floors are keyed BY SF: a run at sf0.01 must not overwrite the
-    # sf0.1 floors with 10x-smaller times (which would make every
-    # later sf0.1 query 'breach' and burn re-probe passes).
-    here = os.path.dirname(os.path.abspath(__file__))
-    floor_path = os.path.join(here, "bench_floor.json")
-    sf_key = str(sf)
-    all_floors: dict[str, dict[str, float]] = {}
-    try:
-        with open(floor_path) as f:
-            all_floors = json.load(f) or {}
-        if all_floors and not isinstance(
-            next(iter(all_floors.values())), dict
-        ):  # migrate the pre-SF-keyed flat layout (written at sf0.1)
-            all_floors = {"0.1": all_floors}
-    except (OSError, ValueError):
-        pass
-    prior = dict(all_floors.get(sf_key) or {})
-    if not prior:
-        try:  # first run at this sf: seed from last run if same sf
-            with open(os.path.join(here, "bench_last.json")) as f:
-                last = json.load(f)
-            if str(last.get("sf")) == sf_key:
-                prior = last.get("queries", {}) or {}
-        except (OSError, ValueError):
-            pass
-
     def _jvm_heap_mb() -> int:
-        """Driver-JVM used heap, MB — the aging observable (retained
-        status-store/plan objects and uncollected blocks show up here
-        before they show up as wall-clock)."""
+        """Driver-JVM used heap, MB: retained status-store/plan objects
+        and uncollected blocks show up here before wall-clock does."""
         rt = spark._jvm.java.lang.Runtime.getRuntime()  # noqa: SLF001
         return int((rt.totalMemory() - rt.freeMemory()) / (1024 * 1024))
 
-    # --- Box-health gauges (VERDICT r11 #1): the old single probe
-    # conflated two resources.  It timed two FRESH 64 MB allocations,
-    # which glibc mmap/munmaps per call, so it was dominated by
-    # page-fault + kernel-zeroing throughput — the judge measured the
-    # old method at 3.13 GB/s while a pre-faulted memmove read
-    # 19.0 GB/s simultaneously on this box (and a full bench read its
-    # reproducible ~261 s, i.e. the STREAM path was healthy).  Ship
-    # both probes; key every decision (pre-flight wait, floor-reprobe
-    # skip, noisy-box suppression) on the stream gauge, which is the
-    # one that predicts totals.
-
-    def _fault_bw_gbps() -> float:
-        """Fresh-allocation (page-fault + zeroing) throughput, GB/s —
-        the r10/r11 gauge renamed to what it actually measures.  Both
-        64 MB buffers are new allocations inside the timed region, so
-        the time is fault + kernel-zeroing + copy, not pure streaming.
-        Kept for artifact continuity (three rounds on this basis) and
-        because the fault path is itself a real hypervisor-squeeze
-        observable — just not the certifying one."""
-        import array
-
-        buf = array.array("d", bytes(64 * 1024 * 1024))
-        t0 = time.perf_counter()
-        # tobytes copies once (read+write), the array constructor
-        # copies again — 4 × 64 MB crosses the memory bus
-        buf2 = array.array("d", buf.tobytes())
-        dt = time.perf_counter() - t0
-        del buf2
-        return round(4 * 64 * 1024 * 1024 / dt / 1e9, 2)
-
-    # Stream-probe buffers: allocated and faulted ONCE, reused every
-    # sample, so the timed region is a pure memoryview copy (memcpy) —
-    # no allocator, no page faults.  Working-set sizing lesson from
-    # r11 holds: 64 MB src + 64 MB dst = 128 MB > L3 (105 MiB here),
-    # so the copy streams from DRAM, not cache.
-    _stream_n = 64 * 1024 * 1024
-    _stream_src = bytes(_stream_n)
-    _stream_dst = memoryview(bytearray(_stream_n))
-    _stream_dst[:] = _stream_src  # pre-fault both, outside any timed region
-
-    def _stream_bw_gbps() -> float:
-        """Streaming memory-copy bandwidth over pre-faulted reused
-        buffers, GB/s — the gauge that predicts bench totals and the
-        one all gating keys on.  3 passes × 128 MB (read+write) of bus
-        traffic per sample: ~20 ms healthy, bounded even starved."""
-        t0 = time.perf_counter()
-        for _ in range(3):
-            _stream_dst[:] = _stream_src
-        dt = time.perf_counter() - t0
-        return round(3 * 2 * _stream_n / dt / 1e9, 2)
-
-    timings: dict[str, float] = {}
-    cold: dict[str, float] = {}
-    errors: dict[str, str] = {}
-    reprobed: dict[str, float] = {}
-    heap_mb: list[int] = [_jvm_heap_mb()]
-    stream_bw: list[float] = [_stream_bw_gbps()]
-    fault_bw: list[float] = [_fault_bw_gbps()]
-    # per-breach stream samples live in their OWN list (ADVICE r12):
-    # appending them to stream_bw broke the start/every-40/end index
-    # alignment with fault_bw that artifact readers pair positionally.
-    # Entries are (query_name, gbps) pairs — breaches happen in run
-    # order while floor_breached_final ships SORTED, so a bare list
-    # could not be attributed back to the query whose breach moment
-    # it sampled.
-    stream_bw_breach: list[list] = []
-    bw_waited_sec = 0
-    if stream_bw[0] < 8.0:
-        # pre-flight gauge (VERDICT r10 #1): a starved box produces a
-        # uniformly-inflated artifact that must not become the round's
-        # certifying number — say so up front, then wait a BOUNDED
-        # window for the squeeze to lift (re-probe every ≤2 min up to
-        # $SPARK_GRAFT_BW_WAIT_SEC, default 6 min; 0 disables).  The
-        # hypervisor squeezes observed in r10/r11 persist for hours,
-        # so this is a cheap shot at a quiet window, not a guarantee —
-        # a run that proceeds starved still self-diagnoses via the
-        # gauges + suppression fields below.
-        print(
-            f"bench WARNING: stream bandwidth {stream_bw[0]} GB/s < 8"
-            f" (healthy ~10+; fault-path gauge {fault_bw[0]}) — this"
-            " run will be box-inflated; prefer re-running when the"
-            " box is quiet",
-            file=sys.stderr,
-        )
-        wait_budget = int(os.environ.get("SPARK_GRAFT_BW_WAIT_SEC", "360"))
-        while bw_waited_sec < wait_budget:
-            # honor sub-120s budgets exactly (ADVICE r11): never sleep
-            # past the configured bound
-            time.sleep(min(120, wait_budget - bw_waited_sec))
-            bw_waited_sec = min(bw_waited_sec + 120, wait_budget)
-            bw = _stream_bw_gbps()
-            stream_bw.append(bw)
-            fault_bw.append(_fault_bw_gbps())
-            if bw >= 8.0:
-                print(
-                    f"bench: stream bandwidth recovered to {bw} GB/s"
-                    f" after {bw_waited_sec}s — proceeding",
-                    file=sys.stderr,
-                )
-                break
-        else:
-            if wait_budget:
-                print(
-                    f"bench: still starved after {bw_waited_sec}s"
-                    f" (last stream {stream_bw[-1]} GB/s) — proceeding"
-                    " anyway",
-                    file=sys.stderr,
-                )
-    # everything sampled so far is PRE-FLIGHT (initial + wait-loop
-    # probes).  The suppression gauge below must key on the timed
-    # loop's own samples only (ADVICE r12): a squeeze that lifted
-    # before the timed loop started is attribution context, not
-    # evidence that THIS loop's breaches were environmental.
-    n_preflight_bw = len(stream_bw)
-    # latest stream reading regardless of which list it landed in —
-    # the reprobe-skip gate keys on this, not on stream_bw[-1], so a
-    # breach-moment sample also flips the gate
-    bw_latest = stream_bw[-1]
-
-    def _clear_memos() -> None:
-        """Memo hygiene before EVERY timed pass (VERDICT r10 #2):
-        floors must measure OPERATORS, not memos.  Without this, the
-        warm pass of any stage_cache/_KM_LOOP_CACHE consumer is a
-        cache read (measured: kmeans trio floors 0.06-0.17 s vs ~1-3 s
-        standalone), and a regression in the memoized loop would hide
-        behind whichever query runs first."""
-        from decisions_kinesis_spark.operators import stage_cache
-        from decisions_kinesis_spark.operators.clustering import (
-            _KM_LOOP_CACHE,
-        )
-
+    def _one_pass(fn) -> float:
+        # clear the memos before every pass so each pass times the
+        # operators, not a stage_cache/_KM_LOOP_CACHE read
         stage_cache.clear()
         _KM_LOOP_CACHE.clear()
-
-    def _one_pass(fn) -> float:
-        _clear_memos()
         t0 = time.perf_counter()
         fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
         return round(time.perf_counter() - t0, 3)
 
-    run_order: list[str] = []
+    timings: dict[str, float] = {}
+    cold: dict[str, float] = {}
+    errors: dict[str, str] = {}
+    heap_mb: list[int] = [_jvm_heap_mb()]
+    # memory-copy bandwidth at start and end, for attribution only
+    stream_bw = [round(stream_bw_gbps(), 2)]
     for name, fn in entry_mod.queries().items():
         if name in alternates:
             continue
-        # cold pass (file listing + codegen + JIT), then the timed
-        # steady-state pass — the standard warm benchmark protocol;
-        # both are reported.  One failing query must not sink the whole
-        # bench: record the error and keep walking.
+        # one failing query must not sink the whole bench: record the
+        # error and keep walking
         try:
-            cold[name] = _one_pass(fn)
-            warm = _one_pass(fn)
+            cold[name], timings[name] = best_pass(lambda: _one_pass(fn))
         except Exception as exc:  # noqa: BLE001 - report, don't die
             errors[name] = f"{type(exc).__name__}: {exc}"[:200]
             print(f"bench error in {name}: {errors[name]}", file=sys.stderr)
-            cold.pop(name, None)  # keep cold/warm totals consistent
             continue
-        # best-of-two: robust to one-off GC/contention spikes, which on
-        # this shared box dwarf real per-query cost
-        best = min(cold[name], warm)
-        # outlier re-probe: when the two passes disagree >2x, one of
-        # them was a contention stall, and past rounds show the stall
-        # can hit BOTH passes (r5 json_nested 9.0s, r6 bm25 5.3s both
-        # re-probed to their historical tier) — take a third pass and
-        # keep the best so the artifact records the query, not the box
-        if max(cold[name], warm) > 2.0 * best:
-            best = min(best, _one_pass(fn))
-        # historical-floor breach: both passes stalled together — up to
-        # two more passes; skip sub-0.3s queries where 2.0x is noise.
-        # On a KNOWN-STARVED box (latest stream gauge < 8 GB/s) skip
-        # the floor reprobes entirely: the breaches are the squeeze,
-        # the extra passes re-measure it (measured: 55-85 breaches x
-        # up to 2 passes added ~15-20 min to a starved run), and the
-        # gauge-corroborated suppression below protects the floors
-        # regardless.  The cheap pass-disagreement reprobe above stays.
-        # stream_bw[-1] is refreshed every 40 queries (ADVICE r11 #4),
-        # so a squeeze that lifts or lands mid-run flips this gate
-        # within one sample interval instead of freezing the pre-flight
-        # verdict for the whole loop.
-        floor = prior.get(name)
-        if floor and best > 2.0 * floor and best > 0.3 and bw_latest >= 8.0:
-            reprobed[name] = best
-            for _ in range(2):
-                best = min(best, _one_pass(fn))
-                if best <= 2.0 * floor:
-                    break
-        if floor and best > 2.0 * floor and best > 0.3:
-            # gauge sample AT the breach moment: the first stream-gauge
-            # run caught a ~1-2 min localized stall that inflated one
-            # query's 5 passes 16x (ann_ivf_topk 30.5 s vs 1.4 s
-            # standalone minutes later) while every every-40-queries
-            # sample read healthy — breaches are exactly when to look,
-            # and a ~20 ms probe per breach lets the suppression min
-            # see any stall that is still in progress (recorded in its
-            # own list so stream_bw/fault_bw stay index-aligned, WITH
-            # the query name so the sample attributes to its breach)
-            stream_bw_breach.append([name, _stream_bw_gbps()])
-            bw_latest = stream_bw_breach[-1][1]
-        timings[name] = best
-        run_order.append(name)
-        # free THIS query's localCheckpoint blocks before the next one:
+        # free this query's localCheckpoint blocks before the next one:
         # checkpointed RDDs release only when their Python DataFrame is
-        # garbage-collected, so a 244-query session otherwise accretes
-        # executor-memory blocks and the run AGES (measured: median
-        # warm-time ratio vs the floors grew 1.20 → 1.23 → 1.41 across
-        # the run's thirds before this collect)
+        # garbage-collected, so a long session otherwise accretes
+        # executor-memory blocks and the run ages
         gc.collect()
-        if len(run_order) % 40 == 0:
+        if len(timings) % 40 == 0:
             heap_mb.append(_jvm_heap_mb())
-            # mid-run bandwidth samples (ADVICE r11 #1): a squeeze that
-            # hits only the interior of a 247-query loop must still be
-            # visible to the suppression min and the reprobe-skip gate
-            stream_bw.append(_stream_bw_gbps())
-            fault_bw.append(_fault_bw_gbps())
-            bw_latest = stream_bw[-1]
-    if len(run_order) % 40 != 0:  # end sample, unless the loop just took one
+    if len(timings) % 40 != 0:  # end sample, unless the loop just took one
         heap_mb.append(_jvm_heap_mb())
-    stream_bw.append(_stream_bw_gbps())
-    fault_bw.append(_fault_bw_gbps())
+    stream_bw.append(round(stream_bw_gbps(), 2))
 
-    # Session-aging gradient, measurable from the artifact alone
-    # (VERDICT r9 #1): split the run order into thirds and report the
-    # MEDIAN best/floor ratio per third.  A flat gradient means the
-    # session is not aging; a rising one localizes the drift to
-    # session state rather than plans (plans don't know their run
-    # position).  Queries without a prior floor are skipped — the
-    # ratio needs a same-sf reference.
-    ratios = [
-        (i, timings[n] / prior[n])
-        for i, n in enumerate(run_order)
-        if prior.get(n)
-    ]
-    third = max(1, len(run_order) // 3)
-    # the LAST bucket absorbs the len % 3 remainder — the run tail is
-    # where aging signal is strongest, so it must not fall off the end
-    bounds = [(0, third), (third, 2 * third), (2 * third, max(3 * third, len(run_order)))]
-    gradient = [
-        statistics.median(vals) if (vals := [r for i, r in ratios if lo <= i < hi]) else None
-        for lo, hi in bounds
-    ]
-    gradient = [round(g, 3) if g is not None else None for g in gradient]
-
-    total = round(sum(timings.values()), 3)
-    # The stdout line must stay COMPACT: the driver's tail-capture window
-    # dropped the full 106-query map in rounds 1-2 ("parsed": null).  Put
-    # a handful of headline timings on the line; the complete per-query
-    # map goes to bench_last.json only.
+    # The stdout line must stay compact: the driver's tail-capture
+    # window drops a full per-query map.  Put a handful of headline
+    # timings on the line; the complete map goes to bench_last.json.
     headline = (
         "q1_pricing_summary",
         "flagship_premium_filter",
@@ -431,135 +145,32 @@ def main() -> None:
         "text_token_stats",
         "pipeline_clean_corpus",
     )
-    # BOX-NOISE GUARD: a real plan regression is per-query; a slow BOX
-    # inflates the whole run.  When a large fraction of floored queries
-    # breach simultaneously (measured: a contended session reset 32
-    # floors at once, incl. a 6.5x on an unchanged plan — erasing the
-    # history the stall detection depends on), this run's evidence is
-    # environmental: suppress ALL floor resets (mins still update —
-    # a min is valid evidence on any box) and say so in the artifact.
-    breached = [
-        n for n, b in timings.items()
-        if prior.get(n) and b > 2.0 * prior[n] and b > 0.3
-    ]
-    n_floored = sum(1 for n in timings if prior.get(n))
-    # The broad-breach heuristic alone would classify a genuinely broad
-    # code regression (a shared helper slowing 13+ queries) as
-    # environmental forever (ADVICE r10): require the independently-
-    # measured STREAM gauge to CORROBORATE before suppressing floor
-    # resets (VERDICT r11 #1: stream-copy over pre-faulted buffers is
-    # the resource that predicts totals; the fault gauge ships
-    # alongside but never gates).  min() over the TIMED LOOP's samples
-    # only — every-40-queries + per-breach + end (ADVICE r12): the
-    # starved pre-flight/wait probes stay in the artifact for
-    # attribution, but a squeeze that lifted before the timed loop
-    # started must not suppress floor resets for a loop that ran on a
-    # healthy box (that wrongly wiped _breached_prev and delayed
-    # two-run detection of a genuine broad regression).
-    timed_bw = stream_bw[n_preflight_bw:] + [
-        g for _n, g in stream_bw_breach
-    ]
-    timed_bw_min = min(timed_bw) if timed_bw else stream_bw[-1]
-    noisy_box = (
-        n_floored >= 20
-        and len(breached) > 0.05 * n_floored
-        and timed_bw_min < 8.0
-    )
-
-    # metric label says what the protocol IS: best pass per query
-    # (2 passes always; up to 3 more only when a stall is detected by
-    # pass-disagreement or the historical floor) — calling it
-    # 'best_of_2' would misattribute re-probe recoveries to real
-    # speedups when comparing rounds.
     payload = {
         "metric": "total_wall_sec_all_queries_best_pass",
-        "value": total,
+        "value": round(sum(timings.values()), 3),
         "unit": "sec",
         "queries": {k: timings[k] for k in headline if k in timings},
         "sf": sf,
         "n_queries": len(timings),
         "cold_total_sec": round(sum(cold.values()), 3),
         "n_errors": len(errors),
-        # aging observables: median best/floor ratio per third of the
-        # run, and driver-JVM used-heap samples (start, every 40
-        # queries, end) — flat gradient + bounded heap = healthy run
-        "warm_ratio_thirds": gradient,
-        "jvm_heap_mb": heap_mb,
         "warmup_sec": warmup_sec,
-        # >5% of floored queries breaching together = environmental
-        # (a real code regression touches ~1-5 queries; the measured
-        # contended run breached 21/244 post-reprobe);
-        # this run's breaches did NOT reset floors (see floor update)
-        "box_noise_floor_resets_suppressed": noisy_box,
-        # when suppression fired, name the corroborating gauge and its
-        # reading (VERDICT r11 #1: the rationale must be in the artifact)
-        "suppression_basis": (
-            f"timed-loop stream_bw min={timed_bw_min} < 8 corroborates"
-            f" {len(breached)}/{n_floored} broad breach as environmental"
-            if noisy_box
-            else None
-        ),
-        # box-health gauges: stream_bw/fault_bw are PAIRED samples at
-        # run start (plus any wait-for-quiet re-probes), every 40
-        # queries, and at run end — same length, index-aligned.
-        # Per-breach stream samples ship separately below.
-        # stream: memcpy over pre-faulted reused buffers — the
-        # resource that predicts totals (healthy ~10+); ALL gating
-        # (pre-flight wait, reprobe skip, suppression) keys on it.
-        # fault: fresh-allocation throughput (page-fault + zeroing
-        # path) — the r10/r11 gauge's true subject, kept for
-        # continuity and squeeze attribution.
+        # driver-JVM used heap at start, every 40 queries, and end
+        "jvm_heap_mb": heap_mb,
+        # [start, end]; no decision keys on it
         "stream_bw_gbps": stream_bw,
-        "fault_bw_gbps": fault_bw,
-        # (query_name, gbps) pairs sampled AT each post-reprobe floor
-        # breach, in breach order — the name makes each reading
-        # attributable (floor_breached_final is sorted, so position
-        # alone could not recover which query's breach was sampled)
-        "stream_bw_breach_gbps": stream_bw_breach,
-        # first `bw_preflight_samples` entries of the paired lists are
-        # pre-flight; the suppression min covers the rest + breaches
-        "bw_preflight_samples": n_preflight_bw,
-        # seconds spent waiting for the squeeze to lift before the
-        # timed loop (0 = box was healthy at pre-flight)
-        "bw_wait_sec": bw_waited_sec,
     }
-    line = json.dumps(payload)
     full = dict(payload, queries=timings)
-    # self-explaining artifact: registered queries deliberately outside
-    # the headline total (alternate implementations of a recommended
-    # path) are listed, so n_queries vs the registry count needs no
-    # archaeology
+    # registered queries deliberately outside the total, so n_queries
+    # vs the registry count needs no archaeology
     full["excluded_alternates"] = sorted(
         alternates & set(entry_mod.queries())
     )
     if errors:
         full["errors"] = errors
-    if reprobed:
-        # transparency: queries whose first best-of-2 breached 2.0x the
-        # prior-run floor, with the pre-re-probe number for the record
-        full["floor_reprobed_first_best"] = reprobed
-    if breached:
-        # the post-all-probes breach list BY NAME (ADVICE r10): a
-        # persistent cluster of the same names across rounds is a code
-        # regression even when each individual run read as noisy
-        full["floor_breached_final"] = sorted(breached)
-    # Rolling-floor bookkeeping (two-run breach rule, suppression,
-    # _meta migration, registry pruning) — see update_floor_state's
-    # docstring; the rationale history lives there with the rules.
-    update_floor_state(
-        all_floors,
-        sf_key,
-        prior,
-        timings,
-        breached,
-        noisy_box,
-        set(entry_mod.queries()),
-    )
-    with open(floor_path, "w") as f:
-        f.write(json.dumps(all_floors, sort_keys=True) + "\n")
     sys.stdout.flush()
     sys.stderr.flush()
-    os.write(real_stdout_fd, (line + "\n").encode())
+    os.write(real_stdout_fd, (json.dumps(payload) + "\n").encode())
     # the full per-query map for post-hoc inspection
     with open(
         os.path.join(os.path.dirname(os.path.abspath(__file__)), "bench_last.json"),

@@ -7,14 +7,40 @@ The repo whose code is dumped comes from $SPARK_GRAFT_REPO (default:
 this file's repo) — point it at a detached worktree of an older commit
 to capture "before" plans; output always lands in THIS repo's
 plans/<dir>/ as <query>_<suffix>.txt.
+
+Before writing, each session-history counter in the text (``#n``
+expression ids, ``plan_id=n``, ``...RDD[n]`` of checkpoint scans) is
+renumbered by order of first appearance, so dumps of the same plan are
+byte-equal and plain ``diff`` is a plan-identity check.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 _HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+# (prefix, digits) for each counter that depends on what the session
+# built before the plan; each is renumbered on its own
+_COUNTERS = (
+    re.compile(r"(#)(\d+)"),
+    re.compile(r"(plan_id=)(\d+)"),
+    re.compile(r"(RDD\[)(\d+)"),
+)
+
+
+def renumber_ids(plan: str) -> str:
+    """Replace every session-history counter in ``plan`` by its rank of
+    first appearance (0, 1, ...), keeping equal ids equal."""
+    for pattern in _COUNTERS:
+        seen: dict[str, int] = {}
+        plan = pattern.sub(
+            lambda m: m.group(1) + str(seen.setdefault(m.group(2), len(seen))),
+            plan,
+        )
+    return plan
 
 
 def main() -> None:
@@ -53,7 +79,7 @@ def main() -> None:
         )
         path = os.path.join(out_dir, f"{name}_{suffix}.txt")
         with open(path, "w") as fh:
-            fh.write(p)
+            fh.write(renumber_ids(p))
         print(f"wrote {path} ({len(p.splitlines())} lines)", flush=True)
 
 

@@ -71,14 +71,6 @@ def build_replica(spark, k: int) -> str:
     dir.  The dataset is K-keyed and immutable once built, so
     concurrent/subsequent runs reuse it instead of deleting it out
     from under each other."""
-    # clean stale pre-v2 replica trees (the legacy k{k} layout) so the
-    # cache dir doesn't silently accumulate dead copies
-    for legacy in (f"{OUT}/k{k}", f"{OUT}/k{k}v2"):
-        if os.path.isdir(legacy):
-            print(f"removing stale legacy replica dir {legacy}")
-            # tolerate a concurrent run racing the same cleanup —
-            # losing the race must not kill this run
-            shutil.rmtree(legacy, ignore_errors=True)
     out = f"{OUT}/k{k}v3"
     if os.path.isdir(f"{out}/_DONE"):
         return out

@@ -157,7 +157,6 @@ def main() -> None:
         "warmup_sec": warmup_sec,
         # driver-JVM used heap at start, every 40 queries, and end
         "jvm_heap_mb": heap_mb,
-        # [start, end]; no decision keys on it
         "stream_bw_gbps": stream_bw,
     }
     full = dict(payload, queries=timings)
